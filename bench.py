@@ -406,60 +406,16 @@ def _host_normalized_flags(
             "flagged_over_1.3x": flags}
 
 
-def sweep(spark, sf_dir: str) -> None:
-    """--sweep: run EVERY registered query once (one-shot, cold codegen) and
-    print per-query seconds. This is the per-family regression radar the
-    headline bench can't provide (it times 31 of 100+ queries); run it each
-    round and diff against the previous sweep before the driver bench sees a
-    regression."""
-    qs = registry.queries()
-    # session warmup OUTSIDE the timings: without it, JVM/codegen/first-read
-    # cost lands on whichever queries lead the registry — i.e. the current
-    # certification window — and cross-round sweep diffs misattribute it as
-    # a regression of the rotated-in queries (observed r6→r7: the new head
-    # read 2-10x slower, the old head equally faster)
-    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    timings: dict[str, float] = {}
-    failures: list[str] = []
-    for name, fn in qs.items():
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as ex:  # record, don't abort the sweep
-            timings[name] = -1.0
-            failures.append(name)
-            print(f"# FAIL {name}: {ex}", file=sys.stderr)
-    total = round(sum(t for t in timings.values() if t > 0), 3)
-    _emit(
-        metric="full_sweep_one_shot_wall_clock",
-        total=total,
-        timings=timings,
-        extra={"n_queries": len(timings), "failures": failures},
-    )
-    if failures:  # a regressed query must NOT look like a faster sweep
-        sys.exit(1)
-
-
-def _emit(metric: str, total: float, timings: dict[str, float], extra: dict) -> None:
+def _emit(metric: str, total: float, timings: dict[str, float], extra: dict) -> dict:
     """Truncation-proof record: the driver tail-captures stdout, so a single
     multi-KB JSON line can lose its HEAD (BENCH_r04.json lost the total and
     ~40 queries that way). Emit the full per-query detail FIRST, then a
     compact summary (total + the 20 slowest queries, <1 KB) as the LAST
-    stdout line — whatever the capture keeps, the summary line parses."""
+    stdout line — whatever the capture keeps, the summary line parses.
+    Returns the detail record."""
     detail = {"metric": metric + "_detail", "value": total, "unit": "sec",
               "queries": timings, **extra}
     print(json.dumps(detail))
-    # the headline detail also lands as a FILE (VERDICT r6 ask #7): the
-    # driver's tail-capture truncates the multi-KB detail line as the query
-    # count grows, so per-query visibility must not depend on stdout at all —
-    # tools/roundclose.py snapshots this as BENCHDETAIL_r{N}.json
-    if not metric.startswith("full_sweep"):
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCHDETAIL.json"), "w") as f:
-            json.dump(detail, f)
-            f.write("\n")
     # The FINAL stdout line must parse even when the driver keeps only the
     # last ~2000 bytes (BENCH_r10.json: the flagged_over_1.3x dict grew past
     # the tail window, the line's HEAD was cut, parsed=null). Hard-cap every
@@ -496,16 +452,13 @@ def _emit(metric: str, total: float, timings: dict[str, float], extra: dict) -> 
                             "BENCHDETAIL.json",
         })
     print(line)
+    return detail
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="conceptnetwork-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    if "--sweep" in sys.argv:
-        sweep(spark, sf_dir)
-        spark.stop()
-        return
     qs = registry.queries()
 
     # warm-up: prime OS file cache, then run each query once so JIT/codegen
@@ -564,7 +517,7 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    _emit(
+    detail = _emit(
         metric="headline_queries_total_wall_clock",
         total=total,
         timings=timings,
@@ -576,6 +529,14 @@ def main() -> None:
             "host_normalized": hn,
         },
     )
+    # the headline detail also lands as a FILE (VERDICT r6 ask #7): a
+    # tail-capture of stdout truncates the multi-KB detail line as the query
+    # count grows, so per-query visibility must not depend on stdout at all —
+    # tools/roundclose.py snapshots this as BENCHDETAIL_r{N}.json
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "BENCHDETAIL.json"), "w") as f:
+        json.dump(detail, f)
+        f.write("\n")
     spark.stop()
 
 

@@ -37,8 +37,6 @@ import os
 
 from pyspark.sql import DataFrame
 
-_CHECKPOINT_DIR_SET = False
-
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Cut ``df``'s lineage; see module docstring for the trade-off.
@@ -52,9 +50,10 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """
     reliable_dir = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT")
     if reliable_dir:
-        global _CHECKPOINT_DIR_SET
-        if not _CHECKPOINT_DIR_SET:
-            df.sparkSession.sparkContext.setCheckpointDir(reliable_dir)
-            _CHECKPOINT_DIR_SET = True
+        # ask the live context, not a process flag: a session built after
+        # spark.stop() starts with no checkpoint directory
+        sc = df.sparkSession.sparkContext
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(reliable_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -6597,7 +6597,7 @@ def d10_modal_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOTE (r13, measured — do not retry): the melted one-scan shape
     (stack -> one groupBy(column, v) cell relation -> per-column stats +
-    windowed top-1; VERDICT r12 ask #4, tools/ab_r13_modal.py) returned
+    windowed top-1; VERDICT r12 ask #4, OPTIMIZATION_r13.md entry 5b) returned
     identical rows but measured 1.366 -> 1.528 s min-of-6 interleaved:
     like d10_key_discovery's fused probe, the bounded column count makes
     the overlapping per-column branches locally optimal, and the melt
@@ -6912,7 +6912,7 @@ def d10_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE multi-distinct aggregate (single scan, Catalyst Expand x7, melt
     via stack; VERDICT r12 ask #4) produced identical results but ran
     0.72 s -> 1.14 s (interleaved same-session A/B, min-of-6 noop,
-    tools/ab_r13_d14_d10.py): at local[32] the 6 narrow per-candidate
+    OPTIMIZATION_r13.md entry 5): at local[32] the 6 narrow per-candidate
     scans overlap for free, while the Expand multiplies the aggregate's
     input to 7x rows through one serial pipeline. The per-branch loop is
     the locally-optimal shape for a bounded candidate list; at true

@@ -142,7 +142,10 @@ def hyperplane_buckets(
 ) -> DataFrame:
     """Multi-table random-hyperplane LSH: for each of ``tables`` hash tables,
     project onto ``bits`` seeded hyperplanes and pack the sign bits into a
-    bucket id. Output = input exploded to one row per (table, bucket).
+    bucket id. Output = input exploded to one row per (table, bucket), with
+    the two added as ``lsh_table`` and ``lsh_bucket``; an input that already
+    has either column raises ``ValueError`` naming it (the result would
+    otherwise carry two columns of that name).
 
     The projection is an Arrow-batched pandas UDF: one
     ``(batch x dim) @ (dim x tables*bits)`` numpy matmul per record batch.
@@ -172,6 +175,12 @@ def hyperplane_buckets(
     """
     from pyspark.sql.functions import pandas_udf
 
+    taken = [c for c in ("lsh_table", "lsh_bucket") if c in df.columns]
+    if taken:
+        raise ValueError(
+            f"hyperplane_buckets adds column(s) {taken}, which the input "
+            "already has; rename or drop them first"
+        )
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, tables * bits))
     weights = 1 << np.arange(bits - 1, -1, -1, dtype=np.int64)

@@ -63,16 +63,11 @@ def get_spark(
         # GC-thrashes once a long session accumulates shuffle/codegen state
         # (measured: late-session queries inflate ~10x at 8g, flat at 24g)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        # UI off by default (test noise); SPARK_GRAFT_UI=1 enables it so
-        # tools/shuffle_audit.py can read per-stage shuffle/spill bytes from
-        # the status REST API — the only stable metrics surface PySpark has.
-        # retainedStages must outlast a full 360-query sweep (>1000 stages,
-        # the default cap): an evicted stage silently shrinks the audit's
-        # cumulative totals, weakening the over-cap gate with negative deltas
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") else "false",
-        )
+        .config("spark.ui.enabled", "false")
+        # the retained* caps bound the in-process status store, which stays
+        # live with the UI off: tools/stages.py reads per-stage shuffle/spill
+        # bytes from it and the benchmark's job counts read its jobs. The
+        # default 1000 stages would evict stages during a 404-query pass.
         .config("spark.ui.retainedStages", "100000")
         .config("spark.ui.retainedJobs", "100000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

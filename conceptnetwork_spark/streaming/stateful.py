@@ -247,7 +247,6 @@ def run_first_seen_stats(
     spark: SparkSession,
     sf_dir: str,
     n_files: int = 3,
-    progress_sink: "list | None" = None,
 ) -> DataFrame:
     """Per-user (first_seen, n_events) via ``transformWithStateInPandas`` —
     the Spark-4 arbitrary-stateful API (typed ValueState, RocksDB state
@@ -268,7 +267,6 @@ def run_first_seen_stats(
         first_seen_processor(),
         FIRST_SEEN_SCHEMA,
         n_files,
-        progress_sink=progress_sink,
     )
     from pyspark.sql import functions as F
 
@@ -288,7 +286,6 @@ def _run_tws_update_log(
     processor,
     output_schema: str,
     n_files: int,
-    progress_sink: "list | None" = None,
 ) -> DataFrame:
     """Shared transformWithStateInPandas harness: stage events as n_files
     parquet files, replay with maxFilesPerTrigger=1 (one micro-batch per
@@ -358,8 +355,6 @@ def _run_tws_update_log(
             .start()
         )
         await_finished(q, 180)
-        if progress_sink is not None:
-            progress_sink.extend(_progress_dicts(q))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev_provider is None:
@@ -369,17 +364,6 @@ def _run_tws_update_log(
                 "spark.sql.streaming.stateStore.providerClass", prev_provider
             )
     return spark.table(table)
-
-
-def _progress_dicts(q) -> list:
-    """recentProgress as plain dicts (the 10x state-scale gate in
-    tests/test_scale_stress.py reads stateOperators metrics from it)."""
-    import json as _json
-
-    out = []
-    for p in q.recentProgress:
-        out.append(p if isinstance(p, dict) else _json.loads(p.json))
-    return out
 
 
 # Explicit, LOUD gating (not a silent conditional): TWSP_AVAILABLE is the
@@ -700,11 +684,7 @@ def _stage_time_chunks(spark: SparkSession, sf_dir: str, n: int) -> str:
     return stage
 
 
-def run_cohort_maturation(
-    spark: SparkSession,
-    sf_dir: str,
-    progress_sink: "list | None" = None,
-) -> DataFrame:
+def run_cohort_maturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user cohort maturation via EVENT-TIME TIMERS: the first batch a
     user appears in registers one timer at first_seen + 5 days; when the
     watermark (advanced by later micro-batches) passes it, the timer fires
@@ -796,8 +776,6 @@ def run_cohort_maturation(
             .start()
         )
         await_finished(q, 180)
-        if progress_sink is not None:
-            progress_sink.extend(_progress_dicts(q))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev_provider is None:

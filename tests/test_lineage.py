@@ -3,6 +3,8 @@ helper (default local path, reliable-checkpoint switch, eager mode) and the
 bucketed per-series grouped map the d14 Holt/Kalman kernels run on."""
 
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -40,9 +42,6 @@ def test_lineage_cut_reliable_switch(spark, tmp_path, monkeypatch):
     lands under the directory once materialized."""
     ckpt_dir = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", ckpt_dir)
-    import conceptnetwork_spark.lineage as lineage
-
-    monkeypatch.setattr(lineage, "_CHECKPOINT_DIR_SET", False)
     base = _grouped(spark)
     cut = base.transform(lineage_cut)
     assert sorted(cut.collect()) == sorted(base.collect())
@@ -52,6 +51,44 @@ def test_lineage_cut_reliable_switch(spark, tmp_path, monkeypatch):
         for f in fs
     ]
     assert found, "reliable checkpoint wrote nothing under the directory"
+
+
+_RESTART_SCRIPT = """
+from pyspark.sql import functions as F
+from conceptnetwork_spark.lineage import lineage_cut
+from conceptnetwork_spark.session import get_spark
+
+def run():
+    spark = get_spark(app_name="lineage-restart", master="local[1]")
+    df = (spark.range(100).select((F.col("id") % 7).alias("k"), "id")
+          .groupBy("k").agg(F.sum("id").alias("s")))
+    rows = sorted(df.transform(lineage_cut).collect())
+    spark.stop()
+    return rows
+
+first = run()
+second = run()
+assert first == second and len(first) == 7, (first, second)
+print("OK")
+"""
+
+
+def test_lineage_cut_reliable_survives_session_restart(tmp_path):
+    """The reliable path must set the checkpoint directory on every new
+    SparkContext: after spark.stop() a fresh session has none, and a
+    process-wide "already set" flag made its first cut fail. Runs in its
+    own process so it can stop and rebuild the session."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_RELIABLE_CHECKPOINT=str(tmp_path / "ckpt"),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        capture_output=True, text=True, timeout=600, cwd=root, env=env,
+    )
+    assert proc.returncode == 0 and "OK" in proc.stdout, proc.stderr[-2000:]
 
 
 def test_per_series_grouped_map_bucket_invariance(spark):

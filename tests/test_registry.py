@@ -44,7 +44,7 @@ def test_bench_summary_line_is_tail_capture_proof(capsys):
     timings = {f"d99_query_{i:03d}": 1.0 + i / 1000 for i in range(400)}
     flags = {f"d99_query_{i:03d}": 9.9 for i in range(300)}
     bench._emit(
-        metric="full_sweep_one_shot_wall_clock",  # avoids BENCHDETAIL write
+        metric="full_sweep_one_shot_wall_clock",
         total=123.4,
         timings=timings,
         extra={

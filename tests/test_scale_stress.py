@@ -1,19 +1,49 @@
 """10x scale-stress gate for the heaviest shufflers (VERDICT r8 ask #8).
 
-Runs tools/scale_stress.py in its own process (the stage-metrics REST API
-needs SPARK_GRAFT_UI=1 at JVM launch, which the shared test session does
-not set): builds a 10x join-consistent blow-up of sf0.1 and asserts every
-top-10 shuffler finishes with ZERO disk spill and <2 GB shuffled — the
-super-linear-growth check sf0.1 alone cannot provide."""
+Runs tools/scale_stress.py in its own process (a fresh session, so one
+run's stages and heap never mix with the suite's): builds a 10x
+join-consistent blow-up of sf0.1 and asserts every top-10 shuffler finishes
+with ZERO disk spill and <2 GB shuffled — the super-linear-growth check
+sf0.1 alone cannot provide."""
 
 import json
 import os
 import subprocess
 import sys
+from contextlib import contextmanager
 
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@contextmanager
+def _progress_into(spark, sink: list):
+    """Collect every streaming progress report, as a dict, into ``sink``
+    while the block runs, through a listener registered only for it."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            sink.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        yield
+        # progress events reach the listener through the listener bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
 
 
 @pytest.mark.slow
@@ -65,8 +95,9 @@ def test_tws_state_scales_with_keys_not_events(spark):
     # 10x blow-up really happened: sf0.1 is 100k events / 1.5k users
     assert n_events >= 1_000_000 and n_keys >= 15_000
 
-    sink = []
-    df = run_first_seen_stats(spark, scaled, n_files=4, progress_sink=sink)
+    sink, sink2 = [], []
+    with _progress_into(spark, sink):
+        df = run_first_seen_stats(spark, scaled, n_files=4)
     assert df.count() == n_keys
     finals = [
         op
@@ -81,8 +112,8 @@ def test_tws_state_scales_with_keys_not_events(spark):
     )
     assert finals[0]["numRowsTotal"] * 50 < n_events
 
-    sink2 = []
-    matured = run_cohort_maturation(spark, scaled, progress_sink=sink2).count()
+    with _progress_into(spark, sink2):
+        matured = run_cohort_maturation(spark, scaled).count()
     removed = sum(
         op.get("numRowsRemoved", 0)
         for p in sink2
@@ -100,7 +131,6 @@ def test_tws_state_scales_with_keys_not_events(spark):
         if p.get("batchId") == max(x.get("batchId", -1) for x in sink2)
     ]
     assert last2[0]["numRowsTotal"] == n_keys - matured
-
 
 def test_hot_user_outside_every_shifted_domain():
     """ADVICE r10: the skew fixture's hot user id must sit outside every
@@ -120,41 +150,6 @@ def test_hot_user_outside_every_shifted_domain():
         for copy in {0, 1, factor - 1} & set(range(factor)):
             lo, hi = copy * KEY_OFF, copy * KEY_OFF + (KEY_OFF - 1)
             assert not (lo <= hu <= hi), (factor, copy, hu)
-
-
-def test_quiesced_totals_flags_exhausted_listener(monkeypatch):
-    """ADVICE r10: when the stage-metrics listener never stabilizes within
-    the poll budget, _quiesced_totals must return the last reading AND
-    append a warning instead of silently handing back moving totals."""
-    sys.path.insert(0, os.path.join(ROOT, "tools"))
-    import scale_stress as ss
-
-    readings = iter(range(1000))
-
-    def fake_totals(ui, app):
-        n = next(readings)  # strictly changing -> never two equal reads
-        return {"shuffle_write": n, "mem_spill": 0, "disk_spill": 0,
-                "n_stages": n}
-
-    monkeypatch.setattr(ss, "_stage_totals", fake_totals)
-    monkeypatch.setattr(ss.time, "sleep", lambda s: None)
-    warnings: list[str] = []
-    out = ss._quiesced_totals("ui", "app", warnings, "after-q7")
-    assert warnings == ["quiesce-exhausted:after-q7"]
-    assert out["shuffle_write"] == 20  # the 21st (last) reading
-
-    # and a stabilizing listener returns clean with no warning
-    stable = iter([5, 7, 7])
-
-    def fake_stable(ui, app):
-        n = next(stable)
-        return {"shuffle_write": n, "mem_spill": 0, "disk_spill": 0,
-                "n_stages": 1}
-
-    monkeypatch.setattr(ss, "_stage_totals", fake_stable)
-    warnings2: list[str] = []
-    out2 = ss._quiesced_totals("ui", "app", warnings2, "after-q8")
-    assert warnings2 == [] and out2["shuffle_write"] == 7
 
 
 @pytest.mark.slow

@@ -48,6 +48,16 @@ def test_lsh_ann_recall_vs_exact(spark):
     assert avg >= 0.5, f"ANN avg recall@10 {avg:.2f}"
 
 
+@pytest.mark.parametrize("taken", ["lsh_table", "lsh_bucket"])
+def test_hyperplane_buckets_rejects_colliding_columns(emb, taken):
+    """An input that already carries one of the output columns is refused
+    by name instead of coming back with two columns of that name."""
+    with pytest.raises(ValueError, match=taken):
+        similarity.hyperplane_buckets(
+            emb.withColumn(taken, F.lit(0)), "embedding", tables=2, bits=2
+        )
+
+
 def test_embedding_near_dup_pairs(spark, emb):
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.9)
     rows = pairs.collect()

@@ -35,6 +35,9 @@ def _normalize(body: str) -> str:
     # vs "localCheckpoint at <unknown>:0") — same plan, different JIT state
     body = re.sub(r"at localCheckpoint at \S+", "at localCheckpoint at X", body)
     body = re.sub(r"at checkpoint at \S+", "at checkpoint at X", body)
+    # _per_series_grouped_map buckets series by pmod(xxhash64(user_id),
+    # 8 x defaultParallelism): the literal follows the host's core count
+    body = re.sub(r"(pmod\(xxhash64\([^()]*\), )\d+\)", r"\1N)", body)
     return body
 
 

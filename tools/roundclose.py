@@ -170,46 +170,6 @@ def main() -> None:
     else:
         print("stale certs: none outside the current window")
 
-    # 1d. scale-tier listener hygiene (VERDICT r11 ask #6): the 10x/100x/
-    # 1000x shuffle/spill numbers back the 100-TB claims, so a tier whose
-    # listener totals never stabilized (quiesce-exhausted) must FAIL the
-    # close, not hide in a warnings list. Reads the newest SCALETIERS
-    # artifact at or before this round; carried tiers without the field
-    # (pre-r11 instrumentation) are listed as uninstrumented, not failed.
-    # sort by the NUMERIC round, not the filename: lexicographic order
-    # misorders across digit-count boundaries (r99 > r100), which would
-    # silently gate on a stale artifact
-    tier_files = sorted(
-        (p for p in _glob.glob(os.path.join(ROOT, "SCALETIERS_r*.json"))
-         if int(re.search(r"_r(\d+)\.json$", p).group(1)) <= rnd),
-        key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)),
-    )
-    if tier_files:
-        try:
-            tiers = _json.load(open(tier_files[-1])).get("tiers", {})
-        except (OSError, ValueError):
-            tiers = {}
-        quiesce_bad = {
-            name: [w for w in (t.get("listener_warnings") or [])
-                   if w.startswith("quiesce-exhausted")]
-            for name, t in tiers.items()
-            if isinstance(t, dict)
-        }
-        quiesce_bad = {k: v for k, v in quiesce_bad.items() if v}
-        uninstrumented = [
-            name for name, t in tiers.items()
-            if isinstance(t, dict) and t.get("listener_warnings") is None
-        ]
-        report["scaletiers_listener"] = {
-            "source": os.path.basename(tier_files[-1]),
-            "quiesce_exhausted": quiesce_bad,
-            "uninstrumented_carried": uninstrumented,
-            "ok": not quiesce_bad,
-        }
-        ok &= not quiesce_bad
-        print(f"scaletiers listener: {'OK' if not quiesce_bad else 'FAIL'} "
-              f"({report['scaletiers_listener']})")
-
     # 2. cross-SF parity at the scale factors pytest does NOT use
     report["parity"] = {}
     if not skip_parity:
@@ -266,54 +226,15 @@ def main() -> None:
         print(f"suite: {'OK' if code == 0 else 'FAIL'} "
               f"(exit {code}, {report['suite']['passed']} passed)")
 
-    # 5. full one-shot bench sweep at sf0.1 -> BENCHSWEEP_r{N}.json
-    # (VERDICT r5 item 7: the headline BENCH_r{N}.json times ~120 of the
-    # registered queries; the sweep artifact covers every one)
+    # 5. the one pass over the registry at sf0.1: every query once, fully
+    # materialized -> BENCHSWEEP_r{N}.json (seconds) and SHUFFLE_r{N}.json
+    # (shuffled/spilled bytes); fails on a query failure, a lost stage or
+    # any >2 GB single-query shuffle
     if "--skip-bench" not in args:
-        code, out = _run([py, "bench.py", "--sweep"], timeout=3600)
-        last_json = None
-        for line in out.splitlines():
-            line = line.strip()
-            if line.startswith("{"):
-                try:
-                    last_json = json.loads(line)
-                except json.JSONDecodeError:
-                    pass
-        # persist the FULL-detail record (the line before the compact
-        # summary), falling back to whatever parsed last
-        detail = None
-        for line in out.splitlines():
-            line = line.strip()
-            if line.startswith("{") and "_detail" in line[:120]:
-                try:
-                    detail = json.loads(line)
-                except json.JSONDecodeError:
-                    pass
-        sweep_rec = detail or last_json
-        if sweep_rec is not None:
-            spath = os.path.join(ROOT, f"BENCHSWEEP_r{rnd:02d}.json")
-            with open(spath, "w") as f:
-                json.dump(sweep_rec, f)
-                f.write("\n")
-            print(f"wrote {spath}")
-        report["sweep"] = {
-            "exit": code,
-            "total_sec": (sweep_rec or {}).get("value"),
-            "n_queries": (sweep_rec or {}).get("n_queries"),
-            "failures": (sweep_rec or {}).get("failures"),
-            "ok": code == 0,
-        }
-        ok &= code == 0
-        print(f"sweep: {'OK' if code == 0 else 'FAIL'} ({report['sweep']})")
-
-    # 5b. shuffle-volume audit -> SHUFFLE_r{N}.json: every query's actual
-    # shuffled/spilled bytes at sf0.1 (fresh process: needs its own session
-    # with the status REST API on); fails on any >2 GB single-query shuffle
-    if "--skip-shuffle" not in args and "--skip-bench" not in args:
         code, out = _run(
             [py, "tools/shuffle_audit.py", "/root/testdata/sf0.1",
              "--round", str(rnd)],
-            timeout=1800,
+            timeout=3600,
         )
         srec = None
         for line in out.splitlines():
@@ -323,17 +244,19 @@ def main() -> None:
                     srec = json.loads(line)
                 except json.JSONDecodeError:
                     pass
-        report["shuffle"] = {
+        srec = srec or {}
+        report["sweep"] = {
             "exit": code,
-            "total_shuffle_write_bytes": (srec or {}).get(
-                "total_shuffle_write_bytes"
-            ),
-            "over_cap": (srec or {}).get("over_cap"),
-            "failures": (srec or {}).get("failures"),
+            "total_sec": srec.get("sweep_total_sec"),
+            "n_queries": srec.get("n_queries"),
+            "failures": srec.get("failures"),
+            "lost_stage_queries": srec.get("lost_stage_queries"),
+            "total_shuffle_write_bytes": srec.get("total_shuffle_write_bytes"),
+            "over_cap": srec.get("over_cap"),
             "ok": code == 0,
         }
         ok &= code == 0
-        print(f"shuffle: {'OK' if code == 0 else 'FAIL'} ({report['shuffle']})")
+        print(f"sweep: {'OK' if code == 0 else 'FAIL'} ({report['sweep']})")
 
     # 6. headline bench -> BENCHDETAIL_r{N}.json (VERDICT r6 ask #7: the
     # driver's BENCH_r{N}.json tail-capture truncates the full-detail line,

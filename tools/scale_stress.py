@@ -6,9 +6,9 @@ lineitem, 1.5M orders, 1M events, 50k documents) with join-consistent key
 offsets per copy — l_orderkey/o_orderkey shift together so every lineitem
 still matches exactly one order; dim tables (region nation customer
 supplier part, embeddings) stay as-is so FK references remain valid — then
-runs the top-10 shufflers from SHUFFLE_r09.json against it and reads the
-per-query shuffle-write / spill deltas from the status REST API (same
-mechanics as tools/shuffle_audit.py).
+runs the top-10 shufflers from SHUFFLE_r09.json against it and reads each
+query's shuffle-write / spill bytes with tools/stages.py (same reader as
+tools/shuffle_audit.py).
 
 Gates (the 100-TB posture check the sf0.1 audit can't give):
   - ZERO disk spill on every query (partitions must still fit in memory
@@ -45,10 +45,8 @@ memoryBytesSpilled is RECORDED per query (`mem_spill`, and the
 sort-based shuffle writer's record buffering and operator pressure at
 extreme tiers (1000x on 24 GB) report as memory spill while the same
 plan is spill-free at cluster-sized memory — gating it would fail runs
-whose 100-TB posture is sound. Listener-lag anomalies (quiesce loop
-exhausting, stage eviction, shrinking totals) are surfaced in
-`listener_warnings` — treat per-query attribution as unreliable when
-that list is non-empty.
+whose 100-TB posture is sound. A stage lost from the status store fails
+its query (its bytes would be undercounted).
 """
 
 from __future__ import annotations
@@ -57,10 +55,10 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SHUFFLE_CAP_BYTES = 2 * 1024**3
 FACTOR = 10
@@ -163,51 +161,9 @@ def build_scaled_dir(
     return out
 
 
-def _stage_totals(ui_url: str, app_id: str) -> dict[str, int]:
-    """Sum shuffle/spill bytes over all RETAINED stages, plus the stage
-    count (the eviction tell shuffle_audit.py uses: once n_stages hits
-    spark.ui.retainedStages, older stages fall out of the window and
-    deltas under-count)."""
-    url = f"{ui_url}/api/v1/applications/{app_id}/stages"
-    data = json.loads(urllib.request.urlopen(url, timeout=10).read())
-    out = {"shuffle_write": 0, "mem_spill": 0, "disk_spill": 0, "n_stages": 0}
-    for s in data:
-        out["shuffle_write"] += s.get("shuffleWriteBytes", 0)
-        out["mem_spill"] += s.get("memoryBytesSpilled", 0)
-        out["disk_spill"] += s.get("diskBytesSpilled", 0)
-        out["n_stages"] += 1
-    return out
-
-
-def _quiesced_totals(
-    ui_url: str, app_id: str, warnings: list[str], ctx: str
-) -> dict[str, int]:
-    """Poll until two consecutive reads agree (the status listener lags
-    job completion — without this, a heavy stage's bytes land in the NEXT
-    query's delta window). If the loop exhausts without stabilizing, the
-    returned totals may still be moving: record a listener warning so the
-    per-query attribution is flagged unreliable instead of silently
-    corrupted (ADVICE r10)."""
-    prev = _stage_totals(ui_url, app_id)
-    for _ in range(20):
-        time.sleep(0.5)
-        cur = _stage_totals(ui_url, app_id)
-        if cur == prev:
-            return cur
-        prev = cur
-    warnings.append(f"quiesce-exhausted:{ctx}")
-    print(
-        f"# WARN quiesce loop exhausted after {ctx}: stage totals still "
-        "changing after 10 s — per-query deltas may be misattributed",
-        file=sys.stderr,
-    )
-    return prev
-
-
 def main() -> None:
     import argparse
 
-    os.environ["SPARK_GRAFT_UI"] = "1"
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=FACTOR)
@@ -219,6 +175,8 @@ def main() -> None:
     factor, skew_pct, src_sf = args.factor, args.skew_pct, args.sf_dir
     names = args.queries.split(",") if args.queries else list(TOP10)
     cap_bytes = SHUFFLE_CAP_BYTES * factor // FACTOR
+
+    from stages import StageReader
 
     from conceptnetwork_spark import registry
     from conceptnetwork_spark.session import get_spark
@@ -260,19 +218,12 @@ def main() -> None:
         os.environ["PYSPARK_SUBMIT_ARGS"] = merged
     spark = get_spark(app_name="scale-stress", shuffle_partitions=shuffle_parts)
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
-    if not ui_url:
-        print("FATAL: Spark UI disabled", file=sys.stderr)
-        sys.exit(2)
-    app_id = spark.sparkContext.applicationId
 
     sf_dir = build_scaled_dir(spark, src_sf, factor, skew_pct)
-    retained = int(spark.conf.get("spark.ui.retainedStages", "1000"))
     qs = registry.queries()
     per: dict[str, dict] = {}
     failures: list[str] = []
-    listener_warnings: list[str] = []
-    before = _quiesced_totals(ui_url, app_id, listener_warnings, "warmup")
+    reader = StageReader(spark)
     for name in names:
         t0 = time.perf_counter()
         try:
@@ -281,34 +232,15 @@ def main() -> None:
             # the noop writer pays for the full output schema (see
             # tools/shuffle_audit.py for the measured case)
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as ex:
+            sec = round(time.perf_counter() - t0, 2)
+            m = reader.read()
+        except Exception as ex:  # a lost stage fails its query too
             failures.append(name)
             print(f"# FAIL {name}: {str(ex)[:200]}", file=sys.stderr)
-            before = _quiesced_totals(ui_url, app_id, listener_warnings, name)
+            reader.skip()
             continue
-        after = _quiesced_totals(ui_url, app_id, listener_warnings, name)
-        # totals are monotone UNLESS the UI evicted stages out of its
-        # retained window — a shrinking counter means the deltas
-        # under-count; flag it instead of letting max(0, ...) hide it
-        # (the shuffle_audit.py eviction tells, ported per ADVICE r10)
-        if any(after[k] < before[k] for k in after):
-            listener_warnings.append(f"shrinking-totals:{name}")
-            print(f"# WARN stage eviction near {name}: totals shrank — "
-                  "deltas under-count", file=sys.stderr)
-        if after["n_stages"] >= retained:
-            listener_warnings.append(f"retained-stages-cap:{name}")
-            print(f"# WARN {after['n_stages']} stages at the "
-                  f"retainedStages cap ({retained}) after {name}",
-                  file=sys.stderr)
-        per[name] = {
-            **{
-                k: max(0, after[k] - before[k])
-                for k in after
-                if k != "n_stages"
-            },
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-        before = after
+        m.pop("n_stages")
+        per[name] = {**m, "sec": sec}
 
     over = {
         n: m["shuffle_write"]
@@ -329,7 +261,6 @@ def main() -> None:
         "disk_spilled": spilled,
         "mem_spilled": mem_spilled,
         "spill_gate": "disk-only (mem_spill recorded, not gated; see docstring)",
-        "listener_warnings": listener_warnings,
         "per_query": per,
     }
     print(json.dumps(record))

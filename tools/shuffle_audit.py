@@ -1,21 +1,21 @@
 #!/usr/bin/env python
-"""Shuffle-volume audit: run every registered query once at the given scale
-factor and record how many bytes it actually SHUFFLED (and spilled) — the
-100x-scale signal .explain() can't give you. A query whose plan looks right
-but moves the whole fact table through an exchange shows up here, not in
-the plan audit.
+"""The one pass over the registry: run every registered query once at the
+given scale factor, fully materialized through the noop sink, and record
+its one-shot wall seconds plus the bytes it actually SHUFFLED and spilled —
+the 100x-scale signal .explain() can't give you. A query whose plan looks
+right but moves the whole fact table through an exchange shows up here,
+not in the plan audit.
 
-Per-query numbers come from the Spark status REST API (per-stage
-shuffleWriteBytes / memoryBytesSpilled / diskBytesSpilled, summed and
-deltaed around each query) — the only stable metrics surface PySpark
-exposes; requires SPARK_GRAFT_UI=1, which this tool sets for its own
-session.
+Bytes per query come from tools/stages.py (Spark's in-process status
+store, stages added since the previous query). Seconds cover the builder
+plus the noop write; the stage read happens outside that window.
 
-Writes SHUFFLE_r{N}.json when --round N is passed, else prints one JSON
-line. Exits nonzero if any query shuffles more than SHUFFLE_CAP_BYTES at
-the audited SF (a generous blow-up guard: the whole sf0.1 lineitem table
-is ~70 MB on disk, so >2 GB shuffled by one query means quadratic fanout
-or a lost broadcast, not honest work).
+With --round N writes BENCHSWEEP_r{N}.json (per-query seconds) and
+SHUFFLE_r{N}.json (per-query bytes); always prints one summary JSON line.
+Exits nonzero if any query fails, loses a stage from the status store, or
+shuffles more than SHUFFLE_CAP_BYTES (a generous blow-up guard: the whole
+sf0.1 lineitem table is ~70 MB on disk, so >2 GB shuffled by one query
+means quadratic fanout or a lost broadcast, not honest work).
 
 Usage: python tools/shuffle_audit.py [sf_dir] [--round N]
 """
@@ -25,28 +25,24 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SHUFFLE_CAP_BYTES = 2 * 1024**3
 
 
-def _stage_totals(ui_url: str, app_id: str) -> dict[str, int]:
-    url = f"{ui_url}/api/v1/applications/{app_id}/stages"
-    data = json.loads(urllib.request.urlopen(url, timeout=10).read())
-    out = {"shuffle_write": 0, "mem_spill": 0, "disk_spill": 0, "n_stages": 0}
-    for s in data:
-        out["shuffle_write"] += s.get("shuffleWriteBytes", 0)
-        out["mem_spill"] += s.get("memoryBytesSpilled", 0)
-        out["disk_spill"] += s.get("diskBytesSpilled", 0)
-        out["n_stages"] += 1
-    return out
+def _write(name: str, record: dict) -> None:
+    path = os.path.join(ROOT, name)
+    with open(path, "w") as f:
+        json.dump(record, f)
+        f.write("\n")
+    print(f"wrote {path}")
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_UI"] = "1"
     rnd = None
     argv = sys.argv[1:]
     if "--round" in argv:
@@ -59,25 +55,29 @@ def main() -> None:
     args = [a for a in argv if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
 
+    from stages import LostStageError, StageReader
+
     from conceptnetwork_spark import registry
     from conceptnetwork_spark.session import get_spark
 
     spark = get_spark(app_name="shuffle-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-    # the UI binds the first free port from 4040 upward — never hardcode it
-    ui_url = spark.sparkContext.uiWebUrl
-    if not ui_url:
-        print("FATAL: Spark UI disabled; cannot read stage metrics", file=sys.stderr)
-        sys.exit(2)
     retained = int(spark.conf.get("spark.ui.retainedStages"))
-
     qs = registry.queries()
+    # session warm-up outside the timings: without it, JVM/codegen/first-
+    # read cost lands on whichever queries lead the registry — i.e. the
+    # current certification window — and cross-round diffs misattribute it
+    # as a regression of the rotated-in queries
+    for t in ("lineitem", "orders", "events", "documents", "embeddings"):
+        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
+
+    reader = StageReader(spark)
+    timings: dict[str, float] = {}
     per: dict[str, dict] = {}
     failures: list[str] = []
-    eviction = False
-    before = _stage_totals(ui_url, app_id)
+    lost: list[str] = []
     for name, fn in qs.items():
+        t0 = time.perf_counter()
         try:
             # noop sink, not count(): count() lets Catalyst prune unused
             # output columns — a Window whose outputs feed only pruned
@@ -88,41 +88,33 @@ def main() -> None:
             # output schema, so the measured plan is the one a consumer
             # of the query's rows would actually pay for.
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as ex:
+            timings[name] = round(time.perf_counter() - t0, 3)
+        except Exception as ex:  # record, don't abort the pass
+            timings[name] = -1.0
             failures.append(name)
             print(f"# FAIL {name}: {str(ex)[:150]}", file=sys.stderr)
-            before = _stage_totals(ui_url, app_id)
+            reader.skip()
             continue
-        after = _stage_totals(ui_url, app_id)
-        # deltas are non-negative by construction UNLESS the UI evicted
-        # stages (cumulative totals shrink) — that invalidates the audit,
-        # so detect it rather than silently clamping a lowball number
-        if any(after[k] < before[k] for k in after):
-            eviction = True
-            print(f"# EVICTION around {name}: totals shrank", file=sys.stderr)
-        per[name] = {
-            k: max(0, after[k] - before[k]) for k in after if k != "n_stages"
-        }
-        before = after
-    if before["n_stages"] >= retained:
-        eviction = True
-        print(
-            f"# EVICTION: {before['n_stages']} stages at the retainedStages "
-            f"cap ({retained}) — totals are truncated",
-            file=sys.stderr,
-        )
+        try:
+            m = reader.read()
+        except LostStageError as ex:
+            lost.append(name)
+            print(f"# LOST STAGE {name}: {ex}", file=sys.stderr)
+            continue
+        per[name] = {k: v for k, v in m.items() if k != "n_stages"}
 
+    total = round(sum(t for t in timings.values() if t > 0), 3)
     over = {
         n: m["shuffle_write"]
         for n, m in per.items()
         if m["shuffle_write"] > SHUFFLE_CAP_BYTES
     }
     top = sorted(per.items(), key=lambda kv: -kv[1]["shuffle_write"])[:15]
-    record = {
+    shuffle = {
         "sf_dir": sf_dir,
         "n_queries": len(per),
         "failures": failures,
-        "stage_eviction_detected": eviction,
+        "stage_eviction_detected": bool(lost),
         "retained_stages": retained,
         "total_shuffle_write_bytes": sum(m["shuffle_write"] for m in per.values()),
         "total_disk_spill_bytes": sum(m["disk_spill"] for m in per.values()),
@@ -131,18 +123,19 @@ def main() -> None:
         "per_query": per,
     }
     if rnd is not None:
-        path = os.path.join(ROOT, f"SHUFFLE_r{rnd:02d}.json")
-        with open(path, "w") as f:
-            json.dump(record, f)
-            f.write("\n")
-        print(f"wrote {path}")
-    summary = {k: v for k, v in record.items() if k != "per_query"}
-    summary["top_shufflers"] = {
-        n: m["shuffle_write"] for n, m in top[:10]
-    }
+        _write(f"BENCHSWEEP_r{rnd:02d}.json", {
+            "metric": "full_sweep_one_shot_wall_clock_detail", "value": total,
+            "unit": "sec", "queries": timings, "n_queries": len(timings),
+            "failures": failures,
+        })
+        _write(f"SHUFFLE_r{rnd:02d}.json", shuffle)
+    summary = {k: v for k, v in shuffle.items() if k != "per_query"}
+    summary["top_shufflers"] = {n: m["shuffle_write"] for n, m in top[:10]}
+    summary["lost_stage_queries"] = lost
+    summary["sweep_total_sec"] = total
     print(json.dumps(summary))
     spark.stop()
-    sys.exit(1 if (over or failures or eviction) else 0)
+    sys.exit(1 if (over or failures or lost) else 0)
 
 
 if __name__ == "__main__":

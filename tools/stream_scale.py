@@ -26,7 +26,7 @@ append mode):
      memory sink the sf0.1 query uses would collect ~100M finalized
      sessions onto the driver — the sink, not the operator, would be
      the bottleneck) and reads stateOperators metrics from the query
-     progress plus shuffle/spill deltas from the status REST API.
+     progress plus the run's shuffle/spill bytes with tools/stages.py.
 
 Gates (exit nonzero on violation):
   - the run COMPLETES (all micro-batches, no timeout);
@@ -42,7 +42,7 @@ Gates (exit nonzero on violation):
 Recorded, not gated: peak/final state rows, state memory, update /
 removal / commit times per micro-batch, shuffle bytes, mem spill
 (sort-writer buffering reports as mem spill at constrained heaps — see
-scale_stress.py), and listener warnings (roundclose consumes them).
+scale_stress.py). A stage lost from the status store fails the run.
 
 Run the 10x tier via `pytest -m slow tests/test_scale_stress.py`; the
 1000x tier manually with SPARK_GRAFT_DRIVER_MEM=96g (~100M events).
@@ -126,7 +126,6 @@ def stage_ranged_events(
 def main() -> None:
     import argparse
 
-    os.environ["SPARK_GRAFT_UI"] = "1"
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=DEFAULT_FACTOR)
@@ -134,7 +133,7 @@ def main() -> None:
     args = ap.parse_args()
     factor, batches = args.factor, args.batches
 
-    from scale_stress import _quiesced_totals
+    from stages import StageReader
 
     from conceptnetwork_spark.session import get_spark
 
@@ -155,11 +154,6 @@ def main() -> None:
         os.environ["PYSPARK_SUBMIT_ARGS"] = merged
     spark = get_spark(app_name="stream-scale", shuffle_partitions=shuffle_parts)
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
-    if not ui_url:
-        print("FATAL: Spark UI disabled", file=sys.stderr)
-        sys.exit(2)
-    app_id = spark.sparkContext.applicationId
 
     stage = stage_ranged_events(spark, args.sf_dir, factor, batches)
 
@@ -171,8 +165,7 @@ def main() -> None:
         await_finished,
     )
 
-    listener_warnings: list[str] = []
-    before = _quiesced_totals(ui_url, app_id, listener_warnings, "warmup")
+    reader = StageReader(spark)
 
     schema = spark.read.parquet(stage).schema
     stream = (
@@ -204,7 +197,7 @@ def main() -> None:
         failures.append(f"stream: {str(ex)[:300]}")
         q = None
     wall = round(time.perf_counter() - t0, 2)
-    after = _quiesced_totals(ui_url, app_id, listener_warnings, "stream")
+    stage_bytes = reader.read()
 
     # -------- stateOperators metrics across all micro-batch progresses
     # (PySpark surfaces recentProgress entries as plain dicts)
@@ -239,7 +232,7 @@ def main() -> None:
     # reclaim gate only meaningful with >=3 batches (with 2, the final
     # batch's open sessions can legitimately exceed batch 1's)
     gate_reclaim = batches < 3 or final_state < peak_state
-    disk_spill = max(0, after["disk_spill"] - before["disk_spill"])
+    disk_spill = stage_bytes["disk_spill"]
     record = {
         "metric": f"stream_scale_{factor}x",
         "factor": factor,
@@ -256,11 +249,10 @@ def main() -> None:
         ),
         "rows_dropped_by_watermark": dropped,
         "state_reclaimed": gate_reclaim,
-        "shuffle_write": max(0, after["shuffle_write"] - before["shuffle_write"]),
-        "mem_spill": max(0, after["mem_spill"] - before["mem_spill"]),
+        "shuffle_write": stage_bytes["shuffle_write"],
+        "mem_spill": stage_bytes["mem_spill"],
         "disk_spill": disk_spill,
         "failures": failures,
-        "listener_warnings": listener_warnings,
         "per_batch": per_batch,
     }
     print(json.dumps(record))
