@@ -24,16 +24,21 @@ protobuf dependency:
 Scale stance: write is one shard per partition (executor-side, no driver
 collect); read is ``binaryFile`` source -> ``mapInPandas`` decode, so each
 file decodes where it lands and schema projection drops unrequested
-features before they reach the JVM row.
+features before they reach the JVM row. Framing and CRC32C are batched: the
+sink encodes up to ``_CHUNK_ROWS`` rows of a partition column by column and
+frames them in one call, and the source unframes and checks every CRC of a
+whole decompressed shard at once; ``crc32c_many`` runs the CRC table as
+numpy vector steps over many records instead of a Python step per byte.
 """
 
 from __future__ import annotations
 
+import glob
 import gzip
-import io
 import os
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
+from itertools import chain, islice
 
 import numpy as np
 import pandas as pd
@@ -60,6 +65,8 @@ def _crc32c_table() -> np.ndarray:
 
 
 def crc32c(data: bytes) -> int:
+    """CRC32C of one byte string, a Python step per byte: the reference
+    that ``crc32c_many`` is tested against."""
     table = _crc32c_table()
     crc = 0xFFFFFFFF
     for b in data:
@@ -67,9 +74,53 @@ def crc32c(data: bytes) -> int:
     return int(crc ^ 0xFFFFFFFF)
 
 
-def _masked_crc(data: bytes) -> int:
-    crc = crc32c(data)
-    return ((crc >> 15 | crc << 17) + 0xA282EAD8) & 0xFFFFFFFF
+def _crc32c_matrix(mat: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """CRC32C of each row of the ``(n, L)`` uint8 matrix ``mat``, one vector
+    step per column. Row ``i``'s bytes begin at column ``starts[i]``; the
+    columns before are zero padding. A zero register stays zero over zero
+    bytes, so each register is held at zero through its padding and set to
+    the initial value where its own bytes begin."""
+    table = _crc32c_table()
+    by_start = np.argsort(starts, kind="stable")
+    firsts, cuts = np.unique(starts[by_start], return_index=True)
+    begin = dict(zip(firsts.tolist(), np.split(by_start, cuts[1:])))
+    reg = np.zeros(len(mat), dtype=np.uint32)
+    for j, col in enumerate(np.ascontiguousarray(mat.T)):
+        if j in begin:
+            reg[begin[j]] = 0xFFFFFFFF
+        reg = table[(reg ^ col) & 0xFF] ^ (reg >> 8)
+    return reg ^ np.uint32(0xFFFFFFFF)
+
+
+def crc32c_many(bufs: Sequence[bytes]) -> np.ndarray:
+    """CRC32C of every byte string in ``bufs``, as a uint32 array.
+
+    Strings whose lengths have the same bit length form one group, stacked
+    into an ``(n, L)`` matrix left-padded with zeros to the group's longest
+    string, so a group costs ``L`` vector steps rather than ``n * L`` scalar
+    ones and padding at most doubles its bytes. Equal-length strings (all
+    record headers, fixed-width records) form one group with no padding.
+    """
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    out = np.zeros(len(bufs), dtype=np.uint32)  # crc32c(b"") == 0
+    group = np.frexp(lens)[1]  # bit length of each length; 0 for b""
+    for g in np.unique(group[lens > 0]):
+        rows = np.flatnonzero(group == g)
+        width = int(lens[rows].max())
+        padded = b"".join([bytes(width - len(bufs[i])) + bufs[i] for i in rows])
+        mat = np.frombuffer(padded, dtype=np.uint8).reshape(len(rows), width)
+        out[rows] = _crc32c_matrix(mat, width - lens[rows])
+    return out
+
+
+def _masked(crc: np.ndarray) -> np.ndarray:
+    return ((crc >> 15) | (crc << 17)) + np.uint32(0xA282EAD8)
+
+
+def _masked_length_crcs(lengths: Sequence[int]) -> np.ndarray:
+    """Masked CRC32C of each record's 8-byte little-endian length header."""
+    heads = np.array(lengths, dtype="<u8").view(np.uint8).reshape(-1, 8)
+    return _masked(_crc32c_matrix(heads, np.zeros(len(heads), dtype=np.int64)))
 
 
 # -- protobuf varint primitives --------------------------------------------
@@ -104,37 +155,101 @@ def _len_delim(field_no: int, payload: bytes) -> bytes:
 
 # -- tf.train.Example encode ------------------------------------------------
 
+# Feature oneof field of each value-list kind
+_FEATURE_FIELD = {"bytes": 1, "float": 2, "int": 3}
+_MASK64 = 0xFFFFFFFFFFFFFFFF
 
-def _encode_feature(value) -> bytes:
-    """Python value -> Feature proto bytes. Lists/np arrays of ints ->
-    Int64List, floats -> FloatList (packed), str/bytes -> BytesList."""
-    if not isinstance(value, (list, tuple, np.ndarray)):
-        value = [value]
-    if len(value) and isinstance(value[0], (str, bytes)):
-        payload = b"".join(
-            _len_delim(1, v.encode("utf-8") if isinstance(v, str) else bytes(v))
-            for v in value
-        )
-        return _len_delim(1, payload)  # bytes_list = field 1
-    if len(value) and (
-        isinstance(value[0], (float, np.floating))
-    ):
-        packed = np.asarray(value, dtype="<f4").tobytes()
-        return _len_delim(2, _varint(1 << 3 | 2) + _varint(len(packed)) + packed)
-    packed = b"".join(
-        _varint(int(v) & 0xFFFFFFFFFFFFFFFF) for v in value
-    )
-    return _len_delim(3, _varint(1 << 3 | 2) + _varint(len(packed)) + packed)
+
+def _value_lists(kind: str, is_array: bool, values: list) -> list[bytes | None]:
+    """The value-list message of each non-null value of one column: a
+    BytesList of strings, a packed FloatList or a packed Int64List; None for
+    an empty list."""
+    if kind == "float":
+        # one float32 conversion for the whole column
+        flat = list(chain.from_iterable(values)) if is_array else values
+        packed = np.asarray(flat, dtype="<f4").tobytes()
+        if not is_array:
+            return [b"\n\x04" + packed[i : i + 4] for i in range(0, len(packed), 4)]
+        out, pos = [], 0
+        for vs in values:
+            n = 4 * len(vs)
+            out.append(b"\n" + _varint(n) + packed[pos : pos + n] if n else None)
+            pos += n
+        return out
+    lists = values if is_array else [[v] for v in values]
+    if kind == "int":
+        out = []
+        for vs in lists:
+            packed = b"".join([_varint(int(v) & _MASK64) for v in vs])
+            out.append(b"\n" + _varint(len(packed)) + packed if packed else None)
+        return out
+    return [
+        b"".join([
+            _len_delim(1, v.encode("utf-8") if isinstance(v, str) else bytes(v)) for v in vs
+        ]) if len(vs) else None
+        for vs in lists
+    ]
+
+
+def _value_kind(name: str, values) -> str:
+    """The value-list kind of one feature's values. Raises ValueError for a
+    type no list stores unchanged (Decimal, datetime, ...) and for a mix of
+    kinds: an Int64List would truncate the floats, a FloatList would round
+    large ints."""
+    kinds = set()
+    for t in {type(v) for v in values}:
+        if issubclass(t, (str, bytes)):
+            kinds.add("bytes")
+        elif issubclass(t, (float, np.floating)):
+            kinds.add("float")
+        elif issubclass(t, (int, np.integer, np.bool_)):
+            kinds.add("int")
+        else:
+            raise ValueError(f"feature {name!r}: cannot encode {t.__name__} values")
+    if len(kinds) > 1:
+        raise ValueError(f"feature {name!r} mixes {' and '.join(sorted(kinds))} values")
+    return kinds.pop() if kinds else "int"
+
+
+def _encode_column(name: str, values: Sequence) -> list[bytes]:
+    """One feature's ``Features`` map entries, one per value; ``b""`` where
+    the value is None, so the feature is left out of that Example. A list,
+    tuple or array value is a multi-valued feature."""
+    present = [v for v in values if v is not None]
+    is_array = bool(present) and isinstance(present[0], (list, tuple, np.ndarray))
+    kind = _value_kind(name, chain.from_iterable(present) if is_array else present)
+    key = _len_delim(1, name.encode("utf-8"))
+
+    def entry(field: int, msg: bytes) -> bytes:
+        return _len_delim(1, key + _len_delim(2, _len_delim(field, msg)))
+
+    field = _FEATURE_FIELD[kind]
+    empty = entry(3, b"\n\x00")  # an empty list of any kind is an empty Int64List
+    # an entry's bytes before its value list depend only on the list's length
+    prefixes: dict[int, bytes] = {}
+    out = []
+    for msg in _value_lists(kind, is_array, present):
+        if msg is None:
+            out.append(empty)
+            continue
+        prefix = prefixes.get(len(msg))
+        if prefix is None:
+            full = entry(field, bytes(len(msg)))
+            prefix = prefixes[len(msg)] = full[: len(full) - len(msg)]
+        out.append(prefix + msg)
+    if len(present) < len(values):
+        it = iter(out)
+        out = [b"" if v is None else next(it) for v in values]
+    return out
 
 
 def encode_example(features: dict) -> bytes:
-    """dict of name -> value(s) => serialized tf.train.Example."""
-    entries = b""
-    for name in sorted(features):
-        key = _len_delim(1, name.encode("utf-8"))
-        val = _len_delim(2, _encode_feature(features[name]))
-        entries += _len_delim(1, key + val)  # Features.feature map entry
-    return _len_delim(1, entries)  # Example.features = field 1
+    """dict of name -> value(s) => serialized tf.train.Example. Lists/np
+    arrays of ints -> Int64List, floats -> FloatList (packed), str/bytes ->
+    BytesList; a scalar is a one-element list and None leaves the feature
+    out."""
+    entries = [_encode_column(name, [features[name]])[0] for name in sorted(features)]
+    return _len_delim(1, b"".join(entries))  # Example.features = field 1
 
 
 # -- tf.train.Example decode ------------------------------------------------
@@ -216,50 +331,95 @@ def decode_example(buf: bytes) -> dict:
 # -- TFRecord framing --------------------------------------------------------
 
 
-def write_record(fh, data: bytes) -> None:
-    header = struct.pack("<Q", len(data))
-    fh.write(header)
-    fh.write(struct.pack("<I", _masked_crc(header)))
-    fh.write(data)
-    fh.write(struct.pack("<I", _masked_crc(data)))
+def frame_records(datas: Sequence[bytes]) -> bytes:
+    """The TFRecord framing of ``datas``, in order, with every length and
+    data CRC computed in one batch."""
+    hcrc = _masked_length_crcs([len(d) for d in datas])
+    dcrc = _masked(crc32c_many(datas))
+    return b"".join([
+        struct.pack("<QI", len(d), h) + d + struct.pack("<I", c)
+        for d, h, c in zip(datas, hcrc.tolist(), dcrc.tolist())
+    ])
 
 
-def read_records(fh) -> Iterator[bytes]:
-    while True:
-        header = fh.read(8)
-        if len(header) < 8:
-            return
-        (length,) = struct.unpack("<Q", header)
-        (got_hcrc,) = struct.unpack("<I", fh.read(4))
-        if got_hcrc != _masked_crc(header):
-            raise ValueError("TFRecord length CRC mismatch")
-        data = fh.read(length)
-        (got_dcrc,) = struct.unpack("<I", fh.read(4))
-        if got_dcrc != _masked_crc(data):
-            raise ValueError("TFRecord data CRC mismatch")
-        yield data
+def unframe_records(raw: bytes, path: str = "<bytes>") -> list[bytes]:
+    """The records framed in ``raw``, a whole TFRecord shard. Every length
+    and data CRC is checked; a mismatch or a shard that ends inside a record
+    raises ValueError naming ``path``."""
+    recs, lengths, want_h, want_d = [], [], [], []
+    pos, end, short = 0, len(raw), None
+    while pos < end:
+        if end - pos < 12:
+            short = f"partial record header at byte {pos}"
+            break
+        length, hcrc = struct.unpack_from("<QI", raw, pos)
+        lengths.append(length)
+        want_h.append(hcrc)
+        if end - pos - 12 < length:
+            short = f"record at byte {pos} has {end - pos - 12} of its {length} bytes"
+            break
+        if end - pos - 12 - length < 4:
+            short = f"record at byte {pos} is missing its data CRC"
+            break
+        recs.append(raw[pos + 12 : pos + 12 + length])
+        want_d.append(struct.unpack_from("<I", raw, pos + 12 + length)[0])
+        pos += 16 + length
+    # length CRCs first: a corrupt length misplaces everything after it
+    bad = np.flatnonzero(_masked_length_crcs(lengths) != np.array(want_h, dtype=np.uint32))
+    if bad.size:
+        raise ValueError(f"{path}: TFRecord length CRC mismatch in record {bad[0]}")
+    if short:
+        raise ValueError(f"{path}: truncated TFRecord shard: {short}")
+    bad = np.flatnonzero(_masked(crc32c_many(recs)) != np.array(want_d, dtype=np.uint32))
+    if bad.size:
+        raise ValueError(f"{path}: TFRecord data CRC mismatch in record {bad[0]}")
+    return recs
 
 
 # -- DataFrame sink/source ---------------------------------------------------
+
+# Rows a write task holds and encodes at once: the batch amortizes the
+# per-column numpy steps while a partition of any size streams through.
+_CHUNK_ROWS = 16384
+
+
+def _encode_partition(rows: Iterator, names: list[str]) -> Iterator[tuple[int, bytes]]:
+    """(row count, framed Examples) per chunk of up to ``_CHUNK_ROWS`` rows,
+    ``names`` naming each position of a row. Features are written in name
+    order and null values are left out."""
+    order = sorted(range(len(names)), key=names.__getitem__)
+    while chunk := list(islice(rows, _CHUNK_ROWS)):
+        cols = list(zip(*chunk))
+        entries = [_encode_column(names[i], cols[i]) for i in order]
+        bodies = [b"".join(row) for row in zip(*entries)] if entries else [b""] * len(chunk)
+        yield len(chunk), frame_records([b"\n" + _varint(len(b)) + b for b in bodies])
 
 
 def write_tfrecords(df: DataFrame, out_dir: str, compress: bool = True) -> int:
     """S2: write one gzip TFRecord shard per partition (executor-side IO,
     nothing through the driver). Each row's columns become Example features;
-    array columns become multi-valued features. Returns total record count."""
+    array columns become multi-valued features and null values are left out.
+    Replaces the shards and ``_SUCCESS`` marker of an earlier write to
+    ``out_dir``, like the parquet sink's overwrite mode. Returns total
+    record count. A column type no Example value list stores unchanged
+    (decimal, timestamp, binary, ...) fails the write with a ValueError."""
+    names = df.columns
     os.makedirs(out_dir, exist_ok=True)
+    base = glob.escape(out_dir)
+    for stale in glob.glob(os.path.join(base, "part-*.tfrecord*")) + glob.glob(
+        os.path.join(base, "_SUCCESS")
+    ):
+        os.remove(stale)
     suffix = ".tfrecord.gz" if compress else ".tfrecord"
-    cols = df.columns
 
     def write_partition(idx: int, rows) -> Iterator[int]:
         path = os.path.join(out_dir, f"part-{idx:05d}{suffix}")
         opener = gzip.open if compress else open
         n = 0
         with opener(path, "wb") as fh:
-            for row in rows:
-                feats = {c: row[c] for c in cols if row[c] is not None}
-                write_record(fh, encode_example(feats))
-                n += 1
+            for count, framed in _encode_partition(rows, names):
+                fh.write(framed)
+                n += count
         if n == 0:
             os.remove(path)
         yield n
@@ -295,23 +455,17 @@ def read_tfrecords(
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[dict] = []
-            for _, file_row in pdf.iterrows():
-                raw = bytes(file_row["content"])
-                if file_row["path"].endswith(".gz"):
-                    raw = gzip.decompress(raw)
-                for rec in read_records(io.BytesIO(raw)):
+            cols: dict[str, list] = {n: [] for n in names}
+            for path, content in zip(pdf["path"], pdf["content"]):
+                raw = gzip.decompress(content) if path.endswith(".gz") else bytes(content)
+                for rec in unframe_records(raw, path):
                     ex = decode_example(rec)
-                    row = {}
                     for n in names:
                         v = ex.get(n, [])
                         if scalars[n]:
-                            row[n] = _conv(v[0], n) if v else None
+                            cols[n].append(_conv(v[0], n) if v else None)
                         else:
-                            row[n] = [_conv(x, n) for x in v]
-                    out.append(row)
-            yield pd.DataFrame(out, columns=names) if out else pd.DataFrame(
-                columns=names
-            )
+                            cols[n].append([_conv(x, n) for x in v])
+            yield pd.DataFrame(cols, columns=names)
 
     return files.select("path", "content").mapInPandas(decode, schema=schema)
