@@ -206,3 +206,54 @@ def test_property_roundtrip_random_messages():
         assert rb.WhichOneof("method") == "statefulProcessorCall"
 
     check()
+
+
+def test_shim_zip_tracks_vendor_contents(tmp_path, monkeypatch):
+    """The shipped zip is named by its contents: editing a vendored file
+    yields a new zip, so a zip left by an older checkout is never reused."""
+    import os
+    import shutil
+    import tempfile
+    import zipfile
+
+    from conceptnetwork_spark import protoshim
+
+    vendor = tmp_path / "vendor"
+    shutil.copytree(os.path.join(protoshim._VENDOR_DIR, "google"), vendor / "google")
+    monkeypatch.setattr(protoshim, "_VENDOR_DIR", str(vendor))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def contents(zpath):
+        with zipfile.ZipFile(zpath) as z:
+            return {n: z.read(n) for n in z.namelist()}
+
+    def vendored():
+        return {
+            str(p.relative_to(vendor)): p.read_bytes()
+            for p in (vendor / "google").rglob("*.py")
+        }
+
+    first = protoshim.shim_zip()
+    assert protoshim.shim_zip() == first
+    assert contents(first) == vendored()
+
+    edited = vendor / "google" / "protobuf" / "__init__.py"
+    edited.write_bytes(edited.read_bytes() + b"\n# edited\n")
+    second = protoshim.shim_zip()
+    assert second != first
+    assert contents(second) == vendored()
+
+
+def test_append_pythonpath_keeps_vendor_dir_last():
+    """Entries appended after the shim's vendor dir still precede it: the
+    fallback must not shadow a package added later (get_spark appends the
+    package's parent directory after ensure_protobuf may have run)."""
+    import os
+
+    from conceptnetwork_spark import protoshim
+
+    env = {"PYTHONPATH": os.pathsep.join(["/a", ""])}
+    protoshim.append_pythonpath(env, protoshim._VENDOR_DIR)
+    protoshim.append_pythonpath(env, "/b")
+    protoshim.append_pythonpath(env, "/a")
+    assert env["PYTHONPATH"].split(os.pathsep) == ["/a", "/b", protoshim._VENDOR_DIR]
