@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from conceptnetwork_spark.catalog import Catalog
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import staged
 
 # metadata schema attached to every payload column
 MEDIA_META_SCHEMA = (
@@ -647,24 +648,19 @@ def d32_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-sized bytes per file even when payloads are megabytes (pair
     with binaryFile ingest d01_binary_source at 100 TB)."""
     import os
-    import tempfile
 
-    base = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(tempfile.gettempdir(), f"cn_spark_jpg_{base}")
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(stage, exist_ok=True)
+    def build(tmp: str) -> None:
+        # synthesized from doc ids alone, so one stage serves every sf
         for doc_id in range(40):
             jpg = make_jpeg_bytes(
                 64 + (doc_id % 7) * 16,
                 48 + (doc_id % 5) * 16,
                 50 + doc_id % 50,
             )
-            tmp = os.path.join(stage, f"doc_{doc_id:05d}.jpg.tmp")
-            with open(tmp, "wb") as fh:
+            with open(os.path.join(tmp, f"doc_{doc_id:05d}.jpg"), "wb") as fh:
                 fh.write(jpg)
-            os.replace(tmp, os.path.join(stage, f"doc_{doc_id:05d}.jpg"))
-        open(done, "w").close()
+
+    stage = staged("jpg", build)
 
     files = (
         spark.read.format("binaryFile")

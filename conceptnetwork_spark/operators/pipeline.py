@@ -26,6 +26,8 @@ no corpus operators (SURVEY §2.1 "not present" list).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,6 +41,7 @@ from conceptnetwork_spark.operators.text import (
     lang_id,
 )
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import oracle_sf_dir, staged
 
 # normalized-content key for exact dedup: case/whitespace-insensitive
 _NORM_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
@@ -679,21 +682,15 @@ def d35_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     each file's event_id range is disjoint). At 100 TB this runs per
     partition-of-the-table, and the same range clustering is what makes
     post-compaction scans prune by file min/max."""
-    import os as _os
-    import tempfile as _tempfile
 
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        f"cn_spark_compact_{_os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    frag, packed = _os.path.join(base, "frag"), _os.path.join(base, "packed")
-    marker = _os.path.join(base, "_DONE")
-    if not _os.path.exists(marker):
-        ev = Catalog(spark, sf_dir).events
-        ev.repartition(32).write.mode("overwrite").parquet(frag)
-        compact_dir(spark, frag, packed, COMPACT_TARGET_FILES)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+    def build(tmp: str) -> None:
+        frag = os.path.join(tmp, "frag")
+        Catalog(spark, sf_dir).events.repartition(32).write.mode(
+            "overwrite"
+        ).parquet(frag)
+        compact_dir(spark, frag, os.path.join(tmp, "packed"), COMPACT_TARGET_FILES)
+
+    packed = os.path.join(staged("compact", build, sf_dir), "packed")
     return (
         spark.read.parquet(packed)
         .select("event_id", "user_id", "event_type", F.round("value", 4).alias("value"))
@@ -788,25 +785,17 @@ def stage_evolved_events(sf_dir: str) -> str:
     """Stage TWO parquet generations of the same logical table: gen-1 has
     (event_id, user_id, value); gen-2 ADDS a derived `channel` column — the
     additive schema change every long-lived lakehouse table accumulates.
-    Deterministic extracts via pyarrow (same staging discipline as
-    sources/formats.py: bounded, content-addressed per sf, no Spark
-    needed so the oracle can stage independently)."""
-    import os
-    import tempfile
-
+    Deterministic bounded extracts via pyarrow (no Spark needed, so the
+    oracle can stage independently)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    base = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(tempfile.gettempdir(), f"cn_spark_evolve_{base}")
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         t = pq.read_table(
             os.path.join(sf_dir, "events.parquet"),
             columns=["event_id", "user_id", "value"],
         )
-        os.makedirs(path, exist_ok=True)
         g1 = t.filter(pc.field("event_id") < 1000)
         g2 = t.filter(
             (pc.field("event_id") >= 1000) & (pc.field("event_id") < 2000)
@@ -819,28 +808,18 @@ def stage_evolved_events(sf_dir: str) -> str:
                 pa.scalar("app"),
             ),
         )
-        pq.write_table(g1, os.path.join(path, "gen1.parquet"))
-        pq.write_table(g2, os.path.join(path, "gen2.parquet"))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return path
+        pq.write_table(g1, os.path.join(tmp, "gen1.parquet"))
+        pq.write_table(g2, os.path.join(tmp, "gen2.parquet"))
+
+    return staged("evolve", build, sf_dir)
 
 
 def _evolve_oracle() -> str:
-    import os
+    # function-local: a module-level import would register formats' queries
+    # ahead of this module's and reorder the registry
+    from conceptnetwork_spark.sources.formats import _try_stage
 
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR") or os.environ.get(
-        "SPARK_GRAFT_TEST_SF"
-    ) or "/root/testdata/sf0.01"
-    try:
-        path = stage_evolved_events(sf)
-    except (FileNotFoundError, OSError):
-        import tempfile
-
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"cn_spark_evolve_{os.path.basename(sf.rstrip('/'))}",
-        )
+    path = _try_stage(stage_evolved_events, "evolve", "").rstrip("/")
     return f"""
     SELECT event_id, user_id, ROUND(value, 4) AS value, channel
     FROM read_parquet('{path}/gen*.parquet', union_by_name=true)
@@ -993,48 +972,36 @@ def _wap_publish(spark: SparkSession, sf_dir: str) -> str:
     lands in a staging dir; the audit re-READS the staged files and checks
     row count + key checksum against the source aggregate; only then is
     the staging dir renamed into the published location (atomic on POSIX).
-    A failed audit leaves the published path untouched. Idempotent per
-    sf_dir."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
+    A failed audit raises inside the build, so nothing is published."""
 
-    base = os.path.basename(sf_dir.rstrip("/"))
-    published = os.path.join(tempfile.gettempdir(), f"cn_spark_wap_{base}")
-    if os.path.exists(os.path.join(published, "_AUDITED")):
-        return published
-    src = (
-        Catalog(spark, sf_dir)
-        .orders.where(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("price"))
-    )
-    expected = src.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32(F.col("o_orderkey").cast("string"))).alias("ck"),
-    ).collect()[0]
-    staging = published + f".stage.{uuid.uuid4().hex[:8]}"
-    src.write.mode("overwrite").parquet(staging)
-    audited = (
-        spark.read.parquet(staging)
-        .agg(
+    def build(tmp: str) -> None:
+        src = (
+            Catalog(spark, sf_dir)
+            .orders.where(F.col("o_orderpriority") == "1-URGENT")
+            .select(
+                "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("price")
+            )
+        )
+        expected = src.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.crc32(F.col("o_orderkey").cast("string"))).alias("ck"),
+        ).collect()[0]
+        src.write.mode("overwrite").parquet(tmp)
+        audited = (
+            spark.read.parquet(tmp)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.crc32(F.col("o_orderkey").cast("string"))).alias("ck"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    if (audited["n"], audited["ck"]) != (expected["n"], expected["ck"]):
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"WAP audit failed: staged ({audited['n']}, {audited['ck']}) != "
-            f"expected ({expected['n']}, {expected['ck']}); publish aborted"
-        )
-    open(os.path.join(staging, "_AUDITED"), "w").close()
-    try:
-        os.rename(staging, published)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # concurrent publisher won
-    return published
+        if (audited["n"], audited["ck"]) != (expected["n"], expected["ck"]):
+            raise RuntimeError(
+                f"WAP audit failed: staged ({audited['n']}, {audited['ck']}) != "
+                f"expected ({expected['n']}, {expected['ck']}); publish aborted"
+            )
+
+    return staged("wap", build, sf_dir)
 
 
 @register(
@@ -1076,14 +1043,9 @@ def _dynamic_overwrite(spark: SparkSession, sf_dir: str) -> str:
     only), then re-run the urgent partition alone with full data under
     dynamic partitionOverwriteMode. Dynamic mode replaces ONLY the
     partitions present in the second write — static mode would delete the
-    other four. Idempotent per sf_dir."""
-    import os
-    import tempfile
+    other four."""
 
-    base = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(tempfile.gettempdir(), f"cn_spark_dynovr_{base}")
-    done = os.path.join(path, "_BACKFILLED")
-    if not os.path.exists(done):
+    def build(tmp: str) -> None:
         o = Catalog(spark, sf_dir).orders
         agg = lambda df: (  # noqa: E731
             df.groupBy("o_orderpriority", (F.col("o_custkey") % 10).alias("bucket"))
@@ -1098,15 +1060,15 @@ def _dynamic_overwrite(spark: SparkSession, sf_dir: str) -> str:
         )
         agg(stale).write.mode("overwrite").partitionBy(
             "o_orderpriority"
-        ).parquet(path)
+        ).parquet(tmp)
         # partition-scoped re-run: only the urgent partition is in this
         # frame; dynamic mode must leave the other four untouched
         fix = agg(o.where(F.col("o_orderpriority") == "1-URGENT"))
         fix.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy("o_orderpriority").parquet(path)
-        open(done, "w").close()
-    return path
+        ).partitionBy("o_orderpriority").parquet(tmp)
+
+    return staged("dynovr", build, sf_dir)
 
 
 @register(
@@ -1483,46 +1445,30 @@ def stage_dv_table(sf_dir: str) -> tuple[str, str]:
     """Stage a bounded orders extract as DV_N_FILES parquet files (sorted
     by o_orderkey, contiguous slices — so each row's (file, row_index) is
     closed-form) plus a deletion-vector parquet of the POSITIONS of rows
-    with o_orderkey % 7 == 0. Idempotent per sf_dir; pyarrow only."""
-    import os
-    import uuid
-
+    with o_orderkey % 7 == 0. pyarrow only."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from conceptnetwork_spark.sources.formats import _stage_dir
-
-    base = _stage_dir(sf_dir, "dv")
-    base_dir = os.path.join(base, "orders_base")
-    dv_path = os.path.join(base, "deletes.parquet")
-    if not (os.path.isdir(base_dir) and os.path.exists(dv_path)):
+    def build(tmp: str) -> None:
         t = pq.read_table(
             os.path.join(sf_dir, "orders.parquet"),
             columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
             filters=pc.field("o_orderkey") < 4000,
         ).sort_by("o_orderkey")
-        tmp = f"{base_dir}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        files, positions = [], {"file_name": [], "row_index": []}
+        os.makedirs(os.path.join(tmp, "orders_base"))
+        positions = {"file_name": [], "row_index": []}
         n = len(t)
         for i in range(DV_N_FILES):
             lo, hi = i * n // DV_N_FILES, (i + 1) * n // DV_N_FILES
             part = t.slice(lo, hi - lo)
             fname = f"part-{i}.parquet"
-            pq.write_table(part, os.path.join(tmp, fname))
+            pq.write_table(part, os.path.join(tmp, "orders_base", fname))
             keys = part["o_orderkey"].to_pylist()
             for pos, k in enumerate(keys):
                 if k % 7 == 0:
                     positions["file_name"].append(fname)
                     positions["row_index"].append(pos)
-        try:
-            os.rename(tmp, base_dir)
-        except OSError:  # concurrent stager won
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-        dv_tmp = dv_path + f".{uuid.uuid4().hex[:8]}.tmp"
         pq.write_table(
             pa.table(
                 {
@@ -1530,16 +1476,15 @@ def stage_dv_table(sf_dir: str) -> tuple[str, str]:
                     "row_index": pa.array(positions["row_index"], pa.int64()),
                 }
             ),
-            dv_tmp,
+            os.path.join(tmp, "deletes.parquet"),
         )
-        os.replace(dv_tmp, dv_path)
-    return base_dir, dv_path
+
+    base = staged("dv", build, sf_dir)
+    return os.path.join(base, "orders_base"), os.path.join(base, "deletes.parquet")
 
 
 def _dv_oracle() -> str:
-    from conceptnetwork_spark.sources.formats import _oracle_sf_dir
-
-    base_dir, _ = stage_dv_table(_oracle_sf_dir())
+    base_dir, _ = stage_dv_table(oracle_sf_dir())
     return f"""
     SELECT o_orderkey, o_orderstatus, ROUND(o_totalprice, 4) AS totalprice
     FROM '{base_dir}/*.parquet'
@@ -1744,30 +1689,16 @@ def stage_orders_rangefiles(sf_dir: str) -> str:
     o_orderdate (chunk_00..chunk_07, deterministic equal-row slices of the
     date-sorted table) — the layout d35_compact_files/d35_zorder_key
     produce, rebuilt here with pyarrow so ORACLE resolution never depends
-    on a SparkSession. Idempotent per (sf_dir, source fingerprint):
-    regenerated testdata at the same path restages instead of replaying a
-    stale fixture. Fixture-only staging (a 3-column projection, bounded),
-    never a data path — at 100 TB the engine harvests stats from files
-    already written by the table format.
+    on a SparkSession. Fixture-only staging (a 3-column projection,
+    bounded), never a data path — at 100 TB the engine harvests stats from
+    files already written by the table format.
     """
-    import os as _os
-    import tempfile as _tempfile
-
     import pyarrow.parquet as _pq
 
-    from conceptnetwork_spark.sources.formats import _sf_fingerprint
-
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        f"cn_spark_fileskip_{_os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_sf_fingerprint(sf_dir)}",
-    )
-    marker = _os.path.join(base, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(base, exist_ok=True)
+    def build(tmp: str) -> None:
         t = (
             _pq.read_table(
-                _os.path.join(sf_dir, "orders.parquet"),
+                os.path.join(sf_dir, "orders.parquet"),
                 columns=["o_orderkey", "o_orderdate", "o_totalprice"],
             )
             .to_pandas()
@@ -1779,17 +1710,14 @@ def stage_orders_rangefiles(sf_dir: str) -> str:
         for i in range(FILE_SKIP_N_FILES):
             chunk = t.iloc[i * per : (i + 1) * per]
             chunk.to_parquet(
-                _os.path.join(base, f"chunk_{i:02d}.parquet"), index=False
+                os.path.join(tmp, f"chunk_{i:02d}.parquet"), index=False
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return base
+
+    return staged("fileskip", build, sf_dir)
 
 
 def _file_skip_oracle() -> str:
-    from conceptnetwork_spark.sources.formats import _oracle_sf_dir
-
-    d = stage_orders_rangefiles(_oracle_sf_dir())
+    d = stage_orders_rangefiles(oracle_sf_dir())
     return f"""
     WITH f AS (
       SELECT regexp_extract(filename, '[^/]+$') AS file,
@@ -1977,25 +1905,12 @@ def stage_orders_fragfiles(sf_dir: str) -> str:
     deterministic PSEUDO-RANDOM order (Knuth multiplicative hash of the
     key) sliced into the same number of files — the layout a parallel
     unordered ingest leaves behind, where every file spans nearly the full
-    key range. Fixture-only staging; idempotent per (sf_dir, source
-    fingerprint) so regenerated testdata restages instead of replaying."""
-    import os as _os
-    import tempfile as _tempfile
-
+    key range. Fixture-only staging."""
     import pyarrow.parquet as _pq
 
-    from conceptnetwork_spark.sources.formats import _sf_fingerprint
-
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        f"cn_spark_fragfiles_{_os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_sf_fingerprint(sf_dir)}",
-    )
-    marker = _os.path.join(base, "_DONE")
-    if not _os.path.exists(marker):
-        _os.makedirs(base, exist_ok=True)
+    def build(tmp: str) -> None:
         t = _pq.read_table(
-            _os.path.join(sf_dir, "orders.parquet"),
+            os.path.join(sf_dir, "orders.parquet"),
             columns=["o_orderkey", "o_orderdate", "o_totalprice"],
         ).to_pandas()
         t["_h"] = (t["o_orderkey"] * 2654435761) % (1 << 32)
@@ -2008,18 +1923,15 @@ def stage_orders_fragfiles(sf_dir: str) -> str:
         per = -(-n // FILE_SKIP_N_FILES)
         for i in range(FILE_SKIP_N_FILES):
             t.iloc[i * per : (i + 1) * per].to_parquet(
-                _os.path.join(base, f"chunk_{i:02d}.parquet"), index=False
+                os.path.join(tmp, f"chunk_{i:02d}.parquet"), index=False
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return base
+
+    return staged("fragfiles", build, sf_dir)
 
 
 def _clustering_depth_oracle() -> str:
-    from conceptnetwork_spark.sources.formats import _oracle_sf_dir
-
-    clustered = stage_orders_rangefiles(_oracle_sf_dir())
-    frag = stage_orders_fragfiles(_oracle_sf_dir())
+    clustered = stage_orders_rangefiles(oracle_sf_dir())
+    frag = stage_orders_fragfiles(oracle_sf_dir())
     return f"""
     WITH stats AS (
       SELECT 'clustered' AS layout, regexp_extract(filename, '[^/]+$') AS file,

@@ -22,6 +22,7 @@ from pyspark.sql.types import DoubleType
 from conceptnetwork_spark.catalog import Catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import staged
 
 
 def _dot(a, b):
@@ -607,8 +608,8 @@ def stage_clustered_embeddings(
       NOT axis-aligned — the hard case for PQ's independent-subspace
       quantizer.
 
-    Deterministic (seeded), idempotent, pyarrow-only. Returns a directory
-    laid out like a scale-factor dir (embeddings.parquet with the same
+    Deterministic (seeded), pyarrow-only. Returns a directory laid out
+    like a scale-factor dir (embeddings.parquet with the same
     vec_id/embedding/label schema), so every d30 ANN query runs on it
     unchanged with the fixture path as sf_dir. Row order is a seeded
     permutation, so the query set (vec_id < 5) spans clusters instead of
@@ -620,52 +621,39 @@ def stage_clustered_embeddings(
     1.00 regardless of data shape — measured across mean_scale 0.7-1.4.
     At 20,000 the budgets bind (PQ measured 0.98) and the floors actually
     discriminate a broken retriever from a working one."""
-    import tempfile
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_annfix_{n}_{dim}_{k}_{seed}"
-        f"_{mean_scale}_{scale_lo}_{scale_hi}",
+    def build(tmp: str) -> None:
+        rng = np.random.RandomState(seed)
+        # Zipf cluster mass -> integer counts summing to n
+        w = 1.0 / (np.arange(k) + 1.0)
+        w /= w.sum()
+        counts = np.floor(w * n).astype(int)
+        counts[0] += n - counts.sum()
+        means = rng.randn(k, dim) * mean_scale
+        rot = np.linalg.qr(rng.randn(dim, dim))[0]
+        parts, labels = [], []
+        for c in range(k):
+            scales = np.exp(rng.uniform(np.log(scale_lo), np.log(scale_hi), size=dim))
+            parts.append(means[c] + rng.randn(counts[c], dim) * scales)
+            labels.append(np.full(counts[c], c))
+        x = (np.vstack(parts) @ rot.T).astype(np.float32)
+        lab = np.concatenate(labels).astype(np.int32)
+        perm = rng.permutation(n)
+        x, lab = x[perm], lab[perm]
+        table = pa.table(
+            {
+                "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+                "embedding": pa.array(list(x), pa.list_(pa.float32())),
+                "label": pa.array(lab),
+            }
+        )
+        pq.write_table(table, os.path.join(tmp, "embeddings.parquet"))
+
+    return staged(
+        f"annfix_{n}_{dim}_{k}_{seed}_{mean_scale}_{scale_lo}_{scale_hi}", build
     )
-    out = os.path.join(out_dir, "embeddings.parquet")
-    if os.path.exists(out):
-        return out_dir
-    rng = np.random.RandomState(seed)
-    # Zipf cluster mass -> integer counts summing to n
-    w = 1.0 / (np.arange(k) + 1.0)
-    w /= w.sum()
-    counts = np.floor(w * n).astype(int)
-    counts[0] += n - counts.sum()
-    means = rng.randn(k, dim) * mean_scale
-    rot = np.linalg.qr(rng.randn(dim, dim))[0]
-    parts, labels = [], []
-    for c in range(k):
-        scales = np.exp(rng.uniform(np.log(scale_lo), np.log(scale_hi), size=dim))
-        parts.append(means[c] + rng.randn(counts[c], dim) * scales)
-        labels.append(np.full(counts[c], c))
-    x = (np.vstack(parts) @ rot.T).astype(np.float32)
-    lab = np.concatenate(labels).astype(np.int32)
-    perm = rng.permutation(n)
-    x, lab = x[perm], lab[perm]
-    table = pa.table(
-        {
-            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-            "embedding": pa.array(list(x), pa.list_(pa.float32())),
-            "label": pa.array(lab),
-        }
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = out + f".{uuid.uuid4().hex[:8]}.tmp"
-    pq.write_table(table, tmp)
-    try:
-        os.replace(tmp, out)
-    except OSError:
-        os.unlink(tmp)
-    return out_dir
 
 
 # In-process ANN index cache: codebooks + encoded codes (and IVF cells)

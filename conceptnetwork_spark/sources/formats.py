@@ -4,12 +4,12 @@ faithful — the reference's only raw input format is newline-delimited text,
 two schema-bearing spellings of that shape every ingestion pipeline needs).
 
 Each declared query STAGES a deterministic extract of the parquet testdata
-into the format under test (one-time, content-addressed path per scale
-factor), then reads it back through the Spark source with an explicit
-schema — proving the connector end to end: header handling, quoting, type
-coercion, and projection. The DuckDB oracle reads the SAME staged file with
-its own CSV/JSON reader, so the two engines agree on the parsed bytes, not
-just on parquet.
+into the format under test (a ``sources/staging.py`` stage), then reads it
+back through the Spark source with an explicit schema — proving the
+connector end to end: header handling, quoting, type coercion, and
+projection. The DuckDB oracle reads the SAME staged file with its own
+CSV/JSON reader, so the two engines agree on the parsed bytes, not just on
+parquet.
 
 Scale note: both sources are splittable line formats — at 100 TB a CSV/JSON
 scan parallelizes by HDFS block exactly like text; schema is explicit (no
@@ -21,12 +21,12 @@ unprojected columns before the plan).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import oracle_sf_dir, stage_path, staged
 
 # Staging is a FIXTURE path (bounded extracts feeding the connector oracle),
 # never a data path: refuse to funnel anything fact-table-sized through the
@@ -34,98 +34,42 @@ from conceptnetwork_spark.registry import register
 # via spark.read, it never stages.
 _STAGE_ROW_CEILING = 100_000
 
-def _oracle_sf_dir() -> str:
-    """SINGLE source of truth for the sf dir the ORACLE runs at: the
-    dedicated override wins, else the pytest harness's test-sf override,
-    else the driver default. Resolved lazily at oracle-request time so a
-    test that only sets SPARK_GRAFT_TEST_SF cannot diverge from the path
-    embedded in the oracle SQL."""
-    return (
-        os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR")
-        or os.environ.get("SPARK_GRAFT_TEST_SF")
-        or "/root/testdata/sf0.01"
-    )
 
-
-def _sf_fingerprint(sf_dir: str) -> str:
-    """Short content fingerprint (names, sizes, mtimes of every parquet
-    under sf_dir). Baked into every staging-dir name so regenerating the
-    testdata at the SAME path invalidates all cached fixture stages instead
-    of silently replaying stale bytes across sessions (same contract as
-    streaming.stateful._src_fingerprint). Cached per-process: staging dirs
-    must not flap mid-session if the driver regenerates data underneath."""
-    cached = _SF_FP_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    import hashlib
-
-    h = hashlib.md5()
-    try:
-        for name in sorted(os.listdir(sf_dir)):
-            p = os.path.join(sf_dir, name)
-            if os.path.isdir(p):
-                for root, _dirs, files in sorted(os.walk(p)):
-                    for fn in sorted(files):
-                        st = os.stat(os.path.join(root, fn))
-                        h.update(f"{name}/{fn}:{st.st_size}:{st.st_mtime_ns}".encode())
-            else:
-                st = os.stat(p)
-                h.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        pass
-    fp = h.hexdigest()[:10]
-    _SF_FP_CACHE[sf_dir] = fp
-    return fp
-
-
-_SF_FP_CACHE: dict[str, str] = {}
-
-
-def _stage_dir(sf_dir: str, fmt: str) -> str:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"cn_spark_{fmt}_{base}_{_sf_fingerprint(sf_dir)}"
-    )
+def _check_ceiling(n_rows: int, what: str) -> None:
+    if n_rows > _STAGE_ROW_CEILING:
+        raise ValueError(
+            f"refusing to stage {n_rows} rows to {what} "
+            f"(ceiling {_STAGE_ROW_CEILING}); staging is for bounded "
+            "oracle fixtures only — read big tables in place"
+        )
 
 
 def stage_nation_csv(sf_dir: str) -> str:
     """Write nation as ONE deterministic csv file (tiny dim table; single
-    file so the oracle path is stable). Idempotent per sf_dir. Reads the
-    parquet with pyarrow directly — no SparkSession needed, so oracle
-    staging cannot depend on Spark query execution order."""
+    file so the oracle path is stable). Reads the parquet with pyarrow
+    directly — no SparkSession needed, so oracle staging cannot depend on
+    Spark query execution order."""
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "csv")
-    out = os.path.join(path, "nation.csv")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         n = (
             pq.read_table(os.path.join(sf_dir, "nation.parquet"))
             .to_pandas()
             .sort_values("n_nationkey")
         )
-        if len(n) > _STAGE_ROW_CEILING:
-            raise ValueError(
-                f"refusing to stage {len(n)} rows to a single local csv "
-                f"(ceiling {_STAGE_ROW_CEILING}); staging is for bounded "
-                "oracle fixtures only — read big tables in place"
-            )
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        n.to_csv(tmp, index=False)
-        os.replace(tmp, out)
-    return out
+        _check_ceiling(len(n), "a single local csv")
+        n.to_csv(os.path.join(tmp, "nation.csv"), index=False)
+
+    return os.path.join(staged("csv", build, sf_dir), "nation.csv")
 
 
 def stage_orders_json(sf_dir: str) -> str:
     """Write a bounded orders extract as ONE json-lines file (deterministic
-    subset + order). Idempotent per sf_dir; pyarrow filter pushdown keeps
-    the read bounded too."""
+    subset + order); pyarrow filter pushdown keeps the read bounded too."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "json")
-    out = os.path.join(path, "orders.json")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         o = (
             pq.read_table(
                 os.path.join(sf_dir, "orders.parquet"),
@@ -141,28 +85,21 @@ def stage_orders_json(sf_dir: str) -> str:
             .to_pandas()
             .sort_values("o_orderkey")
         )
-        if len(o) > _STAGE_ROW_CEILING:
-            raise ValueError(
-                f"refusing to stage {len(o)} rows to a single local json "
-                f"(ceiling {_STAGE_ROW_CEILING}); staging is for bounded "
-                "oracle fixtures only — read big tables in place"
-            )
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        o.to_json(tmp, orient="records", lines=True)
-        os.replace(tmp, out)
-    return out
+        _check_ceiling(len(o), "a single local json")
+        o.to_json(os.path.join(tmp, "orders.json"), orient="records", lines=True)
+
+    return os.path.join(staged("json", build, sf_dir), "orders.json")
 
 
-def _try_stage(stage_fn, fmt: str, fname: str) -> str:
+def _try_stage(stage_fn, name: str, fname: str) -> str:
     """Stage via ``stage_fn`` at the oracle sf dir; on a bare host (no
-    testdata) fall back to the deterministic path — the Spark query's own
+    testdata) fall back to the stage's path — the Spark query's own
     staging call fills it in before any oracle runs."""
-    sf = _oracle_sf_dir()
+    sf = oracle_sf_dir()
     try:
         return stage_fn(sf)
-    except (FileNotFoundError, OSError):
-        return os.path.join(_stage_dir(sf, fmt), fname)
+    except OSError:
+        return os.path.join(stage_path(name, sf), fname)
 
 
 def _csv_oracle() -> str:
@@ -240,27 +177,18 @@ def d01_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def stage_supplier_orc(sf_dir: str) -> str:
     """Write supplier as ONE deterministic ORC file via pyarrow (no Spark
-    needed, same staging discipline as the csv/json fixtures)."""
+    needed)."""
     import pyarrow.compute as pc
     import pyarrow.orc as po
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "orc")
-    out = os.path.join(path, "supplier.orc")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "supplier.parquet"))
-        if t.num_rows > _STAGE_ROW_CEILING:
-            raise ValueError(
-                f"refusing to stage {t.num_rows} rows to a single local orc "
-                f"(ceiling {_STAGE_ROW_CEILING}); staging is for bounded "
-                "oracle fixtures only — read big tables in place"
-            )
+        _check_ceiling(t.num_rows, "a single local orc")
         t = t.take(pc.sort_indices(t, sort_keys=[("s_suppkey", "ascending")]))
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        po.write_table(t, tmp)
-        os.replace(tmp, out)
-    return out
+        po.write_table(t, os.path.join(tmp, "supplier.orc"))
+
+    return os.path.join(staged("orc", build, sf_dir), "supplier.orc")
 
 
 @register(
@@ -296,22 +224,19 @@ def d01_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def stage_orders_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by o_orderpriority (hive layout, 5 dirs) —
-    the standard lakehouse sink shape. Idempotent per sf_dir via a _DONE
-    marker; written ONCE by Spark itself (this is a sink test, so the sink
-    must be Spark's)."""
-    path = _stage_dir(sf_dir, "part_orders")
-    marker = os.path.join(path, "_DONE")
-    if not os.path.exists(marker):
+    the standard lakehouse sink shape; written by Spark itself (this is a
+    sink test, so the sink must be Spark's)."""
+
+    def build(tmp: str) -> None:
         (
             spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
             .repartition("o_orderpriority")
             .write.mode("overwrite")
             .partitionBy("o_orderpriority")
-            .parquet(path)
+            .parquet(tmp)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return path
+
+    return staged("part_orders", build, sf_dir)
 
 
 @register(
@@ -350,17 +275,13 @@ def stage_mixed_csv(sf_dir: str) -> str:
     which rows are salvageable."""
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "csv_bad")
-    out = os.path.join(path, "nation_mixed.csv")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         n = (
             pq.read_table(os.path.join(sf_dir, "nation.parquet"))
             .to_pandas()
             .sort_values("n_nationkey")
         )
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        with open(tmp, "w") as fh:
+        with open(os.path.join(tmp, "nation_mixed.csv"), "w") as fh:
             fh.write("n_nationkey,n_name,n_regionkey\n")
             for i, row in enumerate(n.itertuples(index=False)):
                 fh.write(f"{row.n_nationkey},{row.n_name},{row.n_regionkey}\n")
@@ -371,8 +292,8 @@ def stage_mixed_csv(sf_dir: str) -> str:
                     fh.write("oops,BAD_LINE,not-a-number\n")
                 if i % 11 == 5:
                     fh.write("xx,yy,zz\n")  # non-numeric key and region
-        os.replace(tmp, out)
-    return out
+
+    return os.path.join(staged("csv_bad", build, sf_dir), "nation_mixed.csv")
 
 
 def _corrupt_csv_oracle() -> str:
@@ -425,9 +346,7 @@ def stage_doc_text(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "txt")
-    done = os.path.join(path, "_STAGED")
-    if not os.path.exists(done):
+    def build(tmp: str) -> None:
         t = (
             pq.read_table(
                 os.path.join(sf_dir, "documents.parquet"),
@@ -437,24 +356,17 @@ def stage_doc_text(sf_dir: str) -> str:
             .to_pandas()
             .sort_values("doc_id")
         )
-        if len(t) > _STAGE_ROW_CEILING:
-            raise ValueError(
-                f"refusing to stage {len(t)} rows as local text fixtures "
-                f"(ceiling {_STAGE_ROW_CEILING})"
-            )
-        os.makedirs(path, exist_ok=True)
+        _check_ceiling(len(t), "local text fixtures")
         half = len(t) // 2
         for i, chunk in enumerate((t.iloc[:half], t.iloc[half:])):
             lines = [
                 ln.replace("\r", " ").replace("\n", " ").strip()
                 for ln in chunk["text"].tolist()
             ]
-            tmp = os.path.join(path, f"part{i}.txt.tmp")
-            with open(tmp, "w") as fh:
+            with open(os.path.join(tmp, f"part{i}.txt"), "w") as fh:
                 fh.write("\n".join(lines) + "\n")
-            os.replace(tmp, os.path.join(path, f"part{i}.txt"))
-        open(done, "w").close()
-    return path
+
+    return staged("txt", build, sf_dir)
 
 
 def _text_oracle() -> str:
@@ -506,9 +418,7 @@ def stage_binary_files(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "bin")
-    done = os.path.join(path, "_STAGED")
-    if not os.path.exists(done):
+    def build(tmp: str) -> None:
         t = (
             pq.read_table(
                 os.path.join(sf_dir, "documents.parquet"),
@@ -518,17 +428,14 @@ def stage_binary_files(sf_dir: str) -> str:
             .to_pandas()
             .sort_values("doc_id")
         )
-        os.makedirs(path, exist_ok=True)
         for row in t.itertuples(index=False):
             payload = f"DOC {row.doc_id} SRC {row.source}\n{row.text}".encode(
                 "ascii", "replace"
             )
-            tmp = os.path.join(path, f"doc_{row.doc_id:05d}.dat.tmp")
-            with open(tmp, "wb") as fh:
+            with open(os.path.join(tmp, f"doc_{row.doc_id:05d}.dat"), "wb") as fh:
                 fh.write(payload)
-            os.replace(tmp, os.path.join(path, f"doc_{row.doc_id:05d}.dat"))
-        open(done, "w").close()
-    return path
+
+    return staged("bin", build, sf_dir)
 
 
 def _binary_oracle() -> str:
@@ -712,9 +619,7 @@ def stage_mixed_json(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "json_bad")
-    out = os.path.join(path, "orders_mixed.json")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         o = (
             pq.read_table(
                 os.path.join(sf_dir, "orders.parquet"),
@@ -724,9 +629,7 @@ def stage_mixed_json(sf_dir: str) -> str:
             .to_pandas()
             .sort_values("o_orderkey")
         )
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        with open(tmp, "w") as fh:
+        with open(os.path.join(tmp, "orders_mixed.json"), "w") as fh:
             for i, row in enumerate(o.itertuples(index=False)):
                 fh.write(
                     '{"o_orderkey": %d, "o_orderstatus": "%s", '
@@ -737,8 +640,8 @@ def stage_mixed_json(sf_dir: str) -> str:
                     fh.write('{"o_orderkey": 999999, "o_orderst\n')
                 if i % 13 == 7:
                     fh.write("not json at all\n")
-        os.replace(tmp, out)
-    return out
+
+    return os.path.join(staged("json_bad", build, sf_dir), "orders_mixed.json")
 
 
 def _corrupt_json_oracle() -> str:
@@ -791,15 +694,13 @@ def d01_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_nested_orders(sf_dir: str) -> str:
     """Stage a bounded orders extract as ONE parquet file with NESTED
     struct columns (customer{o_custkey,o_orderstatus},
-    pricing{o_totalprice,o_orderpriority,o_comment}) via pyarrow.
-    Idempotent per sf_dir; pyarrow filter pushdown bounds the read."""
+    pricing{o_totalprice,o_orderpriority,o_comment}) via pyarrow; pyarrow
+    filter pushdown bounds the read."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = _stage_dir(sf_dir, "nested")
-    out = os.path.join(path, "orders_nested.parquet")
-    if not os.path.exists(out):
+    def build(tmp: str) -> None:
         t = pq.read_table(
             os.path.join(sf_dir, "orders.parquet"),
             columns=[
@@ -812,11 +713,7 @@ def stage_nested_orders(sf_dir: str) -> str:
             ],
             filters=pc.field("o_orderkey") < 2000,
         ).sort_by("o_orderkey")
-        if len(t) > _STAGE_ROW_CEILING:
-            raise ValueError(
-                f"refusing to stage {len(t)} rows (ceiling "
-                f"{_STAGE_ROW_CEILING}); staging is for bounded fixtures"
-            )
+        _check_ceiling(len(t), "a single local parquet")
         customer = pa.StructArray.from_arrays(
             [t["o_custkey"].combine_chunks(), t["o_orderstatus"].combine_chunks()],
             names=["o_custkey", "o_orderstatus"],
@@ -836,15 +733,13 @@ def stage_nested_orders(sf_dir: str) -> str:
                 "pricing": pricing,
             }
         )
-        os.makedirs(path, exist_ok=True)
-        tmp = out + ".tmp"
-        pq.write_table(nested, tmp)
-        os.replace(tmp, out)
-    return out
+        pq.write_table(nested, os.path.join(tmp, "orders_nested.parquet"))
+
+    return os.path.join(staged("nested", build, sf_dir), "orders_nested.parquet")
 
 
 def _nested_oracle() -> str:
-    path = stage_nested_orders(_oracle_sf_dir())
+    path = stage_nested_orders(oracle_sf_dir())
     return f"""
     SELECT o_orderkey,
            customer.o_custkey AS custkey,

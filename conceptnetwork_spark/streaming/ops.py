@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from conceptnetwork_spark.catalog import Catalog, fix_nanos
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import order_by_mtime, staged
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -803,21 +804,12 @@ def d25_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, event_id, value) triples, one version per batch; at 100 TB
     the same loop is Delta/Iceberg MERGE with the version directory
     replaced by table snapshots."""
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_evstage_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+
+    def build(tmp: str) -> None:
         ev = Catalog(spark, sf_dir).events
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
         ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # concurrent stager won the rename — use theirs
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
-
+    stage = staged("evstage", build, sf_dir)
     schema = spark.read.parquet(stage).schema
     src = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
@@ -939,32 +931,20 @@ def _stage_late_arrival(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as TWO single parquet files in arrival order: the NEWER
     half (ts >= LATE_SPLIT) first, the OLDER half second — so the second
     micro-batch is entirely late data, far below the watermark the first
-    batch advanced. File order is pinned via mtime (the file source
-    processes oldest-modified first)."""
+    batch advanced. File order is pinned via mtime."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_late_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         split = pc.strptime(LATE_SPLIT, format="%Y-%m-%d %H:%M:%S", unit="ns")
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(t.filter(pc.field("ts") >= split), os.path.join(tmp, "b0_new.parquet"))
-        pq.write_table(t.filter(pc.field("ts") < split), os.path.join(tmp, "b1_late.parquet"))
-        now = os.path.getmtime(os.path.join(tmp, "b0_new.parquet"))
-        os.utime(os.path.join(tmp, "b0_new.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(tmp, "b1_late.parquet"), (now, now))
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # concurrent stager won
-            import shutil
+        b0 = os.path.join(tmp, "b0_new.parquet")
+        b1 = os.path.join(tmp, "b1_late.parquet")
+        pq.write_table(t.filter(pc.field("ts") >= split), b0)
+        pq.write_table(t.filter(pc.field("ts") < split), b1)
+        order_by_mtime([b0, b1])
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged("late", build, sf_dir)
 
 
 @register(
@@ -1063,35 +1043,22 @@ def _stage_outer_join(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_ojoin_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         split = pc.strptime(OUTER_SPLIT, format="%Y-%m-%d %H:%M:%S", unit="ns")
         adv = pc.strptime(OUTER_ADV, format="%Y-%m-%d %H:%M:%S", unit="ns")
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(
-            t.filter(pc.field("ts") < split), os.path.join(tmp, "b0_early.parquet")
-        )
+        b0 = os.path.join(tmp, "b0_early.parquet")
+        b1 = os.path.join(tmp, "b1_advance.parquet")
+        pq.write_table(t.filter(pc.field("ts") < split), b0)
         pq.write_table(
             t.filter(
                 (pc.field("ts") >= adv) & (pc.field("event_type") == "purchase")
             ),
-            os.path.join(tmp, "b1_advance.parquet"),
+            b1,
         )
-        now = os.path.getmtime(os.path.join(tmp, "b0_early.parquet"))
-        os.utime(os.path.join(tmp, "b0_early.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(tmp, "b1_advance.parquet"), (now, now))
-        try:
-            os.rename(tmp, stage)
-        except OSError:
-            import shutil
+        order_by_mtime([b0, b1])
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged("ojoin", build, sf_dir)
 
 
 @register(
@@ -1338,11 +1305,7 @@ def _stage_ddw(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_ddw_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         split = pc.strptime(DDW_SPLIT, format="%Y-%m-%d %H:%M:%S", unit="ns")
         t = t.filter(
@@ -1378,22 +1341,15 @@ def _stage_ddw(spark: SparkSession, sf_dir: str) -> str:
             "ts",
             pa.array([far_ts] * band.num_rows, ts_type),
         )
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(pa.concat_tables([t, t]), os.path.join(tmp, "b0_dups.parquet"))
-        pq.write_table(adv, os.path.join(tmp, "b1_advance.parquet"))
-        pq.write_table(far, os.path.join(tmp, "b2_far.parquet"))
-        now = os.path.getmtime(os.path.join(tmp, "b0_dups.parquet"))
-        os.utime(os.path.join(tmp, "b0_dups.parquet"), (now - 120, now - 120))
-        os.utime(os.path.join(tmp, "b1_advance.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(tmp, "b2_far.parquet"), (now, now))
-        try:
-            os.rename(tmp, stage)
-        except OSError:
-            import shutil
+        files = [
+            os.path.join(tmp, f)
+            for f in ("b0_dups.parquet", "b1_advance.parquet", "b2_far.parquet")
+        ]
+        for table, path in zip((pa.concat_tables([t, t]), adv, far), files):
+            pq.write_table(table, path)
+        order_by_mtime(files)
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged("ddw", build, sf_dir)
 
 
 def pd_timedelta_hours(h: int):
@@ -1584,31 +1540,18 @@ def _stage_parity_batches(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_parity_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "events.parquet")).filter(
             pc.field("event_type") == "click"
         )
         even = pc.equal(pc.bit_wise_and(pc.field("event_id"), 1), 0)
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(t.filter(even), os.path.join(tmp, "b0_even.parquet"))
-        pq.write_table(
-            t.filter(pc.invert(even)), os.path.join(tmp, "b1_odd.parquet")
-        )
-        now = os.path.getmtime(os.path.join(tmp, "b0_even.parquet"))
-        os.utime(os.path.join(tmp, "b0_even.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(tmp, "b1_odd.parquet"), (now, now))
-        try:
-            os.rename(tmp, stage)
-        except OSError:
-            import shutil
+        b0 = os.path.join(tmp, "b0_even.parquet")
+        b1 = os.path.join(tmp, "b1_odd.parquet")
+        pq.write_table(t.filter(even), b0)
+        pq.write_table(t.filter(pc.invert(even)), b1)
+        order_by_mtime([b0, b1])
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged("parity", build, sf_dir)
 
 
 @register(
@@ -2095,38 +2038,22 @@ def _stage_late_metrics(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"cn_spark_latem_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    if not os.path.exists(stage):
+    def build(tmp: str) -> None:
         t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
         cut = pc.strptime(LATE_CUTOFF, format="%Y-%m-%d %H:%M:%S", unit="ns")
         adv = pc.strptime("2024-01-09 00:00:00", format="%Y-%m-%d %H:%M:%S", unit="ns")
         old = pc.strptime(LATE_OLD, format="%Y-%m-%d %H:%M:%S", unit="ns")
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(
-            t.filter(pc.field("ts") < cut), os.path.join(tmp, "b0_ontime.parquet")
-        )
-        pq.write_table(
-            t.filter((pc.field("ts") >= adv) & (pc.field("ts") < cut)),
-            os.path.join(tmp, "b1_advance.parquet"),
-        )
-        pq.write_table(
-            t.filter(pc.field("ts") < old), os.path.join(tmp, "b2_late.parquet")
-        )
-        now = os.path.getmtime(os.path.join(tmp, "b0_ontime.parquet"))
-        os.utime(os.path.join(tmp, "b0_ontime.parquet"), (now - 120, now - 120))
-        os.utime(os.path.join(tmp, "b1_advance.parquet"), (now - 60, now - 60))
-        os.utime(os.path.join(tmp, "b2_late.parquet"), (now, now))
-        try:
-            os.rename(tmp, stage)
-        except OSError:
-            import shutil
+        batches = {
+            "b0_ontime.parquet": pc.field("ts") < cut,
+            "b1_advance.parquet": (pc.field("ts") >= adv) & (pc.field("ts") < cut),
+            "b2_late.parquet": pc.field("ts") < old,
+        }
+        files = [os.path.join(tmp, f) for f in batches]
+        for path, pred in zip(files, batches.values()):
+            pq.write_table(t.filter(pred), path)
+        order_by_mtime(files)
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged("latem", build, sf_dir)
 
 
 @register("d26_late_drop_metrics", oracle=None)
@@ -2277,6 +2204,38 @@ SESSION_STREAM_DELAY = "2 hours"
 SESSION_STREAM_CHUNKS = 3
 
 
+def _stage_time_chunks(spark: SparkSession, sf_dir: str, n: int) -> str:
+    """Stage events as n TIME-CONTIGUOUS parquet chunks (global sort by
+    (ts, event_id), chunk = rn*n div total) with ascending mtimes, so the
+    event-time watermark advances monotonically across micro-batches and
+    timer firing is DETERMINISTIC — the oracle recomputes the same chunk
+    boundaries in SQL."""
+    from pyspark.sql import Window
+
+    def build(tmp: str) -> None:
+        ev = Catalog(spark, sf_dir).events
+        total = ev.count()
+        # FIXTURE-ONLY: this unpartitioned global-sort window funnels all rows
+        # through one task. Acceptable for staging sf-sized replay fixtures on
+        # the driver; a production time-chunker would repartitionByRange(ts)
+        # and derive chunk ids from range boundaries instead.
+        w = Window.orderBy("ts", "event_id")
+        chunked = ev.withColumn("rn", F.row_number().over(w) - 1).withColumn(
+            "chunk", F.expr(f"(rn * {n}) div {total}")
+        )
+        files = [os.path.join(tmp, f"b{i}.parquet") for i in range(n)]
+        for i, path in enumerate(files):
+            part = chunked.where(F.col("chunk") == i).drop("rn", "chunk").toPandas()
+            # write MICROsecond timestamps: pandas' default ns unit would land
+            # as parquet TIMESTAMP(NANOS), which this session's nanosAsLong
+            # config reads back as BIGINT — breaking withWatermark
+            part["ts"] = part["ts"].dt.tz_localize("UTC").dt.as_unit("us")
+            part.to_parquet(path, index=False)
+        order_by_mtime(files)
+
+    return staged(f"timechunks{n}", build, sf_dir)
+
+
 @register(
     "d26_stream_session_window",
     # Closed-form oracle: time-contiguous chunks keep the watermark
@@ -2331,10 +2290,6 @@ def d26_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is a per-key state-store operation, never a shuffle of history.
     State partitions sized via scoped_state_partitions (per-partition
     per-batch commit I/O dominates small-key streams)."""
-    # stateful.py imports ops.await_finished at module level, so this
-    # import stays function-local to avoid the cycle
-    from conceptnetwork_spark.streaming.stateful import _stage_time_chunks
-
     stage = _stage_time_chunks(spark, sf_dir, SESSION_STREAM_CHUNKS)
     return run_session_stream_on_stage(spark, stage)
 
@@ -2453,7 +2408,7 @@ def d26_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     heavy path (per-event counting) is a streaming partial aggregate —
     map-side combined before state commit, exactly like the batch twin's
     partial agg."""
-    stage = _stage_time_chunks_cached(spark, sf_dir)
+    stage = _stage_time_chunks(spark, sf_dir, DRIFT_CHUNKS)
     schema = spark.read.parquet(stage).schema
     stream = (
         spark.readStream.schema(schema)
@@ -2521,12 +2476,3 @@ def d26_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day")
     )
-
-
-def _stage_time_chunks_cached(spark: SparkSession, sf_dir: str) -> str:
-    """The session-window op's chunk stage, shared (same chunk count ->
-    same idempotent dir). Function-local import: stateful.py imports
-    ops.await_finished at module level (cycle)."""
-    from conceptnetwork_spark.streaming.stateful import _stage_time_chunks
-
-    return _stage_time_chunks(spark, sf_dir, DRIFT_CHUNKS)

@@ -33,54 +33,24 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from conceptnetwork_spark.catalog import Catalog, fix_nanos
 from conceptnetwork_spark.registry import register
-from conceptnetwork_spark.streaming.ops import await_finished
+from conceptnetwork_spark.sources.staging import staged
+from conceptnetwork_spark.streaming.ops import _stage_time_chunks, await_finished
 
 _OUT_SCHEMA = "user_id long, n_events long, sum_value double"
 _STATE_SCHEMA = "n long, s double"
 
 
-def _src_fingerprint(sf_dir: str) -> str:
-    """Short content fingerprint of the source events.parquet (file names,
-    sizes, mtimes). Baked into every idempotent staging-dir name so that
-    regenerating the testdata at the same path invalidates cached stages
-    instead of silently replaying stale data across sessions."""
-    import hashlib
-
-    src = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for root, _dirs, files in sorted(os.walk(src)):
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root, fn))
-                h.update(f"{fn}:{st.st_size}:{st.st_mtime_ns}".encode())
-    elif os.path.exists(src):
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:10]
-
-
 def stage_event_files(
     spark: SparkSession, sf_dir: str, n_files: int
 ) -> str:
-    """Idempotent n-file copy of events for maxFilesPerTrigger replay; the
-    dir name carries a content fingerprint of the source so regenerated
-    testdata invalidates the cache (never silently replays stale files)."""
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"stateful_src_{os.path.basename(sf_dir.rstrip('/'))}_{_src_fingerprint(sf_dir)}_{n_files}",
-    )
-    if not os.path.exists(stage):
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
+    """n-file copy of events for maxFilesPerTrigger replay."""
+
+    def build(tmp: str) -> None:
         Catalog(spark, sf_dir).events.repartition(n_files).write.mode(
             "overwrite"
         ).parquet(tmp)
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # concurrent stager won
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    return staged(f"events{n_files}", build, sf_dir)
 
 
 def _update_totals(
@@ -300,24 +270,9 @@ def _run_tws_update_log(
     # JVM predates ensure_protobuf()'s PYTHONPATH export
     ship_to_workers(spark)
 
-    # idempotent staging keyed by (sf, n_files): runs share one staged
-    # copy instead of leaking a uuid-named directory per invocation
-    # (checkpoints stay unique per run — state stores cannot be shared)
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"tws_src_{os.path.basename(sf_dir.rstrip('/'))}_{_src_fingerprint(sf_dir)}_{n_files}",
-    )
-    if not os.path.exists(stage):
-        tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-        Catalog(spark, sf_dir).events.repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # concurrent stager won
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    # runs share one staged copy; checkpoints stay unique per run (state
+    # stores cannot be shared)
+    stage = stage_event_files(spark, sf_dir, n_files)
     schema = spark.read.parquet(stage).schema
     stream = fix_nanos(
         spark.readStream.schema(schema)
@@ -636,52 +591,6 @@ if TWSP_AVAILABLE:
 # withheld, at every scale factor (the split is data-derived).
 MATURE_HORIZON_MS = 29 * 86_400_000 + 43_200_000
 TWS_TIMER_FILES = 4
-
-
-def _stage_time_chunks(spark: SparkSession, sf_dir: str, n: int) -> str:
-    """Stage events as n TIME-CONTIGUOUS parquet chunks (global sort by
-    (ts, event_id), chunk = rn*n div total) with ascending mtimes, so the
-    event-time watermark advances monotonically across micro-batches and
-    timer firing is DETERMINISTIC — the oracle recomputes the same chunk
-    boundaries in SQL. Idempotent per sf_dir."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"tws_timechunks_{os.path.basename(sf_dir.rstrip('/'))}_{_src_fingerprint(sf_dir)}_{n}",
-    )
-    if os.path.exists(stage):
-        return stage
-    ev = Catalog(spark, sf_dir).events
-    total = ev.count()
-    # FIXTURE-ONLY: this unpartitioned global-sort window funnels all rows
-    # through one task. Acceptable for staging sf-sized replay fixtures on
-    # the driver; a production time-chunker would repartitionByRange(ts)
-    # and derive chunk ids from range boundaries instead.
-    w = Window.orderBy("ts", "event_id")
-    chunked = ev.withColumn("rn", F.row_number().over(w) - 1).withColumn(
-        "chunk", F.expr(f"(rn * {n}) div {total}")
-    )
-    tmp = f"{stage}.{uuid.uuid4().hex[:8]}.tmp"
-    os.makedirs(tmp)
-    for i in range(n):
-        part = chunked.where(F.col("chunk") == i).drop("rn", "chunk").toPandas()
-        # write MICROsecond timestamps: pandas' default ns unit would land
-        # as parquet TIMESTAMP(NANOS), which this session's nanosAsLong
-        # config reads back as BIGINT — breaking withWatermark
-        part["ts"] = part["ts"].dt.tz_localize("UTC").dt.as_unit("us")
-        path = os.path.join(tmp, f"b{i}.parquet")
-        part.to_parquet(path, index=False)
-        base = os.path.getmtime(path)
-        os.utime(path, (base + i - n, base + i - n))
-    try:
-        os.rename(tmp, stage)
-    except OSError:  # concurrent stager won
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return stage
 
 
 def run_cohort_maturation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,14 +9,14 @@ import os
 
 import pytest
 
-from conceptnetwork_spark.sources import formats
+from conceptnetwork_spark.sources import formats, staging
 from tests.conftest import SF_ORACLE
 
 
 def test_stage_ceiling_rejects_fact_table(monkeypatch, tmp_path):
     monkeypatch.setattr(formats, "_STAGE_ROW_CEILING", 5)
     monkeypatch.setattr(
-        formats, "_stage_dir", lambda sf_dir, fmt: str(tmp_path / fmt)
+        staging, "stage_path", lambda name, sf_dir=None: str(tmp_path / name)
     )
     with pytest.raises(ValueError, match="refusing to stage"):
         formats.stage_nation_csv(SF_ORACLE)  # 25 rows > patched ceiling 5
@@ -28,10 +28,10 @@ def test_oracle_resolution_stages_fixture_lazily():
     # resolving the oracle SQL (NOT importing the module) stages the file
     # and embeds its path — no import-time /tmp side effects
     sql = formats._csv_oracle()
-    path = formats.stage_nation_csv(formats._oracle_sf_dir())
+    path = formats.stage_nation_csv(staging.oracle_sf_dir())
     assert path in sql and os.path.exists(path)
     sql_j = formats._json_oracle()
-    path_j = formats.stage_orders_json(formats._oracle_sf_dir())
+    path_j = formats.stage_orders_json(staging.oracle_sf_dir())
     assert path_j in sql_j and os.path.exists(path_j)
 
 
@@ -40,9 +40,9 @@ def test_oracle_sf_dir_single_source_of_truth(monkeypatch, tmp_path):
     # staging too (the r3 divergence: oracle keyed off its own env var)
     monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF_DIR", raising=False)
     monkeypatch.setenv("SPARK_GRAFT_TEST_SF", str(tmp_path))
-    assert formats._oracle_sf_dir() == str(tmp_path)
+    assert staging.oracle_sf_dir() == str(tmp_path)
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", "/elsewhere")
-    assert formats._oracle_sf_dir() == "/elsewhere"
+    assert staging.oracle_sf_dir() == "/elsewhere"
 
 
 def test_staging_is_idempotent_and_spark_free():

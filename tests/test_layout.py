@@ -116,14 +116,14 @@ def test_staging_restages_on_source_change(tmp_path):
         stage_orders_fragfiles,
         stage_orders_rangefiles,
     )
-    from conceptnetwork_spark.sources import formats
+    from conceptnetwork_spark.sources import staging
 
     sf = tmp_path / "sfX"
     sf.mkdir()
     src = str(sf / "orders.parquet")
     full = pq.read_table(f"{SF_ORACLE}/orders.parquet")
 
-    formats._SF_FP_CACHE.clear()
+    staging._SF_FP_CACHE.clear()
     pq.write_table(full.slice(0, 100), src)
     d1_range = stage_orders_rangefiles(str(sf))
     d1_frag = stage_orders_fragfiles(str(sf))
@@ -131,11 +131,11 @@ def test_staging_restages_on_source_change(tmp_path):
     assert n1 == 100 and pq.read_table(d1_frag).num_rows == 100
 
     # same content, new session: must hit the same staging dir (idempotent)
-    formats._SF_FP_CACHE.clear()
+    staging._SF_FP_CACHE.clear()
     assert stage_orders_rangefiles(str(sf)) == d1_range
 
     # regenerate the source in place with DIFFERENT content, new session
-    formats._SF_FP_CACHE.clear()
+    staging._SF_FP_CACHE.clear()
     pq.write_table(full.slice(0, 250), src)
     d2_range = stage_orders_rangefiles(str(sf))
     d2_frag = stage_orders_fragfiles(str(sf))
@@ -145,7 +145,7 @@ def test_staging_restages_on_source_change(tmp_path):
 
     for d in (d1_range, d1_frag, d2_range, d2_frag):
         shutil.rmtree(d, ignore_errors=True)
-    formats._SF_FP_CACHE.clear()
+    staging._SF_FP_CACHE.clear()
 
 
 def test_zorder_row_conservation_and_cache_release(spark):

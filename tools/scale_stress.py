@@ -17,7 +17,8 @@ Gates (the 100-TB posture check the sf0.1 audit can't give):
     super-linear jump means a lost broadcast or quadratic fanout that
     sf0.1 was too small to expose).
 
-The staged dir is idempotent per (source fingerprint, factor) under /tmp.
+The blow-up is staged once per (factor, skew, source sf dir) through
+conceptnetwork_spark/sources/staging.py.
 Prints one JSON line; exits nonzero on any gate violation. Run via
 `pytest -m slow tests/test_scale_stress.py` or directly.
 
@@ -103,62 +104,55 @@ def hot_user(factor: int) -> int:
 def build_scaled_dir(
     spark, src_sf: str, factor: int = FACTOR, skew_pct: int = 0
 ) -> str:
-    from pyspark.sql import functions as F
-
-    from conceptnetwork_spark.sources.formats import _sf_fingerprint
-
-    tag = f"skew{skew_pct}_" if skew_pct else ""
-    out = os.path.join(
-        "/tmp", f"cn_spark_scale{factor}x_{tag}{_sf_fingerprint(src_sf)}"
-    )
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for t, keys in BLOWUP_KEYS.items():
-        df = spark.read.parquet(os.path.join(src_sf, f"{t}.parquet"))
-        df = df.withColumn(
-            "_copy", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
-        )
-        for k in keys:
-            # long arithmetic: copy*KEY_OFF overflows int32 past factor 127
-            df = df.withColumn(
-                k,
-                F.col(k).cast("long")
-                + F.col("_copy").cast("long") * F.lit(KEY_OFF).cast("long"),
-            )
-        if skew_pct and t == "events":
-            # Hot-key variant: ~skew_pct% of the blown-up event rows land
-            # on ONE user (deterministic hash pick over the non-original
-            # copies; event_id stays unique). At factor 100 / skew 20 the
-            # hot user holds ~2M of 10M events vs a ~670-row median — the
-            # power-law reality the skew probes exercise.
-            df = df.withColumn(
-                "user_id",
-                F.when(
-                    (F.col("_copy") > 0)
-                    & (
-                        F.pmod(F.xxhash64("event_id", "_copy"), F.lit(100))
-                        < skew_pct
-                    ),
-                    F.lit(hot_user(factor)).cast("long"),
-                ).otherwise(F.col("user_id")),
-            )
-        df.drop("_copy").write.mode("overwrite").parquet(
-            os.path.join(out, f"{t}.parquet")
-        )
     import shutil
 
-    for t in COPY_TABLES:
-        src = os.path.join(src_sf, f"{t}.parquet")
-        dst = os.path.join(out, f"{t}.parquet")
-        if os.path.isdir(src):
-            shutil.copytree(src, dst, dirs_exist_ok=True)
-        else:
-            shutil.copyfile(src, dst)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return out
+    from pyspark.sql import functions as F
+
+    from conceptnetwork_spark.sources.staging import staged
+
+    def build(out: str) -> None:
+        for t, keys in BLOWUP_KEYS.items():
+            df = spark.read.parquet(os.path.join(src_sf, f"{t}.parquet"))
+            df = df.withColumn(
+                "_copy", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
+            )
+            for k in keys:
+                # long arithmetic: copy*KEY_OFF overflows int32 past factor 127
+                df = df.withColumn(
+                    k,
+                    F.col(k).cast("long")
+                    + F.col("_copy").cast("long") * F.lit(KEY_OFF).cast("long"),
+                )
+            if skew_pct and t == "events":
+                # Hot-key variant: ~skew_pct% of the blown-up event rows land
+                # on ONE user (deterministic hash pick over the non-original
+                # copies; event_id stays unique). At factor 100 / skew 20 the
+                # hot user holds ~2M of 10M events vs a ~670-row median — the
+                # power-law reality the skew probes exercise.
+                df = df.withColumn(
+                    "user_id",
+                    F.when(
+                        (F.col("_copy") > 0)
+                        & (
+                            F.pmod(F.xxhash64("event_id", "_copy"), F.lit(100))
+                            < skew_pct
+                        ),
+                        F.lit(hot_user(factor)).cast("long"),
+                    ).otherwise(F.col("user_id")),
+                )
+            df.drop("_copy").write.mode("overwrite").parquet(
+                os.path.join(out, f"{t}.parquet")
+            )
+        for t in COPY_TABLES:
+            src = os.path.join(src_sf, f"{t}.parquet")
+            dst = os.path.join(out, f"{t}.parquet")
+            if os.path.isdir(src):
+                shutil.copytree(src, dst)
+            else:
+                shutil.copyfile(src, dst)
+
+    name = f"scale{factor}x" + (f"_skew{skew_pct}" if skew_pct else "")
+    return staged(name, build, src_sf)
 
 
 def main() -> None:

@@ -17,7 +17,7 @@ append mode):
      to the three columns the query reads (ts, user_id, value).
   2. Stages it as `--batches` TIME-RANGED parquet files via
      repartitionByRange(ts) — the distributed form of the fixture-only
-     driver-side chunker in streaming/stateful.py:_stage_time_chunks
+     driver-side chunker in streaming/ops.py:_stage_time_chunks
      (whose own docstring prescribes exactly this at scale) — with
      ascending mtimes so maxFilesPerTrigger=1 replays them as `batches`
      micro-batches in event-time order and the watermark advances
@@ -73,54 +73,39 @@ def stage_ranged_events(
     spark, src_sf: str, factor: int, batches: int
 ) -> str:
     """Blow up events `factor`-x and stage as `batches` time-ranged
-    parquet files with ascending mtimes. Idempotent per (source
-    fingerprint, factor, batches). One Spark job: scan -> explode copies
+    parquet files with ascending mtimes, staged once per (factor, batches,
+    source sf dir). One Spark job: scan -> explode copies
     -> shift user_id -> range-shuffle on ts -> write; the blown-up table
     never lands anywhere else first."""
     from pyspark.sql import functions as F
 
     from conceptnetwork_spark.catalog import Catalog, fix_nanos
-    from conceptnetwork_spark.sources.formats import _sf_fingerprint
+    from conceptnetwork_spark.sources.staging import order_by_mtime, staged
     from scale_stress import KEY_OFF
 
-    out = os.path.join(
-        "/tmp",
-        f"cn_spark_streamstage{factor}x_{batches}b_{_sf_fingerprint(src_sf)}",
-    )
-    if os.path.exists(os.path.join(out, "_STAGED")):
-        return out
-    ev = fix_nanos(
-        spark.read.parquet(Catalog(spark, src_sf).path("events")), "events"
-    )
-    blown = (
-        ev.select("ts", "user_id", "value")
-        .withColumn("_copy", F.explode(F.sequence(F.lit(0), F.lit(factor - 1))))
-        .withColumn(
-            "user_id",
-            F.col("user_id").cast("long")
-            + F.col("_copy").cast("long") * F.lit(KEY_OFF).cast("long"),
+    def build(tmp: str) -> None:
+        ev = fix_nanos(
+            spark.read.parquet(Catalog(spark, src_sf).path("events")), "events"
         )
-        .drop("_copy")
-    )
-    tmp = f"{out}.{uuid.uuid4().hex[:8]}.tmp"
-    blown.repartitionByRange(batches, "ts").write.parquet(tmp)
-    # range partition i holds the i-th lowest ts range and task i writes
-    # part-0000i-*: name order == event-time order. Ascending mtimes make
-    # the file stream source (which orders by modification time) replay
-    # them in that order under maxFilesPerTrigger=1.
-    files = sorted(glob.glob(os.path.join(tmp, "part-*")))
-    base = time.time() - len(files)
-    for i, f in enumerate(files):
-        os.utime(f, (base + i, base + i))
-    with open(os.path.join(tmp, "_STAGED"), "w") as fh:
-        fh.write(str(len(files)))
-    try:
-        os.rename(tmp, out)
-    except OSError:  # concurrent stager won
-        import shutil
+        blown = (
+            ev.select("ts", "user_id", "value")
+            .withColumn(
+                "_copy", F.explode(F.sequence(F.lit(0), F.lit(factor - 1)))
+            )
+            .withColumn(
+                "user_id",
+                F.col("user_id").cast("long")
+                + F.col("_copy").cast("long") * F.lit(KEY_OFF).cast("long"),
+            )
+            .drop("_copy")
+        )
+        blown.repartitionByRange(batches, "ts").write.mode("overwrite").parquet(tmp)
+        # range partition i holds the i-th lowest ts range and task i writes
+        # part-0000i-*: name order == event-time order, which the mtimes
+        # carry to the file stream source under maxFilesPerTrigger=1.
+        order_by_mtime(sorted(glob.glob(os.path.join(tmp, "part-*"))))
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return staged(f"streamstage{factor}x_{batches}b", build, src_sf)
 
 
 def main() -> None:
