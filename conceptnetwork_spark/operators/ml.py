@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from conceptnetwork_spark.catalog import Catalog
 from conceptnetwork_spark.registry import register
+from conceptnetwork_spark.sources.staging import scratch_dir
 
 
 def build_ols_pipeline(feature_cols: list[str], label_col: str) -> Pipeline:
@@ -328,15 +329,9 @@ def d33_logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # throws TaskNotSerializable. A loaded model carries no summary, so
     # scoring closures serialize cleanly regardless of session history;
     # the round trip also certifies model persistence on this path.
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.ml.classification import LogisticRegressionModel
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"cn_logreg_{uuid.uuid4().hex[:8]}"
-    )
+    path = scratch_dir(spark, "logreg")
     model.write().overwrite().save(path)
     model = LogisticRegressionModel.load(path)
     preds = model.transform(df)

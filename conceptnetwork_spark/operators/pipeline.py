@@ -41,7 +41,7 @@ from conceptnetwork_spark.operators.text import (
     lang_id,
 )
 from conceptnetwork_spark.registry import register
-from conceptnetwork_spark.sources.staging import oracle_sf_dir, staged
+from conceptnetwork_spark.sources.staging import oracle_sf_dir, scratch_dir, staged
 
 # normalized-content key for exact dedup: case/whitespace-insensitive
 _NORM_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
@@ -1398,13 +1398,9 @@ def d35_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     filesystem) remains the source of truth for readers throughout."""
     import os as _os
     import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
 
     ev = Catalog(spark, sf_dir).events
-    work = _os.path.join(
-        _tempfile.gettempdir(), f"cn_spark_vacuum_{_uuid.uuid4().hex[:8]}"
-    )
+    work = scratch_dir(spark, "vacuum")
     ev.repartition(VACUUM_LIVE_FILES).write.mode("overwrite").parquet(work)
     live = sorted(f for f in _os.listdir(work) if f.endswith(".parquet"))
     assert len(live) == VACUUM_LIVE_FILES
@@ -1426,7 +1422,6 @@ def d35_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("recent_orphans_kept", len(kept_orphans)),
         ("table_rows_after", n_rows),
     ]
-    _shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(audit, "metric string, value long").orderBy(
         "metric"
     )

@@ -167,8 +167,9 @@ def d01_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     right trade for low-volume control-plane feeds (this source's use
     case); high-volume sources implement the partitioned streamReader the
     same way the batch reader plans partitions."""
-    import time as _time
     import uuid as _uuid
+
+    from conceptnetwork_spark.streaming.ops import await_rows
 
     register_python_source(spark)
     stream = (
@@ -189,25 +190,7 @@ def d01_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded source: stop once every chunk has been ingested (the source
     # quiesces at n; expected row count is known in closed form)
     expected = sum(1 for i in range(SYNTH_N) if (i * i) % 97 < 50)
-    deadline = _time.time() + 120
-    try:
-        while _time.time() < deadline:
-            if spark.table(name).count() >= expected:
-                break
-            if not q.isActive:
-                # fail fast with the underlying error instead of spinning
-                # out the deadline and masking it as a TimeoutError; a CLEAN
-                # stop (exception() None) is equally terminal — no more rows
-                # are coming
-                exc = q.exception()
-                raise exc if exc is not None else RuntimeError(
-                    f"stream stopped cleanly before reaching {expected} rows"
-                )
-            _time.sleep(0.5)
-        else:
-            raise TimeoutError(f"stream never reached {expected} rows")
-    finally:
-        q.stop()
+    await_rows(q, spark.table(name), expected, 120)
     return spark.table(name).orderBy("i")
 
 
@@ -315,11 +298,10 @@ def d01_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     under task retries and speculation; the Python writer itself is the
     escape hatch for sinks Spark lacks a connector for (internal APIs,
     bespoke formats), with the same executor parallelism as any write."""
-    import atexit as _atexit
     import glob as _glob
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+
+    from conceptnetwork_spark.sources.staging import scratch_dir
 
     key = "_cn_jsonlsink_registered"
     if not getattr(spark, key, False):
@@ -327,10 +309,9 @@ def d01_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
         setattr(spark, key, True)
 
     # unique dir per call (every invocation exercises the real write +
-    # commit), removed at interpreter exit so the returned scan stays LAZY
+    # commit), removed with the session so the returned scan stays LAZY
     # — no driver-side collect of the result
-    outdir = _tempfile.mkdtemp(prefix="cn_jsonlsink_")
-    _atexit.register(_shutil.rmtree, outdir, ignore_errors=True)
+    outdir = scratch_dir(spark, "jsonlsink")
     o = (
         spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
         .where(F.col("o_orderkey") < 3000)

@@ -12,6 +12,10 @@ is rebuilt and how it is published.
   build that raises publishes nothing. If the rename fails because a
   concurrent stager published first, the winner's stage is returned; any
   other failed publish raises.
+
+Per-run output (stream checkpoints, sink dirs, model round trips) is not a
+stage: it goes to ``scratch_dir``, under the session's own temp dir, and is
+gone when the session stops.
 """
 
 from __future__ import annotations
@@ -93,6 +97,19 @@ def staged(name: str, build: Callable[[str], None], sf_dir: str | None = None) -
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(path):
             raise
+    return path
+
+
+def scratch_dir(spark, prefix: str) -> str:
+    """A fresh, empty ``<SparkFiles root>/cn_scratch/<prefix>_<uuid8>``.
+
+    The SparkFiles root is the SparkContext's own temp dir, which
+    ``spark.stop()`` and the JVM shutdown hook delete, so nothing written
+    here outlives its session. It is resolved on every call because a new
+    session in the same process gets a new root."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    path = os.path.join(root, "cn_scratch", f"{prefix}_{uuid.uuid4().hex[:8]}")
+    os.makedirs(path)
     return path
 
 

@@ -17,7 +17,7 @@ so value hashing is engine- and representation-independent.
 from __future__ import annotations
 
 import os
-import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 
 from conceptnetwork_spark.catalog import Catalog, fix_nanos
 from conceptnetwork_spark.registry import register
-from conceptnetwork_spark.sources.staging import order_by_mtime, staged
+from conceptnetwork_spark.sources.staging import order_by_mtime, scratch_dir, staged
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 def await_finished(q, timeout_sec: int) -> None:
@@ -43,26 +44,92 @@ def await_finished(q, timeout_sec: int) -> None:
         )
 
 
-from contextlib import contextmanager
+def run_bounded(
+    stream: DataFrame,
+    name: str,
+    *,
+    mode: str,
+    sink="memory",
+    state_partitions: int | None = None,
+    rocksdb: bool = False,
+    checkpoint: str | None = None,
+    timeout: int = 120,
+):
+    """Run ``stream`` to completion under an availableNow trigger and return
+    the finished query; a memory sink's rows are ``spark.table(q.name)``.
 
+    ``sink`` is ``"memory"``, ``"noop"`` or a ``foreachBatch`` callable. The
+    query is named ``<name>_<uuid8>``. Its checkpoint is ``checkpoint`` or a
+    fresh ``scratch_dir``, removed with the session.
 
-@contextmanager
-def scoped_state_partitions(spark: SparkSession, n: int = 8):
-    """Run a stateful streaming query with state partitioning sized to key
-    cardinality instead of the session's CPU-sized shuffle count. Streaming
-    state is partitioned by spark.sql.shuffle.partitions AT QUERY START and
-    every partition pays per-micro-batch commit I/O across up to four state
-    stores (stream-stream joins), so 150 keys across 32 stores is pure
-    fixed overhead — 8 stores runs the same queries ~3x faster with
-    bit-identical results (partition-count invariance is a standing gate).
-    A real production knob: state partitions follow key cardinality, and
-    the checkpoint pins them for the query's life."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to this
+    query, and ``rocksdb`` the RocksDB state-store provider; both are
+    restored afterwards, also when the query fails. Streaming state is
+    partitioned by the shuffle count at query start, the checkpoint pins it
+    for the query's life, and every partition pays commit I/O per
+    micro-batch and state store, so the count should follow key cardinality.
+    Most stateful queries here pass 8. The session default follows
+    ``SPARK_GRAFT_CPUS`` (4 on a 4-core host, 32 when unset), so 8 may raise
+    or lower the count; it stays 8 because the ``d25_state_reader`` oracle
+    pins it."""
+    spark = stream.sparkSession
+    scoped = {}
+    if state_partitions is not None:
+        scoped["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if rocksdb:
+        scoped["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB
+    prev = {k: spark.conf.get(k, None) for k in scoped}
+    writer = stream.writeStream.queryName(f"{name}_{uuid.uuid4().hex[:8]}")
+    writer = writer.foreachBatch(sink) if callable(sink) else writer.format(sink)
     try:
-        yield
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
+        q = (
+            writer.outputMode(mode)
+            .option("checkpointLocation", checkpoint or scratch_dir(spark, name))
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_finished(q, timeout)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return q
+
+
+def await_rows(q, rows: DataFrame, n: int, timeout: int) -> None:
+    """Poll an unbounded query until ``rows`` (a view of its sink) counts at
+    least ``n``, then stop it. Raises the query's own error if it dies, and
+    fails fast on a clean early stop: no more rows are coming either way.
+    Build the caller's result from a fresh view of the sink, not ``rows``."""
+    deadline = time.time() + timeout
+    try:
+        while time.time() < deadline:
+            if rows.count() >= n:
+                return
+            if not q.isActive:
+                exc = q.exception()
+                raise exc if exc is not None else RuntimeError(
+                    f"stream {q.name} stopped cleanly before reaching {n} rows"
+                )
+            time.sleep(0.3)
+        raise TimeoutError(f"stream {q.name} never reached {n} rows")
+    finally:
+        q.stop()
+
+
+def file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet files under ``path`` replayed one per micro-batch, oldest
+    mtime first, with nanosecond event timestamps converted as the batch
+    catalog converts them (a no-op on a ``timestamp`` column)."""
+    schema = spark.read.parquet(path).schema
+    return fix_nanos(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path),
+        "events",
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str):
@@ -255,8 +322,6 @@ def d25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trigger.AvailableNow, then return the sink table. Counts/sums are
     micro-batch-invariant, so the result hash-matches the batch oracle —
     this entry proves readStream/writeStream, not just the window exprs."""
-    table = f"stream_ingest_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     stream = (
         _events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -265,16 +330,8 @@ def d25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table).orderBy("event_type")
+    q = run_bounded(stream, "stream_ingest", mode="complete")
+    return spark.table(q.name).orderBy("event_type")
 
 
 def run_windowed_stream(
@@ -285,8 +342,6 @@ def run_windowed_stream(
     """Watermarked tumbling-window streaming agg (D26 streaming form), used
     by the batch-equivalence tests: with AvailableNow over a static file the
     watermark never drops rows, so the result equals d26_tumbling_window."""
-    table = f"stream_window_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", watermark)
@@ -302,16 +357,7 @@ def run_windowed_stream(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(agg, "stream_window", mode="complete").name)
 
 
 def run_windowed_append_stream(
@@ -331,8 +377,6 @@ def run_windowed_append_stream(
     staged files: on-time rows advance the watermark in batch 1; batch 2's
     late row lands in a finalized window and must not appear.
     """
-    table = f"stream_late_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     agg = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -346,16 +390,7 @@ def run_windowed_append_stream(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(agg, "stream_late", mode="append").name)
 
 
 def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,8 +400,6 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark drops nothing, so the result equals the batch session
     query — this pins that the session_window expression is genuinely
     streaming-capable (merging session state across micro-batches)."""
-    table = f"stream_session_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -382,39 +415,19 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(agg, "stream_session", mode="complete").name)
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming stateful dedup on event_id within a watermark (D28
     streaming form): dropDuplicatesWithinWatermark + append to memory."""
-    table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     dedup = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id")
     )
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(dedup, "stream_dedup", mode="append").name)
 
 
 # --------------------------------------------------------------------------
@@ -435,8 +448,7 @@ def d25_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     AvailableNow over static input the final files hold the complete
     aggregate — which must hash-match the batch oracle. Exercises the sink
     commit path (temp-file + rename) that the memory sink bypasses."""
-    out_dir = os.path.join(tempfile.gettempdir(), f"sink_{uuid.uuid4().hex[:8]}")
-    ckpt = out_dir + "_ckpt"
+    out_dir = scratch_dir(spark, "sink")
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -452,17 +464,9 @@ def d25_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partition (guide §6: size files to the data, not the task count)
         batch_df.coalesce(1).write.mode("overwrite").parquet(out_dir)
 
-    # state stores follow key cardinality, not the CPU-sized shuffle
-    # default — same knob every other stateful query here already uses
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    run_bounded(
+        agg, "parquet_sink", mode="complete", sink=write_batch, state_partitions=8
+    )
     return spark.read.parquet(out_dir).orderBy("event_type")
 
 
@@ -524,8 +528,6 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result equals ``d25_stream_stream_join``'s batch form. The
     interval bound is MANDATORY in streaming (unbounded-state joins are
     rejected for append output) — this pins that contract."""
-    table = f"stream_ssjoin_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     src = _events_stream(spark, sf_dir)
     views = (
         src.where(F.col("event_type") == "view")
@@ -557,16 +559,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.date_format("v_ts", _TS_FMT).alias("view_ts"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(joined, "stream_ssjoin", mode="append").name)
 
 
 # --------------------------------------------------------------------------
@@ -606,8 +599,6 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the STATIC customer/nation DataFrames (broadcast into each
     micro-batch), complete-mode aggregate to a memory sink."""
     t = Catalog(spark, sf_dir)
-    table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     enriched = (
         _events_stream(spark, sf_dir)
         .join(t.customer, F.col("user_id") == F.col("c_custkey"))
@@ -618,16 +609,7 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q, 120)
-    return spark.table(table)
+    return spark.table(run_bounded(enriched, "stream_enrich", mode="complete").name)
 
 
 # --------------------------------------------------------------------------
@@ -809,14 +791,8 @@ def d25_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = Catalog(spark, sf_dir).events
         ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(tmp)
 
-    stage = staged("evstage", build, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    src = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stage)
-
-    root = os.path.join(tempfile.gettempdir(), f"upsert_{uuid.uuid4().hex[:8]}")
-    ckpt = root + "_ckpt"
+    src = file_stream(spark, staged("evstage", build, sf_dir))
+    root = scratch_dir(spark, "upsert")
     versions: list[str] = []
 
     def argmax(df: DataFrame) -> DataFrame:
@@ -844,14 +820,9 @@ def d25_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         argmax(delta).write.mode("overwrite").parquet(out)
         versions.append(out)
 
-    with scoped_state_partitions(spark):
-        q = (
-            src.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    run_bounded(
+        src, "upsert", mode="append", sink=merge_batch, state_partitions=8, timeout=180
+    )
     assert len(versions) >= 4, f"expected >=4 micro-batches, got {len(versions)}"
     return (
         spark.read.parquet(versions[-1])
@@ -986,14 +957,7 @@ def d26_append_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one row of state per open window; the watermark bounds
     state size — the eviction this query observes is exactly the mechanism
     that keeps a 100 TB out-of-order stream's state finite."""
-    stage = _stage_late_arrival(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    stream = file_stream(spark, _stage_late_arrival(spark, sf_dir))
     agg = (
         stream.withWatermark("ts", LATE_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1002,18 +966,9 @@ def d26_append_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    name = f"late_drop_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    q = run_bounded(agg, "late_drop", mode="append", state_partitions=8)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             F.date_format("w.start", _TS_FMT).alias("window_start"),
             "n_events",
@@ -1122,18 +1077,8 @@ def d25_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join feasible at all, and the outer emission latency IS the watermark
     delay (the price of correct null semantics under out-of-order data)."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-
-    def src():
-        return fix_nanos(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-            "events",
-        )
-
     views = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -1143,7 +1088,7 @@ def d25_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", OUTER_DELAY)
     )
     purchases = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1159,18 +1104,9 @@ def d25_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
         "leftOuter",
     )
-    name = f"ojoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    q = run_bounded(joined, "ojoin", mode="append", state_partitions=8)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "view_id",
             "purchase_id",
@@ -1220,18 +1156,8 @@ def d25_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     choosing semi over inner-then-distinct on a 100 TB stream: the
     dedup happens IN the join state, not as a second stateful stage."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-
-    def src():
-        return fix_nanos(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-            "events",
-        )
-
     views = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -1241,7 +1167,7 @@ def d25_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", OUTER_DELAY)
     )
     purchases = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -1256,18 +1182,9 @@ def d25_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
         "leftSemi",
     )
-    name = f"sjoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    q = run_bounded(joined, "sjoin", mode="append", state_partitions=8)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "view_id",
             "user_id",
@@ -1411,28 +1328,13 @@ def d28_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-watermark variant's state is bounded by keys-per-delay-window,
     which is what a 100 TB/day event stream needs."""
     stage = _stage_ddw(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    src = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    src = file_stream(spark, stage)
     deduped = src.withWatermark("ts", DDW_DELAY).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = f"ddw_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    q = run_bounded(deduped, "ddw", mode="append", state_partitions=8)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "event_id",
             "user_id",
@@ -1588,13 +1490,7 @@ def d26_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink must be keyed-upsert-capable, exactly what the readout
     models."""
     stage = _stage_parity_batches(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    stream = file_stream(spark, stage)
     agg = (
         stream.withWatermark("ts", "90 days")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1603,17 +1499,8 @@ def d26_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").alias("sum_value"),
         )
     )
-    name = f"upd_mode_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
-    log = spark.table(name)
+    q = run_bounded(agg, "upd_mode", mode="update", state_partitions=8)
+    log = spark.table(q.name)
     # keyed-upsert fold: per window keep the update with the highest count
     # (state is append-only within a window -> that IS the final state)
     final = log.groupBy("w").agg(
@@ -1672,13 +1559,7 @@ def d26_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle between the stages carries hourly partials, ~3 orders of
     magnitude fewer rows than events at 100 TB."""
     stage = _stage_late_arrival(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    stream = file_stream(spark, stage)
     hourly = (
         stream.withWatermark("ts", LATE_DELAY)
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -1688,18 +1569,9 @@ def d26_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly.groupBy(F.window(F.window_time("w"), "1 day").alias("d"))
         .agg(F.sum("n").alias("n_events"), F.sum("sv").alias("sum_value"))
     )
-    name = f"chain_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            daily.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    q = run_bounded(daily, "chain", mode="append", state_partitions=8, timeout=180)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             F.date_format("d.start", "yyyy-MM-dd").alias("day"),
             "n_events",
@@ -1771,18 +1643,8 @@ def d25_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     second null-emission scan at eviction time. user_id is carried from
     whichever side is present (COALESCE in the readout)."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-
-    def src():
-        return fix_nanos(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-            "events",
-        )
-
     views = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -1792,7 +1654,7 @@ def d25_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", OUTER_DELAY)
     )
     purchases = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1808,18 +1670,9 @@ def d25_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
         "fullOuter",
     )
-    name = f"fojoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    q = run_bounded(joined, "fojoin", mode="append", state_partitions=8, timeout=180)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "view_id",
             "purchase_id",
@@ -1951,18 +1804,8 @@ def d25_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delay + interval per side); choosing left vs right outer is a
     semantics decision, not a cost one."""
     stage = _stage_outer_join(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-
-    def src():
-        return fix_nanos(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-            "events",
-        )
-
     views = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -1972,7 +1815,7 @@ def d25_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", OUTER_DELAY)
     )
     purchases = (
-        src()
+        file_stream(spark, stage)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1988,18 +1831,9 @@ def d25_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
         "rightOuter",
     )
-    name = f"rojoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    q = run_bounded(joined, "rojoin", mode="append", state_partitions=8, timeout=180)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "view_id",
             "purchase_id",
@@ -2071,37 +1905,19 @@ def d26_late_drop_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: metrics come from StreamingQueryProgress (driver-side,
     O(batches) tiny dicts) — zero extra data-path cost."""
-    stage = _stage_late_metrics(spark, sf_dir)
-    schema = spark.read.parquet(stage).schema
-    table = f"latem_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
     agg = (
-        fix_nanos(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage),
-            "events",
-        )
+        file_stream(spark, _stage_late_metrics(spark, sf_dir))
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 120)
+    q = run_bounded(agg, "latem", mode="append", state_partitions=8)
     dropped = sum(
         int(so.get("numRowsDroppedByWatermark", 0))
         for p in q.recentProgress
         for so in p.get("stateOperators", [])
     )
-    emitted = spark.table(table).count()
+    emitted = spark.table(q.name).count()
     return spark.createDataFrame(
         [(dropped, emitted)], "late_rows_dropped long, windows_emitted long"
     )
@@ -2144,8 +1960,6 @@ def d25_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     steady-state micro-batch latency; generation is partitioned and
     driver-free (unlike the Python SimpleDataSourceStreamReader's
     driver-prefetch path, the contrast documented there)."""
-    import time as _time
-
     stream = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", str(RATE_ROWS_PER_BATCH))
@@ -2162,27 +1976,15 @@ def d25_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = _time.time() + 120
-    try:
-        while _time.time() < deadline:
-            if (
-                spark.table(table).where(F.col("value") < RATE_TARGET_ROWS).count()
-                >= RATE_TARGET_ROWS
-            ):
-                break
-            if not q.isActive:
-                # a clean stop (exception() None) must not busy-spin to the
-                # deadline: no more rows are coming either way
-                exc = q.exception()
-                raise exc if exc is not None else RuntimeError(
-                    f"rate source stopped cleanly before reaching "
-                    f"{RATE_TARGET_ROWS} rows"
-                )
-            _time.sleep(0.3)
-        else:
-            raise TimeoutError(f"rate source never reached {RATE_TARGET_ROWS} rows")
-    finally:
-        q.stop()
+    await_rows(
+        q,
+        spark.table(table).where(F.col("value") < RATE_TARGET_ROWS),
+        RATE_TARGET_ROWS,
+        120,
+    )
+    # the result builds its own sink view and filter: sharing either with the
+    # DataFrame the poll counted kept about 13 MB more JVM heap live after a
+    # stream_state benchmark run
     return (
         spark.table(table)
         .where(F.col("value") < RATE_TARGET_ROWS)
@@ -2287,9 +2089,7 @@ def d26_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): state is one row per OPEN session per user —
     the watermark bounds it exactly as it bounds window state; session
-    merge is a per-key state-store operation, never a shuffle of history.
-    State partitions sized via scoped_state_partitions (per-partition
-    per-batch commit I/O dominates small-key streams)."""
+    merge is a per-key state-store operation, never a shuffle of history."""
     stage = _stage_time_chunks(spark, sf_dir, SESSION_STREAM_CHUNKS)
     return run_session_stream_on_stage(spark, stage)
 
@@ -2299,12 +2099,7 @@ def run_session_stream_on_stage(spark: SparkSession, stage: str) -> DataFrame:
     chunk directory — split out so the boundary-tie pin
     (tests/test_streaming.py) can replay a CONSTRUCTED fixture whose
     session end coincides with the final watermark to the millisecond."""
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = file_stream(spark, stage)
     agg = (
         stream.withWatermark("ts", SESSION_STREAM_DELAY)
         .groupBy(
@@ -2315,18 +2110,9 @@ def run_session_stream_on_stage(spark: SparkSession, stage: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    name = f"sess_stream_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    q = run_bounded(agg, "sess_stream", mode="append", state_partitions=8, timeout=180)
     return (
-        spark.table(name)
+        spark.table(q.name)
         .select(
             "user_id",
             F.date_format("w.start", _TS_FMT).alias("session_start"),
@@ -2409,28 +2195,14 @@ def d26_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined before state commit, exactly like the batch twin's
     partial agg."""
     stage = _stage_time_chunks(spark, sf_dir, DRIFT_CHUNKS)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = file_stream(spark, stage)
     agg = (
         stream.withWatermark("ts", DRIFT_DELAY)
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("cd"))
     )
-    name = f"drift_stream_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
-    days = spark.table(name).select(
+    q = run_bounded(agg, "drift_stream", mode="append", state_partitions=8, timeout=180)
+    days = spark.table(q.name).select(
         F.to_date(F.col("w.start")).alias("day"), "event_type", "cd"
     )
     ev = Catalog(spark, sf_dir).events

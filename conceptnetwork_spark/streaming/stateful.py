@@ -21,9 +21,6 @@ store in production configs); per-batch work is Arrow-batched pandas.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -31,10 +28,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from conceptnetwork_spark.catalog import Catalog, fix_nanos
+from conceptnetwork_spark.catalog import Catalog
 from conceptnetwork_spark.registry import register
-from conceptnetwork_spark.sources.staging import staged
-from conceptnetwork_spark.streaming.ops import _stage_time_chunks, await_finished
+from conceptnetwork_spark.sources.staging import scratch_dir, staged
+from conceptnetwork_spark.streaming.ops import (
+    _stage_time_chunks,
+    file_stream,
+    run_bounded,
+)
 
 _OUT_SCHEMA = "user_id long, n_events long, sum_value double"
 _STATE_SCHEMA = "n long, s double"
@@ -89,43 +90,20 @@ def run_stateful_totals(
     The multi-file staging forces state to carry across micro-batches —
     a single-batch run would never exercise ``state.exists``.
     """
-    stage = stage_event_files(spark, sf_dir, n_files)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
+    stream = file_stream(spark, stage_event_files(spark, sf_dir, n_files))
+    q = run_bounded(
+        running_totals(stream),
+        "stateful_totals",
+        mode="update",
+        state_partitions=8,
+        timeout=180,
     )
-    table = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
-    # State-store sizing: streaming state is partitioned by the shuffle
-    # partition count AT QUERY START and each partition pays per-batch
-    # commit I/O. 150 user keys across 32 stores x 4 batches is pure fixed
-    # overhead, so scope a smaller count to this query (a real production
-    # knob — state partitions are sized to key cardinality, not to the
-    # batch-side CPU count; checkpointed state pins it for the query's life).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            running_totals(stream)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # update-mode memory sink appends one row per key per batch; the final
     # totals are the per-key max (counts are monotone)
     from pyspark.sql import functions as F
 
     return (
-        spark.table(table)
+        spark.table(q.name)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -272,53 +250,18 @@ def _run_tws_update_log(
 
     # runs share one staged copy; checkpoints stay unique per run (state
     # stores cannot be shared)
-    stage = stage_event_files(spark, sf_dir, n_files)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
+    stream = file_stream(spark, stage_event_files(spark, sf_dir, n_files))
+    tws = stream.groupBy("user_id").transformWithStateInPandas(
+        processor,
+        outputStructType=output_schema,
+        outputMode="Update",
+        timeMode="None",
     )
-    table = f"tws_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
-    # transformWithState requires the RocksDB state store (bundled in
-    # Spark 4); scope it + a key-sized state partition count to this query
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    # transformWithState requires the RocksDB state store (bundled in Spark 4)
+    q = run_bounded(
+        tws, "tws", mode="update", state_partitions=8, rocksdb=True, timeout=180
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                processor,
-                outputStructType=output_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    return spark.table(table)
+    return spark.table(q.name)
 
 
 # Explicit, LOUD gating (not a silent conditional): TWSP_AVAILABLE is the
@@ -650,50 +593,21 @@ def run_cohort_maturation(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     stage = _stage_time_chunks(spark, sf_dir, TWS_TIMER_FILES)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    tws = (
+        file_stream(spark, stage)
         .withWatermark("ts", "0 seconds")
-    )
-    table = f"tws_timer_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                CohortProcessor(),
-                outputStructType="user_id long, first_seen timestamp",
-                outputMode="Append",
-                timeMode="EventTime",
-            )
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            CohortProcessor(),
+            outputStructType="user_id long, first_seen timestamp",
+            outputMode="Append",
+            timeMode="EventTime",
         )
-        await_finished(q, 180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    return spark.table(table)
+    )
+    q = run_bounded(
+        tws, "tws_timer", mode="append", state_partitions=8, rocksdb=True, timeout=180
+    )
+    return spark.table(q.name)
 
 
 if TWSP_AVAILABLE:
@@ -701,7 +615,7 @@ if TWSP_AVAILABLE:
     @register(
         "d25_cohort_timer_tws",
         # Closed-form oracle for EVENT-TIME TIMER firing, empirically pinned
-        # (round 5): under trigger(availableNow) Spark runs a FINAL NO-DATA
+        # (round 5): under an availableNow trigger Spark runs a FINAL NO-DATA
         # micro-batch in which timers are evaluated against the final
         # watermark W = max(all ts) - delay (delay 0 here). A timer fires
         # iff its expiry (ms) <= W (ms) — measured with a discriminating
@@ -783,34 +697,17 @@ def d25_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     surgical state audits/repairs run — no replay of the input stream."""
     from pyspark.sql import functions as F
 
-    stage = stage_event_files(spark, sf_dir, 4)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    stream = file_stream(spark, stage_event_files(spark, sf_dir, 4))
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    table = f"state_reader_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
-    # pin state partitioning to 8 (sized to key cardinality, not CPU count —
-    # same production knob as run_stateful_totals); the checkpoint freezes
-    # it, and the metadata read below proves that
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    ckpt = scratch_dir(spark, "state_reader")
+    run_bounded(
+        agg,
+        "state_reader",
+        mode="update",
+        state_partitions=8,
+        checkpoint=ckpt,
+        timeout=180,
+    )
     state = spark.read.format("statestore").load(ckpt)
     meta = (
         spark.read.format("state-metadata")
@@ -885,29 +782,17 @@ def d25_state_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     query here."""
     from pyspark.sql import functions as F
 
-    from conceptnetwork_spark.streaming.ops import scoped_state_partitions
-
-    stage = _stage_time_chunks(spark, sf_dir, 3)
-    schema = spark.read.parquet(stage).schema
-    stream = fix_nanos(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage),
-        "events",
-    )
+    stream = file_stream(spark, _stage_time_chunks(spark, sf_dir, 3))
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    table = f"state_cf_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{table}")
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 180)
+    ckpt = scratch_dir(spark, "state_cf")
+    run_bounded(
+        agg,
+        "state_cf",
+        mode="update",
+        state_partitions=8,
+        checkpoint=ckpt,
+        timeout=180,
+    )
     cf = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")

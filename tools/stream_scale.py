@@ -59,7 +59,6 @@ import json
 import os
 import sys
 import time
-import uuid
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -147,37 +146,25 @@ def main() -> None:
     from conceptnetwork_spark.streaming.ops import (
         SESSION_STREAM_DELAY,
         SESSION_STREAM_GAP,
-        await_finished,
+        file_stream,
+        run_bounded,
     )
 
     reader = StageReader(spark)
 
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     agg = (
-        stream.withWatermark("ts", SESSION_STREAM_DELAY)
+        file_stream(spark, stage)
+        .withWatermark("ts", SESSION_STREAM_DELAY)
         .groupBy(F.session_window("ts", SESSION_STREAM_GAP).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    ckpt = os.path.join("/tmp", f"cn_stream_scale_ckpt_{uuid.uuid4().hex[:8]}")
     t0 = time.perf_counter()
     failures: list[str] = []
     try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_finished(q, 5400)
+        q = run_bounded(agg, "stream_scale", mode="append", sink="noop", timeout=5400)
     except Exception as ex:
         failures.append(f"stream: {str(ex)[:300]}")
         q = None
