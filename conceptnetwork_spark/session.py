@@ -84,6 +84,15 @@ def get_spark(
         .config("spark.ui.retainedStages", "100000")
         .config("spark.ui.retainedJobs", "100000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # JVM-wide whole-stage-codegen cache, read once at the JVM's first
+        # compile (static conf). Spark's default of 100 classes is less than
+        # the 5-query relational benchmark generates (102), so each warm pass
+        # recompiled 23-50 classes in Janino. One pass at sf0.1 (4 cores)
+        # compiles 4303 distinct classes over the 404-query registry and
+        # 1924 over bench.py's 223 HEADLINE queries; 8192 keeps the registry
+        # with headroom for Guava evicting per segment before the cap. A
+        # cached class holds about 29 KB of heap.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.python.daemon.module", "conceptnetwork_spark.worker_daemon")
     )
     return builder.getOrCreate()

@@ -78,6 +78,13 @@ def stage_path(name: str, sf_dir: str | None = None) -> str:
     return os.path.join(tempfile.gettempdir(), f"cn_stage_{name}")
 
 
+def is_stage(path: str) -> bool:
+    """Whether ``path`` is in a published stage, which never changes (a
+    stage still being built is a ``.tmp`` dir)."""
+    root = os.path.join(tempfile.gettempdir(), "cn_stage_")
+    return path.startswith(root) and ".tmp" not in path[len(root):]
+
+
 def staged(name: str, build: Callable[[str], None], sf_dir: str | None = None) -> str:
     """The published stage dir for ``name``, built by ``build(tmp)`` if it
     does not exist yet."""

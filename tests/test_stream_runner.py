@@ -11,6 +11,7 @@ import sys
 import tempfile
 
 import pytest
+from pyspark.sql import DataFrameReader
 
 from conceptnetwork_spark.streaming import ops
 from conceptnetwork_spark.streaming.stateful import d25_state_reader
@@ -100,6 +101,32 @@ def test_checkpoint_removed_at_stop_and_new_session_gets_new_root(tmp_path):
         capture_output=True, text=True, timeout=600, cwd=ROOT, env=env,
     )
     assert proc.returncode == 0 and "OK" in proc.stdout, proc.stderr[-2000:]
+
+
+def test_file_stream_reads_a_stage_schema_once(spark, tmp_path, monkeypatch):
+    """A published stage never changes, so its schema is read once per
+    process; a path outside the stages is read on every build."""
+    stage = ops._stage_outer_join(spark, SF_SMOKE)
+    plain = str(tmp_path / "plain")
+    spark.range(3).write.parquet(plain)
+    monkeypatch.setattr(ops, "_STAGE_SCHEMAS", {})
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    rows = [
+        sorted(repr(tuple(r)) for r in ops.d25_stream_outer_join(spark, SF_SMOKE).collect())
+        for _ in range(2)
+    ]
+    ops.file_stream(spark, plain)
+    ops.file_stream(spark, plain)
+    assert reads.count(stage) == 1
+    assert reads.count(plain) == 2
+    assert rows[0] and rows[0] == rows[1]
 
 
 # A stream's checkpoint, trigger, temp path and scoped confs are set in

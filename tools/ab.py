@@ -18,6 +18,11 @@ cannot prune any), and prints min and median seconds per layer:
   query's planning tracker;
 - execute: the materialization, minus the planning run inside it.
 
+A last line per side gives the generated classes compiled during
+its timed runs, and the milliseconds spent compiling them. Warm runs of an
+unchanged query compile nothing; a builder that defeats the codegen cache
+(say, a literal that differs on every run) compiles on every run.
+
 ``python tools/ab.py q q`` gives the A/A noise floor of q.
 """
 
@@ -33,6 +38,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from perfbench.spans import plan_phases  # noqa: E402
+from stages import codegen_compiles  # noqa: E402
 
 REPS = 8  # runs per side
 LAYERS = ("build", "plan", "execute", "total")
@@ -46,13 +52,16 @@ def resolve(side: str, qs: dict):
 
 
 def timed_run(spark, fn, sf_dir: str) -> dict[str, float]:
+    c0 = codegen_compiles(spark)
     t0 = time.time()
     df = fn(spark, sf_dir)
     t1 = time.time()
     qe = df._jdf.queryExecution()
     qe.toRdd().count()
     t2 = time.time()
-    out = {"build": t1 - t0, "plan": 0.0, "execute": t2 - t1, "total": t2 - t0}
+    c1 = codegen_compiles(spark)
+    out = {"build": t1 - t0, "plan": 0.0, "execute": t2 - t1, "total": t2 - t0,
+           "compiles": c1[0] - c0[0], "compile_ms": c1[1] - c0[1]}
     for start, end in plan_phases(qe).values():
         out["plan"] += end - start
         out["build" if start < t1 else "execute"] -= end - start
@@ -93,6 +102,10 @@ def main() -> None:
             xs = [r[layer] for r in runs[k]]
             cells.append(f"{layer} {min(xs):.3f}/{statistics.median(xs):.3f}")
         print(f"{k} {side}: " + "  ".join(cells))
+    for k, side in sides.items():
+        n = sum(r["compiles"] for r in runs[k])
+        ms = sum(r["compile_ms"] for r in runs[k])
+        print(f"{k} {side}: codegen {n} compiles, {ms:.0f} ms over {REPS} timed runs")
     spark.stop()
 
 

@@ -10,8 +10,14 @@ Bytes per query come from tools/stages.py (Spark's in-process status
 store, stages added since the previous query). Seconds cover the builder
 plus the noop write; the stage read happens outside that window.
 
-With --round N writes BENCHSWEEP_r{N}.json (per-query seconds) and
-SHUFFLE_r{N}.json (per-query bytes); always prints one summary JSON line.
+Codegen compiles per query are the Janino compiles (codegen cache misses)
+counted while it ran, from tools/stages.py::codegen_compiles; with a cache
+large enough for the pass, their total is the number of distinct generated
+classes the registry needs.
+
+With --round N writes BENCHSWEEP_r{N}.json (per-query seconds and codegen
+compiles) and SHUFFLE_r{N}.json (per-query bytes); always prints one summary
+JSON line.
 Exits nonzero if any query fails, loses a stage from the status store, or
 shuffles more than SHUFFLE_CAP_BYTES (a generous blow-up guard: the whole
 sf0.1 lineitem table is ~70 MB on disk, so >2 GB shuffled by one query
@@ -55,7 +61,7 @@ def main() -> None:
     args = [a for a in argv if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
 
-    from stages import LostStageError, StageReader
+    from stages import LostStageError, StageReader, codegen_compiles
 
     from conceptnetwork_spark import registry
     from conceptnetwork_spark.session import get_spark
@@ -73,10 +79,12 @@ def main() -> None:
 
     reader = StageReader(spark)
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     per: dict[str, dict] = {}
     failures: list[str] = []
     lost: list[str] = []
     for name, fn in qs.items():
+        c0 = codegen_compiles(spark)[0]
         t0 = time.perf_counter()
         try:
             # noop sink, not count(): count() lets Catalyst prune unused
@@ -89,6 +97,7 @@ def main() -> None:
             # of the query's rows would actually pay for.
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 3)
+            compiles[name] = codegen_compiles(spark)[0] - c0
         except Exception as ex:  # record, don't abort the pass
             timings[name] = -1.0
             failures.append(name)
@@ -104,6 +113,7 @@ def main() -> None:
         per[name] = {k: v for k, v in m.items() if k != "n_stages"}
 
     total = round(sum(t for t in timings.values() if t > 0), 3)
+    compiles_total = sum(compiles.values())
     over = {
         n: m["shuffle_write"]
         for n, m in per.items()
@@ -126,13 +136,15 @@ def main() -> None:
         _write(f"BENCHSWEEP_r{rnd:02d}.json", {
             "metric": "full_sweep_one_shot_wall_clock_detail", "value": total,
             "unit": "sec", "queries": timings, "n_queries": len(timings),
-            "failures": failures,
+            "failures": failures, "codegen_compiles": compiles,
+            "codegen_compiles_total": compiles_total,
         })
         _write(f"SHUFFLE_r{rnd:02d}.json", shuffle)
     summary = {k: v for k, v in shuffle.items() if k != "per_query"}
     summary["top_shufflers"] = {n: m["shuffle_write"] for n, m in top[:10]}
     summary["lost_stage_queries"] = lost
     summary["sweep_total_sec"] = total
+    summary["codegen_compiles_total"] = compiles_total
     print(json.dumps(summary))
     spark.stop()
     sys.exit(1 if (over or failures or lost) else 0)

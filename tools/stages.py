@@ -10,6 +10,11 @@ call must form one unbroken id range. A hole in it is a stage the store
 never recorded or already evicted (``spark.ui.retainedStages``), and the
 bytes of that query would be undercounted, so ``read()`` raises
 ``LostStageError`` instead of returning a short total.
+
+``codegen_compiles(spark)`` reads the JVM-wide codegen compile counters
+(every class Spark generates: whole-stage code, projections, predicates), so
+a caller takes the classes compiled between two points as the difference of
+two reads.
 """
 
 from __future__ import annotations
@@ -79,3 +84,14 @@ class StageReader:
                     "status store; their bytes would be missing"
                 )
         return out
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """(classes compiled, milliseconds spent compiling them) since the JVM
+    started. Both count Janino compiles only, i.e. codegen cache misses; a
+    cache hit adds nothing. The counters are JVM-global and outlive
+    ``spark.stop()``."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6
