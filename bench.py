@@ -5,9 +5,12 @@ and prints per-query wall-clock seconds: a full-detail JSON line followed by
 a compact (<1 KB) summary JSON line LAST, so a tail-capture that truncates
 long lines always retains a parseable record (see _emit).
 
-Each query is fully materialized via a count() on the final plan (no
-collect of payload rows to the driver). A warm-up scan primes the JVM and
-file cache so numbers reflect steady-state execution, not session startup.
+Each query is timed through tools/stages.py::timed_run, which materializes
+every column (count() would let Catalyst prune columns, and with them whole
+windows and exchanges). One untimed warm-up pass primes the JVM, the file
+cache and the codegen cache; then three timed passes run round-robin over
+the queries, forward, reverse and forward again, and each query reports the
+min of its three runs.
 """
 
 from __future__ import annotations
@@ -15,11 +18,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from conceptnetwork_spark import get_spark, registry  # noqa: E402
+from perfbench.run import calibrate  # noqa: E402
+from stages import timed_run  # noqa: E402
 
 # Headline set: one per operator family, covering scan/join/agg/window/
 # setop/scalar/UDF/streaming-batch/dedup/similarity/text/ML.
@@ -295,115 +300,17 @@ HEADLINE = [
 ]
 
 
-CALIBRATION_KIND = "numpy_matmul_1500_median5"
-
-
-def _calibrate(spark) -> float:
-    """Fixed micro-calibration probe measuring HOST state so cross-round
-    per-query deltas are attributable — three rounds of +5% headline creep
-    (63.8 -> 70.2 -> 74.4 s) were otherwise unattributable between host
-    variance and real drift (VERDICT r8 ask #6). A dense 1500x1500 matmul,
-    median of 5 after two warm-ups: measured 0.8% run-to-run on an idle
-    host, 14x inflated under the contention event the r9 close caught. A
-    Spark-job calibrator was tried first and rejected — any spark.range
-    aggregate is dominated by the ~0.2 s job-scheduling floor (±50 ms
-    noise regardless of row count, measured 10M-400M rows), making the
-    probe itself ±30% noisy. `spark` is accepted for signature stability.
-
-    The probe is a COMPARABILITY GATE, not a divisor: a 1-thread probe
-    over-reacts to partial load relative to 32-way query stages (measured:
-    probe 14x vs queries 1.55x under the same contention), and a 32-way
-    probe is ±40% noisy even idle, so no single scalar can rescale a
-    loaded run onto an idle one. _host_normalized_flags therefore only
-    compares runs whose calibrations AGREE (both idle or equally loaded)
-    and declares the comparison unreliable otherwise."""
-    import statistics
-
-    import numpy as np
-
-    a = np.full((1500, 1500), 1.0001)
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        _ = a @ a
-        return time.perf_counter() - t0
-
-    run(), run()  # page-in + BLAS thread-pool warm-up, untimed
-    return round(statistics.median(run() for _ in range(5)), 4)
-
-
-def _timed_pass(spark, qs, sf_dir: str) -> dict[str, float]:
-    """Measured pass: three timed runs per query, min reported — a single GC
-    pause or OS scheduling blip otherwise lands in one query's number and
-    dominates the total (observed 10x outliers on individual runs; round-1
-    driver bench recorded 7-75 s for queries that measure <1.6 s on an
-    idle host, so the measurement must survive a loaded host). A GC nudge
-    between queries keeps one query's garbage out of the next's timing."""
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        spark.sparkContext._jvm.System.gc()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-    return timings
-
-
-def _host_normalized_flags(
-    timings: dict[str, float], calibration_sec: float
-) -> dict:
-    """Compare this run against the newest same-kind BENCHDETAIL_r{N}.json
-    snapshot. If the two calibrations agree within 25% (same host state —
-    both idle, in practice), per-query ratios are directly comparable and
-    anything >1.3x is flagged as real drift (plan change, new shuffle,
-    lost broadcast). If the calibrations DISAGREE, the host states differ
-    and no scalar can rescale one onto the other (a 1-thread probe and a
-    32-way stage respond differently to partial load), so the comparison
-    is declared unreliable instead of producing mis-scaled flags."""
-    import glob
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    snaps = sorted(glob.glob(os.path.join(root, "BENCHDETAIL_r*.json")))
-    baseline = None
-    for p in reversed(snaps):
-        try:
-            with open(p) as f:
-                cand = json.load(f)
-            # only snapshots taken with the SAME calibration workload are
-            # comparable (the r9 Spark-job calibrator was ±30% noisy and
-            # its values must never normalize a matmul-calibrated run)
-            if cand.get("calibration_sec") and (
-                cand.get("calibration_kind") == CALIBRATION_KIND
-            ):
-                baseline = (os.path.basename(p), cand)
-                break
-        except (OSError, json.JSONDecodeError):
-            continue
-    if baseline is None:
-        return {"vs": None, "note": "no prior snapshot with calibration_sec"}
-    name, prev = baseline
-    prev_cal = prev["calibration_sec"]
-    cal_ratio = round(calibration_sec / prev_cal, 3)
-    if not (1 / 1.25 <= cal_ratio <= 1.25):
-        return {
-            "vs": name,
-            "host_speed_ratio": cal_ratio,
-            "note": "host states differ (calibrations disagree >25%); "
-            "per-query comparison unreliable — re-measure idle",
-        }
-    flags = {}
-    for q, t in timings.items():
-        pt = prev.get("queries", {}).get(q)
-        if not pt or pt <= 0 or t <= 0:
-            continue
-        ratio = round(t / pt, 3)
-        if ratio > 1.3:
-            flags[q] = ratio
-    return {"vs": name, "host_speed_ratio": cal_ratio,
-            "flagged_over_1.3x": flags}
+def _timed_passes(spark, qs, sf_dir: str) -> dict[str, float]:
+    """Three timed passes in alternating order, so no query always runs
+    right after the same neighbour; min seconds per query. A GC nudge
+    before each run keeps one query's garbage out of the next one's time."""
+    best = dict.fromkeys(HEADLINE, float("inf"))
+    for order in (HEADLINE, HEADLINE[::-1], HEADLINE):
+        for name in order:
+            spark.sparkContext._jvm.System.gc()
+            run = timed_run(spark, qs[name], sf_dir)
+            best[name] = min(best[name], run["total"])
+    return {name: round(t, 3) for name, t in best.items()}
 
 
 def _emit(metric: str, total: float, timings: dict[str, float], extra: dict) -> dict:
@@ -417,18 +324,10 @@ def _emit(metric: str, total: float, timings: dict[str, float], extra: dict) -> 
               "queries": timings, **extra}
     print(json.dumps(detail))
     # The FINAL stdout line must parse even when the driver keeps only the
-    # last ~2000 bytes (BENCH_r10.json: the flagged_over_1.3x dict grew past
-    # the tail window, the line's HEAD was cut, parsed=null). Hard-cap every
-    # unbounded dict and, if the line still exceeds the budget, shrink the
+    # last ~2000 bytes (BENCH_r10.json: the line's HEAD was cut,
+    # parsed=null). If the line exceeds the budget, shrink the
     # slowest-queries list until it fits.
     LINE_BUDGET = 1800
-    extra = dict(extra)
-    hn = extra.get("host_normalized")
-    if isinstance(hn, dict) and isinstance(hn.get("flagged_over_1.3x"), dict):
-        flags = hn["flagged_over_1.3x"]
-        worst = dict(sorted(flags.items(), key=lambda kv: -kv[1])[:8])
-        extra["host_normalized"] = {**hn, "flagged_over_1.3x": worst,
-                                    "n_flagged": len(flags)}
     for n_slowest in (20, 10, 5, 0):
         slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:n_slowest])
         summary = {"metric": metric, "value": total, "unit": "sec",
@@ -461,59 +360,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 
-    # warm-up: prime OS file cache, then run each query once so JIT/codegen
-    # compilation is excluded — timings reflect steady-state execution (the
-    # number that matters for a long-lived cluster serving many queries)
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
+    # warm-up: run each query once, untimed, so JIT/codegen compilation and
+    # first reads are excluded — timings reflect steady-state execution
+    # (the number that matters for a long-lived cluster serving many queries)
     for name in HEADLINE:
-        qs[name](spark, sf_dir).count()
+        timed_run(spark, qs[name], sf_dir)
 
-    calibration_sec = _calibrate(spark)
-    timings = _timed_pass(spark, qs, sf_dir)
-
-    # Calibration-retry gate (VERDICT r12 ask #2): the r12 driver run landed
-    # on a host ~5-8x slower than the committed snapshot and its numbers
-    # invalidated the whole round's perf comparison. When THIS run's
-    # calibration says the host is >25% SLOWER than the committed
-    # BENCHDETAIL baseline (contention — the only direction a retry can
-    # fix; a host FASTER than baseline is the better ground truth), retry
-    # up to 2 times. Each retry first re-runs only the CHEAP calibration
-    # probe (after a short back-off so a transient episode can pass) and
-    # re-runs the expensive timed pass only once the host has actually
-    # recovered (probe agrees with baseline, or improved >=30%) — burning
-    # a full pass measuring the same contention tells us nothing and
-    # triples the bench wall-clock inside the driver's window. Whichever
-    # (calibration, timings) attempt saw the best host state is emitted,
-    # stamped with calibration_retries.
-    calibration_retries = 0
-    hn = _host_normalized_flags(timings, calibration_sec)
-    while (
-        calibration_retries < 2
-        and hn.get("host_speed_ratio", 0) > 1.25
-        and "unreliable" in hn.get("note", "")
-    ):
-        calibration_retries += 1
-        time.sleep(15 * calibration_retries)
-        cal2 = _calibrate(spark)
-        recovered = (
-            "unreliable"
-            not in _host_normalized_flags(timings, cal2).get("note", "")
-            or cal2 < calibration_sec * 0.7
-        )
-        if recovered:
-            timings2 = _timed_pass(spark, qs, sf_dir)
-            # adopt the (calibration, timings) PAIR only together — a
-            # better probe stapled to the contended pass would misstate
-            # the host state the timings were taken in
-            if cal2 < calibration_sec:
-                calibration_sec, timings = cal2, timings2
-            hn = _host_normalized_flags(timings, calibration_sec)
-            # one re-timed pass is the budget: a full pass is ~5 min of
-            # the driver's window, and the third-best of three host
-            # states adds no attribution value (measured: 2 re-passes
-            # pushed the sf0.001 smoke past 20 min)
-            break
-        hn = _host_normalized_flags(timings, calibration_sec)
+    # host-speed bracket, reported only: it rescales and gates nothing
+    cal_before = calibrate()
+    timings = _timed_passes(spark, qs, sf_dir)
+    cal_after = calibrate()
 
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -523,18 +379,14 @@ def main() -> None:
         timings=timings,
         extra={
             "sf": float(sf) if sf else None,
-            "calibration_sec": calibration_sec,
-            "calibration_kind": CALIBRATION_KIND,
-            "calibration_retries": calibration_retries,
-            "host_normalized": hn,
+            "calibration_s": [round(cal_before, 4), round(cal_after, 4)],
         },
     )
     # the headline detail also lands as a FILE (VERDICT r6 ask #7): a
     # tail-capture of stdout truncates the multi-KB detail line as the query
     # count grows, so per-query visibility must not depend on stdout at all —
     # tools/roundclose.py snapshots this as BENCHDETAIL_r{N}.json
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCHDETAIL.json"), "w") as f:
+    with open(os.path.join(ROOT, "BENCHDETAIL.json"), "w") as f:
         json.dump(detail, f)
         f.write("\n")
     spark.stop()

@@ -20,7 +20,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -1033,6 +1033,44 @@ def _stage_outer_join(spark: SparkSession, sf_dir: str) -> str:
     return staged("ojoin", build, sf_dir)
 
 
+def _outer_join_sides(
+    spark: SparkSession, sf_dir: str, *, purchase_id: bool = True
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The two sides of the interval stream joins over the outer-join
+    stage, each watermarked OUTER_DELAY, and their condition: a purchase
+    by the same user in [v_ts, v_ts + OUTER_INTERVAL). Views carry
+    (view_id, user_id, v_ts); purchases carry (purchase_id, p_user, p_ts),
+    without purchase_id when the join reads none (semi)."""
+    stage = _stage_outer_join(spark, sf_dir)
+    views = (
+        file_stream(spark, stage)
+        .where(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            "user_id",
+            F.col("ts").alias("v_ts"),
+        )
+        .withWatermark("v_ts", OUTER_DELAY)
+    )
+    payload = [F.col("event_id").alias("purchase_id")] if purchase_id else []
+    purchases = (
+        file_stream(spark, stage)
+        .where(F.col("event_type") == "purchase")
+        .select(
+            *payload,
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", OUTER_DELAY)
+    )
+    cond = (
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}"))
+    )
+    return views, purchases, cond
+
+
 @register(
     "d25_stream_outer_join",
     # Emission model (measured, Spark 4.1): inner matches emit in the batch
@@ -1093,34 +1131,8 @@ def d25_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides — the interval condition is what makes a 100 TB stream-stream
     join feasible at all, and the outer emission latency IS the watermark
     delay (the price of correct null semantics under out-of-order data)."""
-    stage = _stage_outer_join(spark, sf_dir)
-    views = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", OUTER_DELAY)
-    )
-    purchases = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", OUTER_DELAY)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
-        "leftOuter",
-    )
+    views, purchases, cond = _outer_join_sides(spark, sf_dir)
+    joined = views.join(purchases, cond, "leftOuter")
     q = run_bounded(joined, "ojoin", mode="append", state_partitions=8)
     return (
         spark.table(q.name)
@@ -1172,33 +1184,8 @@ def d25_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — carries each left row at most once, which is the point of
     choosing semi over inner-then-distinct on a 100 TB stream: the
     dedup happens IN the join state, not as a second stateful stage."""
-    stage = _stage_outer_join(spark, sf_dir)
-    views = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", OUTER_DELAY)
-    )
-    purchases = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", OUTER_DELAY)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
-        "leftSemi",
-    )
+    views, purchases, cond = _outer_join_sides(spark, sf_dir, purchase_id=False)
+    joined = views.join(purchases, cond, "leftSemi")
     q = run_bounded(joined, "sjoin", mode="append", state_partitions=8)
     return (
         spark.table(q.name)
@@ -1659,34 +1646,8 @@ def d25_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay + interval on both sides; full-outer adds no state, only the
     second null-emission scan at eviction time. user_id is carried from
     whichever side is present (COALESCE in the readout)."""
-    stage = _stage_outer_join(spark, sf_dir)
-    views = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", OUTER_DELAY)
-    )
-    purchases = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", OUTER_DELAY)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
-        "fullOuter",
-    )
+    views, purchases, cond = _outer_join_sides(spark, sf_dir)
+    joined = views.join(purchases, cond, "fullOuter")
     q = run_bounded(joined, "fojoin", mode="append", state_partitions=8, timeout=180)
     return (
         spark.table(q.name)
@@ -1820,34 +1781,8 @@ def d25_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same bounded per-key state as the other stream joins
     (delay + interval per side); choosing left vs right outer is a
     semantics decision, not a cost one."""
-    stage = _stage_outer_join(spark, sf_dir)
-    views = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", OUTER_DELAY)
-    )
-    purchases = (
-        file_stream(spark, stage)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", OUTER_DELAY)
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("v_ts"))
-        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {OUTER_INTERVAL}")),
-        "rightOuter",
-    )
+    views, purchases, cond = _outer_join_sides(spark, sf_dir)
+    joined = views.join(purchases, cond, "rightOuter")
     q = run_bounded(joined, "rojoin", mode="append", state_partitions=8, timeout=180)
     return (
         spark.table(q.name)

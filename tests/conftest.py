@@ -1,10 +1,9 @@
 import os
 
-import duckdb
 import pytest
 
 from conceptnetwork_spark import get_spark
-from conceptnetwork_spark.catalog import TABLES
+from tests.oracle_utils import oracle_db
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
@@ -33,10 +32,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
+    con = oracle_db(SF_ORACLE)
     yield con
     con.close()

@@ -6,7 +6,19 @@ from __future__ import annotations
 import math
 from decimal import Decimal
 
+import duckdb
 import numpy as np
+
+from conceptnetwork_spark.catalog import TABLES
+
+
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``, the
+    tables every oracle's SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def _norm_cell(v):

@@ -10,13 +10,9 @@ perfbench/data/sf0.1, the benchmark's copy of the sf0.1 tables).
 
 The sides must return identical rows (compared sorted); otherwise the tool
 exits nonzero before timing anything. It then runs them in ABBA blocks,
-REPS runs per side, each fully materialized (every column, so Catalyst
-cannot prune any), and prints min and median seconds per layer:
-
-- build: the builder call, minus the Catalyst analysis run inside it;
-- plan: Catalyst analysis, optimization and planning, from the final
-  query's planning tracker;
-- execute: the materialization, minus the planning run inside it.
+REPS runs per side, each through ``stages.timed_run`` (every column
+materialized, so Catalyst cannot prune any), and prints min and median
+seconds per layer: build, plan, execute (see ``timed_run``) and total.
 
 A last line per side gives the generated classes compiled during
 its timed runs, and the milliseconds spent compiling them. Warm runs of an
@@ -32,13 +28,11 @@ import importlib
 import os
 import statistics
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
-from perfbench.spans import plan_phases  # noqa: E402
-from stages import codegen_compiles  # noqa: E402
+from stages import timed_run  # noqa: E402
 
 REPS = 8  # runs per side
 LAYERS = ("build", "plan", "execute", "total")
@@ -49,23 +43,6 @@ def resolve(side: str, qs: dict):
         module, fn = side.split(":", 1)
         return getattr(importlib.import_module(module), fn)
     return qs[side]
-
-
-def timed_run(spark, fn, sf_dir: str) -> dict[str, float]:
-    c0 = codegen_compiles(spark)
-    t0 = time.time()
-    df = fn(spark, sf_dir)
-    t1 = time.time()
-    qe = df._jdf.queryExecution()
-    qe.toRdd().count()
-    t2 = time.time()
-    c1 = codegen_compiles(spark)
-    out = {"build": t1 - t0, "plan": 0.0, "execute": t2 - t1, "total": t2 - t0,
-           "compiles": c1[0] - c0[0], "compile_ms": c1[1] - c0[1]}
-    for start, end in plan_phases(qe).values():
-        out["plan"] += end - start
-        out["build" if start < t1 else "execute"] -= end - start
-    return out
 
 
 def main() -> None:

@@ -56,7 +56,7 @@ def main() -> None:
     import duckdb
 
     from conceptnetwork_spark import registry
-    from conceptnetwork_spark.catalog import TABLES
+    from tests.oracle_utils import oracle_db
 
     flagged: dict[str, list[str]] = {}
     errors: list[tuple[str, str, str]] = []
@@ -65,11 +65,7 @@ def main() -> None:
         # time from this env var — resolve per SF
         os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
         oracles = registry.oracles()
-        ddb = duckdb.connect()
-        for t in TABLES:
-            ddb.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
+        ddb = oracle_db(sf_dir)
         for name in sorted(oracles):
             try:
                 df = ddb.execute(oracles[name]).fetchdf()

@@ -1,19 +1,20 @@
 #!/usr/bin/env python
 """The one pass over the registry: run every registered query once at the
-given scale factor, fully materialized through the noop sink, and record
-its one-shot wall seconds plus the bytes it actually SHUFFLED and spilled —
-the 100x-scale signal .explain() can't give you. A query whose plan looks
-right but moves the whole fact table through an exchange shows up here,
-not in the plan audit.
+given scale factor through tools/stages.py::timed_run (every column
+materialized, so Catalyst cannot prune a window or an exchange away), and
+record its one-shot wall seconds plus the bytes it actually SHUFFLED and
+spilled — the 100x-scale signal .explain() can't give you. A query whose
+plan looks right but moves the whole fact table through an exchange shows
+up here, not in the plan audit.
 
 Bytes per query come from tools/stages.py (Spark's in-process status
-store, stages added since the previous query). Seconds cover the builder
-plus the noop write; the stage read happens outside that window.
+store, stages added since the previous query). Seconds are timed_run's
+total (builder plus materialization); the stage read happens outside that
+window.
 
 Codegen compiles per query are the Janino compiles (codegen cache misses)
-counted while it ran, from tools/stages.py::codegen_compiles; with a cache
-large enough for the pass, their total is the number of distinct generated
-classes the registry needs.
+timed_run counted while it ran; with a cache large enough for the pass,
+their total is the number of distinct generated classes the registry needs.
 
 With --round N writes BENCHSWEEP_r{N}.json (per-query seconds and codegen
 compiles) and SHUFFLE_r{N}.json (per-query bytes); always prints one summary
@@ -31,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -61,7 +61,7 @@ def main() -> None:
     args = [a for a in argv if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
 
-    from stages import LostStageError, StageReader, codegen_compiles
+    from stages import LostStageError, StageReader, timed_run
 
     from conceptnetwork_spark import registry
     from conceptnetwork_spark.session import get_spark
@@ -84,20 +84,15 @@ def main() -> None:
     failures: list[str] = []
     lost: list[str] = []
     for name, fn in qs.items():
-        c0 = codegen_compiles(spark)[0]
-        t0 = time.perf_counter()
         try:
-            # noop sink, not count(): count() lets Catalyst prune unused
-            # output columns — a Window whose outputs feed only pruned
-            # aggregates is REMOVED and its exchange shrinks to the
-            # map-side-combined count plan (measured: d27_interval_merge
-            # at a 10M-row events blow-up "shuffled" 0.8 MB under count()
-            # vs the real ~180 MB). The noop writer consumes the full
-            # output schema, so the measured plan is the one a consumer
-            # of the query's rows would actually pay for.
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            compiles[name] = codegen_compiles(spark)[0] - c0
+            # every column, not count(): under count() a Window whose
+            # outputs feed only pruned aggregates is REMOVED and its
+            # exchange shrinks to the map-side-combined count plan
+            # (measured: d27_interval_merge at a 10M-row events blow-up
+            # "shuffled" 0.8 MB under count() vs the real ~180 MB)
+            run = timed_run(spark, fn, sf_dir)
+            timings[name] = round(run["total"], 3)
+            compiles[name] = run["compiles"]
         except Exception as ex:  # record, don't abort the pass
             timings[name] = -1.0
             failures.append(name)

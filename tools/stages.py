@@ -15,9 +15,21 @@ bytes of that query would be undercounted, so ``read()`` raises
 (every class Spark generates: whole-stage code, projections, predicates), so
 a caller takes the classes compiled between two points as the difference of
 two reads.
+
+``timed_run(spark, fn, sf_dir)`` is the one way the tools time a query
+(bench.py, ab.py, shuffle_audit.py): the builder call, then Catalyst
+planning and full materialization through ``queryExecution().toRdd()
+.count()``, split into build, plan and execute seconds, with the classes
+compiled meanwhile. Every column is materialized: ``count()`` would let
+Catalyst prune the unused ones, and with them whole windows and exchanges,
+so the time and shuffle bytes would be those of a cheaper plan.
 """
 
 from __future__ import annotations
+
+import time
+
+from perfbench.spans import plan_phases
 
 FIELDS = {
     "shuffle_write": "shuffleWriteBytes",
@@ -95,3 +107,31 @@ def codegen_compiles(spark) -> tuple[int, float]:
     n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
     ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return int(n), ns / 1e6
+
+
+def timed_run(spark, fn, sf_dir: str) -> dict[str, float]:
+    """Build ``fn(spark, sf_dir)`` and materialize every column of it.
+
+    Returns seconds per layer, where build + plan + execute == total:
+
+    - build: the builder call, minus the Catalyst analysis run inside it;
+    - plan: Catalyst analysis, optimization and planning, from the final
+      query's planning tracker;
+    - execute: the materialization, minus the planning run inside it;
+
+    plus ``compiles`` and ``compile_ms``, the generated classes compiled
+    during the run and the milliseconds spent compiling them."""
+    c0 = codegen_compiles(spark)
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    t1 = time.time()
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    t2 = time.time()
+    c1 = codegen_compiles(spark)
+    out = {"build": t1 - t0, "plan": 0.0, "execute": t2 - t1, "total": t2 - t0,
+           "compiles": c1[0] - c0[0], "compile_ms": c1[1] - c0[1]}
+    for start, end in plan_phases(qe).values():
+        out["plan"] += end - start
+        out["build" if start < t1 else "execute"] -= end - start
+    return out

@@ -22,18 +22,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     window_size = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 
-    import duckdb
-
     from conceptnetwork_spark import registry
-    from conceptnetwork_spark.catalog import TABLES
     from conceptnetwork_spark.session import get_spark
-    from tests.oracle_utils import assert_oracle_match
+    from tests.oracle_utils import assert_oracle_match, oracle_db
 
     spark = get_spark(app_name="window-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
-    ddb = duckdb.connect()
-    for t in TABLES:
-        ddb.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    ddb = oracle_db(sf_dir)
 
     qs, ors = registry.queries(), registry.oracles()
     window = list(qs)[:window_size]
