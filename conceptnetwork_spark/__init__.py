@@ -21,7 +21,7 @@ no custom physical rules.
 """
 
 from conceptnetwork_spark.session import get_spark
-from conceptnetwork_spark.catalog import Catalog, TABLES
+from conceptnetwork_spark.catalog import Catalog, TABLES, catalog
 from conceptnetwork_spark.schema import FeatureSpec
 from conceptnetwork_spark.concept import Concept
 from conceptnetwork_spark.network import Network
@@ -29,6 +29,7 @@ from conceptnetwork_spark.network import Network
 __all__ = [
     "get_spark",
     "Catalog",
+    "catalog",
     "TABLES",
     "FeatureSpec",
     "Concept",

@@ -6,6 +6,16 @@ schema projection, predicate pushdown all come from the Parquet datasource —
 the reference hand-rolled these with TF queue runners
 (``conceptnetwork/network.py:184-203``).
 
+Every builder opens its tables through ``catalog(spark, sf_dir)``, the one
+``Catalog`` of that session and sf dir. It lives on the session object, so it
+dies with the session: a restarted session or ``spark.newSession()`` gets its
+own and never sees another session's DataFrame. Each table is read once and
+read again only when its file's ``(st_mtime_ns, st_size, st_ino)`` changes,
+so a file rewritten in place is never served from a stale scan. Indexes
+built from a table (the ANN codebooks and cells) are kept under the same
+rule. DataFrames stay lazy: the memo holds scans, never results.
+``Catalog(spark, sf_dir)`` itself stays a fresh, unmemoized opener.
+
 Dimension tables are flagged so the operator layer can attach explicit
 broadcast hints for the 100 TB design point (facts never broadcast).
 """
@@ -108,13 +118,25 @@ def _parse_bytes(conf: str) -> int:
     return int(float(num or "0") * mult)
 
 
+def _file_key(path: str) -> tuple[int, int, int] | None:
+    """The file's ``(st_mtime_ns, st_size, st_ino)``, or None when it
+    cannot be stat'ed locally (the read then reports the error)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
 class Catalog:
     """Lazy loader + temp-view registrar for one scale-factor directory."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
+        # name -> (file key, raw scan, table); an index name -> (key, index)
+        self._tables: dict[str, tuple] = {}
+        self._indexes: dict[str, tuple] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")
@@ -122,17 +144,56 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name not in TABLES:
             raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-        if name not in self._cache:
-            df = self.spark.read.parquet(self.path(name))
-            self._cache[name] = fix_nanos(df, name)
-        return self._cache[name]
+        key = _file_key(self.path(name))
+        hit = self._tables.get(name)
+        if hit is None or hit[0] != key or key is None:
+            raw = self.spark.read.parquet(self.path(name))
+            hit = self._tables[name] = (key, raw, fix_nanos(raw, name))
+        return hit[2]
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLES:
             return self.table(name)
         raise AttributeError(name)
 
+    def stream(self, name: str) -> DataFrame:
+        """readStream over the table's file, with the batch table's
+        timestamp conversion, so both sides agree."""
+        self.table(name)
+        schema = self._tables[name][1].schema
+        # glob suffix: the streaming file source requires a directory/glob,
+        # and the testdata lays each table out as a single parquet file
+        return fix_nanos(
+            self.spark.readStream.schema(schema).parquet(self.path(name) + "*"),
+            name,
+        )
+
+    def index(self, name: str, table: str, build) -> tuple:
+        """``build(self.table(table))``, kept until ``table``'s file changes.
+        The replaced index's persisted DataFrames are unpersisted."""
+        df = self.table(table)
+        key = self._tables[table][0]
+        hit = self._indexes.get(name)
+        if hit is not None and hit[0] == key and key is not None:
+            return hit[1]
+        if hit is not None:
+            for part in hit[1]:
+                if isinstance(part, DataFrame):
+                    part.unpersist()
+        value = build(df)
+        self._indexes[name] = (key, value)
+        return value
+
     def register_views(self, names: tuple[str, ...] = TABLES) -> None:
         """Register each table as a temp view for ``spark.sql`` queries."""
         for name in names:
             self.table(name).createOrReplaceTempView(name)
+
+
+def catalog(spark: SparkSession, sf_dir: str) -> Catalog:
+    """The one ``Catalog`` of ``spark`` for ``sf_dir``, kept on the session."""
+    cats = spark.__dict__.setdefault("_cn_catalogs", {})
+    cat = cats.get(sf_dir)
+    if cat is None:
+        cat = cats[sf_dir] = Catalog(spark, sf_dir)
+    return cat

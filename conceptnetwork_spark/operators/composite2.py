@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 
@@ -55,7 +55,7 @@ def d04_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair filter is applied after both to keep either direction. The
     only shuffles are lineitem⋈orders on orderkey and orders⋈customer on
     custkey; supplier broadcasts too at this dimension size."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     n1 = t.nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -118,7 +118,7 @@ def d04_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partkey join; region restricts the customer side; all dimensions
     broadcast. One numerator and one denominator come out of a single
     aggregation pass (no second scan)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     n1 = t.nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
@@ -185,7 +185,7 @@ def d09_q12_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. COUNT(CASE ...) keeps both engines in 64-bit integer counts.
     The theta condition is a residual filter on the equi-join, evaluated
     before the shuffle to the aggregation."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         t.lineitem.join(t.orders, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -221,7 +221,7 @@ def d09_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator are two aggregates of the same pass. Reading only the
     two part columns used keeps the broadcast small (column pruning
     reaches the parquet scan)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         t.lineitem.join(
@@ -267,7 +267,7 @@ def d09_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed a single time and reused (same plan subtree); the max is
     cross-joined as a broadcast scalar, never re-derived per row. The date
     filter pushes to the lineitem scan."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     revenue = (
         t.lineitem.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -327,7 +327,7 @@ def d09_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     >1 suppliers total and exactly 1 late supplier. Both aggregates are
     partial+final on orderkey — the same partitioning the join then reuses,
     so one shuffle feeds all three steps. No per-row subquery probes."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     late = (
         t.lineitem.join(
             t.orders.select("o_orderkey", "o_orderdate"),

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 
@@ -63,7 +63,7 @@ def d04_q2_min_acctbal_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     should be at scale: one groupBy(region).min() over the already-joined
     supplier side, broadcast back, equality filter. The min is one of the
     compared values, so the double equality is exact in both engines."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     sup_n = t.supplier.join(
         F.broadcast(t.nation),
         F.col("s_nationkey") == F.col("n_nationkey"),
@@ -103,7 +103,7 @@ def d09_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the plan: all four predicates pushed to the parquet scan (range on
     shipdate prunes row groups via min/max stats), two-column ReadSchema,
     partial+final agg, nothing else. Asserted in test_plans."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return li.where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -143,7 +143,7 @@ def d09_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter lives on the broadcast part side, so it prunes lineitem rows at
     the broadcast-hash probe before the orders shuffle — join order matters
     at 100 TB and is encoded here, not left to chance."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     parts = t.part.where(F.col("p_name").like("%gear%")).select(
         "p_partkey", "p_retailprice"
     )
@@ -192,7 +192,7 @@ def d09_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold (cached local view), exactly how Q11 must run at scale — two
     aggregations over one shuffle output, not two scans. The threshold
     compare is a broadcast of a single row (cross join), never a collect."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     nat = t.nation.where(F.col("n_name") == "NATION_3").select("n_nationkey")
     sups = t.supplier.join(
         F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey")
@@ -244,7 +244,7 @@ def d06_q20_heavy_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, a per-part re-aggregate of THAT output (tiny), broadcast
     back, then a semi-join into the supplier dimension — the lineitem scan
     happens once."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     red = t.part.where(F.col("p_name").like("%red%")).select("p_partkey")
     sp = (
         t.lineitem.join(F.broadcast(red), F.col("l_partkey") == F.col("p_partkey"))

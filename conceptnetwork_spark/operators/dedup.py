@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from conceptnetwork_spark.catalog import Catalog, ensure_parallelism
+from conceptnetwork_spark.catalog import catalog, ensure_parallelism
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
 
@@ -33,7 +33,7 @@ def d29_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate collapse keyed on md5(text): keep the min doc_id per
     content hash. One shuffle on a 128-bit key; at 100 TB the md5 groupBy is
     near-uniform (no skew) and partial aggregation keeps the shuffle tiny."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("h"))
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -202,7 +202,7 @@ def d29_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest checks pair-recall against planted near-dups."""
     from pyspark import StorageLevel
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     # persist the two small intermediates: signatures feed both sides of the
     # LSH self-join, and the candidate set is referenced three times by the
     # verify stage (pair join + the semi-join prefilter) — without an explicit
@@ -248,7 +248,7 @@ def d29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard over a bounded id range (oracle-checkable
     form of the verify stage; the scale path never runs this all-pairs —
     see d29_minhash_near_dup)."""
-    d = Catalog(spark, sf_dir).documents.where(F.col("doc_id") < 40)
+    d = catalog(spark, sf_dir).documents.where(F.col("doc_id") < 40)
     toks = F.array_distinct(
         F.split(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))), " ")
     )
@@ -337,7 +337,7 @@ def simhash64_fast(col) -> Column:
 def d29_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 64-bit SimHash fingerprints. Non-oracle (hash definition is
     engine-internal); pytest asserts determinism + near-dup Hamming locality."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
+    d = ensure_parallelism(catalog(spark, sf_dir).documents)
     return d.select("doc_id", simhash64_fast(F.col("text")).alias("simhash")).orderBy(
         "doc_id"
     )
@@ -348,7 +348,7 @@ def d29_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidate pairs over documents (chunk-bucketed, then
     Hamming-verified). Non-oracle (hash definition is engine-internal);
     pytest asserts the Hamming bound and pair ordering."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return simhash_near_dup_pairs(d, max_hamming=10).orderBy("doc_a", "doc_b")
 
 
@@ -461,7 +461,7 @@ def d29_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus lands as ONE file partition locally and interpreted-HOF
     shingling on a single task dominated the wall clock (measured 4.1 s
     -> 0.9 s warm at sf0.1)."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
+    d = ensure_parallelism(catalog(spark, sf_dir).documents)
 
     def gram_ids(df: DataFrame) -> DataFrame:
         g = df.select("doc_id", F.explode(shingles(F.col("text"), DECON_N)).alias("g"))
@@ -530,7 +530,7 @@ def d29_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides; with the index stored bucketed by hash (d03_bucketed_join
     layout) the index side never reshuffles across batches, and each
     ingest pays one small-batch shuffle."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     corpus_idx = (
         d.where(F.col("doc_id") < INCR_SPLIT)
         .select(F.md5(F.col("text").cast("binary")).alias("h"))
@@ -606,7 +606,7 @@ def d29_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs ONLY on candidates, codegen'd JVM-side. The distinct-pair dedup
     shuffles (word_a, word_b) ids once."""
     w = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .part.select(F.split(F.col("p_name"), " ").getItem(0).alias("word"))
         .distinct()
         .where(F.length("word") >= FUZZY_Q)
@@ -698,7 +698,7 @@ def d29_shard_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrices; a 2^-64-per-pair collision is below corpus noise — the
     d31_block_dedup note, applied rather than deferred). Output is
     |shards|² rows."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )
@@ -808,7 +808,7 @@ def _es_diag_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d29_exact_substr for the reduction argument and scale shape."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )
@@ -1006,7 +1006,7 @@ def d29_substr_span_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("covered").alias("n_dropped"))
     )
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
 
@@ -163,7 +163,7 @@ def d29_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree on; large-star/small-star CC turns it into (doc_id, cluster_id).
     The DuckDB oracle reaches the same fixpoint by recursive-CTE label
     propagation — two different algorithms, one answer."""
-    d = Catalog(spark, sf_dir).documents.where(F.col("doc_id") < 200)
+    d = catalog(spark, sf_dir).documents.where(F.col("doc_id") < 200)
     toks = F.array_distinct(
         F.split(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))), " ")
     )
@@ -199,7 +199,7 @@ def d29_dup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    docs = Catalog(spark, sf_dir).documents
+    docs = catalog(spark, sf_dir).documents
     # lazy lineage cuts (the d29_minhash_near_dup persist discipline, in
     # checkpoint form): signatures feed both LSH self-join sides, and the
     # candidate relation is referenced three times by the verify stage —
@@ -279,7 +279,7 @@ def d29_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node, double) pairs only; edge payloads never widen. Dangling nodes
     contribute nothing here (bounded subgraph), matching the oracle's
     LEFT-JOIN-with-COALESCE formulation."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     # same lazy lineage cut as d29_ppr_2iter below: the node set, the
     # out-degrees and both unrolled iterations re-consume `edges`; uncut,
     # the initial plan re-derived the orders⋈lineitem⋈distinct subtree per
@@ -445,7 +445,7 @@ def d29_ppr_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a dense vector. Reference anchor: no graph surface in the
     reference (SURVEY §2.1) — mandated LLM-pipeline extension (§2.2
     D29)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     # one LAZY localCheckpoint (shared-RDD lineage cut): the unrolled
     # iterations, node set, teleport vector and out-degrees all re-consume
     # `edges`; uncut, the initial plan duplicated the orders⋈lineitem
@@ -537,7 +537,7 @@ def d29_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     which provably minimizes wedge fan-out (Cohen's MapReduce triangle
     algorithm) — preserves the count; id-orientation is used here so the
     oracle is expressible in one SQL statement."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     bulk = (
         li.where(F.col("l_quantity") >= TRI_MIN_QTY)
         .select("l_orderkey", "l_suppkey")
@@ -641,7 +641,7 @@ def d29_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final count on (node, label), and a node-keyed argmax window
     (max-cardinality key). Label state is (long, long) pairs; edges
     never widen. The readout aggregates communities, not nodes."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     bulk = (
         li.where(F.col("l_quantity") >= LPA_MIN_QTY)
         .select("l_orderkey", "l_suppkey")
@@ -761,7 +761,7 @@ def d29_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs, no global sort; the unrolled lineage is 3 rounds deep
     (a fixpoint implementation checkpoints the edge set every few
     rounds, exactly like d29_dup_clusters' alternating-star CC)."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     bulk = (
         li.where(F.col("l_quantity") >= KCORE_MIN_QTY)
         .select("l_orderkey", "l_suppkey")
@@ -883,7 +883,7 @@ def d29_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-side-combinable moment aggregate to six scalars; the
     correlation is closed-form driver arithmetic on one row. No window,
     no all-pairs, nothing quadratic."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     bulk = (
         li.where(F.col("l_quantity") >= ASSORT_MIN_QTY)
         .select("l_orderkey", "l_suppkey")
@@ -1024,7 +1024,7 @@ def d29_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative-zero class (r11 rolling_corr lesson). Reference anchor: no
     graph surface in the reference (SURVEY §2.1) — mandated LLM-pipeline
     extension (§2.2 D29)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     edges = (
         t.orders.where(F.col("o_orderkey") < 1500)
         .join(t.lineitem, F.col("o_orderkey") == F.col("l_orderkey"))

@@ -24,7 +24,7 @@ from pyspark.ml.regression import LinearRegression
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.sources.staging import scratch_dir
 
@@ -146,7 +146,7 @@ def d33_ols_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped fit is pinned by tests against the raw-row solver."""
     from pyspark.ml.functions import array_to_vector
 
-    li = Catalog(spark, sf_dir).lineitem.select("l_quantity", "l_extendedprice")
+    li = catalog(spark, sf_dir).lineitem.select("l_quantity", "l_extendedprice")
     g = li.groupBy("l_quantity").agg(
         F.count(F.lit(1)).cast("double").alias("w"),
         F.avg("l_extendedprice").alias("ybar"),
@@ -200,7 +200,7 @@ def d33_gbt_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit (VERDICT r9 ask #7). At 100 TB the same shape holds: tree fitting
     runs on a bounded deterministic sample, never the full table."""
     li = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .lineitem.where(F.col("l_orderkey") % 4 == 0)
         .select("l_quantity", "l_discount", "l_tax", "l_extendedprice")
     )
@@ -243,7 +243,7 @@ def d33_string_indexer(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup — no shuffle of the fact rows at any scale."""
     from pyspark.ml.feature import StringIndexer
 
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     idx = StringIndexer(
         inputCol="c_mktsegment", outputCol="seg_idx_d", stringOrderType="frequencyDesc"
     )
@@ -268,7 +268,7 @@ def d33_mlp_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.classification import MultilayerPerceptronClassifier
     from pyspark.ml.feature import StringIndexer
 
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     med = c.agg(F.expr("percentile(c_acctbal, 0.5)").alias("m"))
     df = (
         c.join(F.broadcast(med))
@@ -312,7 +312,7 @@ def d33_logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.functions import array_to_vector
 
-    emb = Catalog(spark, sf_dir).embeddings
+    emb = catalog(spark, sf_dir).embeddings
     df = emb.select(
         array_to_vector(F.col("embedding").cast("array<double>")).alias(
             "features"
@@ -365,7 +365,7 @@ def d33_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    emb = Catalog(spark, sf_dir).embeddings
+    emb = catalog(spark, sf_dir).embeddings
     df = emb.select(
         "vec_id",
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
@@ -457,7 +457,7 @@ def d33_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import StandardScaler
     from pyspark.ml.functions import vector_to_array
 
-    c = Catalog(spark, sf_dir).customer.select(
+    c = catalog(spark, sf_dir).customer.select(
         "c_custkey",
         F.col("c_acctbal").cast("double").alias("f1"),
         F.col("c_nationkey").cast("double").alias("f2"),
@@ -498,7 +498,7 @@ def d33_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.evaluation import RegressionEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    c = Catalog(spark, sf_dir).customer.select(
+    c = catalog(spark, sf_dir).customer.select(
         (F.col("c_acctbal") / 10000.0).alias("x"),
         (F.col("c_acctbal") / 10000.0 * 2.0 + 7.0).alias("label"),
     )
@@ -544,9 +544,9 @@ def d33_als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage the same way the CC fixpoint (graph.py) does."""
     from pyspark.ml.recommendation import ALS
 
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     ratings = (
-        li.join(Catalog(spark, sf_dir).orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(catalog(spark, sf_dir).orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(
             F.col("o_custkey").cast("int").alias("user"),
             F.col("l_partkey").cast("int").alias("item"),
@@ -615,7 +615,7 @@ def d33_fpgrowth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket mining bounds it with minSupport exactly as done here."""
     from pyspark.ml.fpm import FPGrowth
 
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     cb = (
         t.lineitem.select("l_orderkey", "l_partkey")
         .join(t.orders.select("o_orderkey", "o_custkey"),
@@ -708,7 +708,7 @@ def d33_prefixspan_journeys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.ml.fpm import PrefixSpan
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (
         ev.select("user_id", "event_type", "ts", "event_id")
@@ -761,7 +761,7 @@ def d33_pca_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector
 
-    e = Catalog(spark, sf_dir).embeddings.select(
+    e = catalog(spark, sf_dir).embeddings.select(
         array_to_vector(
             F.transform("embedding", lambda x: x.cast("double"))
         ).alias("feat")
@@ -846,7 +846,7 @@ def d33_chisq_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout is the same declared scalar exception as d33_ols_mse."""
     from pyspark.ml.stat import ChiSquareTest
 
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     base = e.select(
         F.expr(_CHISQ_F0).cast("double").alias("f0"),
         F.floor(F.hour("ts") / 6).cast("double").alias("f1"),
@@ -924,7 +924,7 @@ def d33_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d33_ols_mse precedent)."""
     from pyspark.ml.classification import NaiveBayes
 
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     aggs = [
         F.sum(F.when(F.col("event_type") == t, 1).otherwise(0))
         .cast("double")

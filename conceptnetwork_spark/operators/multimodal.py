@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.sources.staging import staged
 
@@ -201,7 +201,7 @@ def d32_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, so payload := utf-8 bytes of documents.text — the plumbing
     (binary column -> mapInPandas -> typed metadata) is the real operator;
     n_bytes/sha are oracle-checkable against DuckDB's blob functions."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     payloads = d.select("doc_id", F.col("text").cast("binary").alias("payload"))
     meta = extract_media_metadata(payloads)
     return meta.select("doc_id", "n_bytes", "sha").orderBy("doc_id")
@@ -213,7 +213,7 @@ def d32_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-histogram stand-in for the real image/audio featurizer; see
     decode_image for the stubbed production kernel). Rows-only check: the
     output is deterministic but DuckDB has no mapInPandas equivalent."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     payloads = d.select("doc_id", F.col("text").cast("binary").alias("payload"))
     return fake_feature_extract(payloads).orderBy("doc_id")
 
@@ -223,7 +223,7 @@ def d32_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sample kernel shape (one->many mapInPandas): slice each
     payload into 4 evenly-spaced byte windows, one output row per frame.
     Rows-only check; frames surfaced as hex so the schema is string-stable."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     payloads = d.select("doc_id", F.col("text").cast("binary").alias("payload"))
     return (
         fake_frame_sample(payloads, n_frames=4, frame_bytes=16)
@@ -377,7 +377,7 @@ def d32_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows["rs_mean_r"].append(float(rmeans[0]))
             yield pd.DataFrame(rows)
 
-    docs = Catalog(spark, sf_dir).documents.select("doc_id")
+    docs = catalog(spark, sf_dir).documents.select("doc_id")
     payloads = synth_ppm_payloads(docs)
     stats = payloads.mapInPandas(
         fused_stats, schema=IMAGE_STATS_SCHEMA + ", rs_mean_r double"
@@ -537,7 +537,7 @@ def d32_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample width breaks the hash. Map-only end to end (no shuffle before
     the presentation sort); at 100 TB the payloads arrive via the
     binaryFile source and this exact kernel shape."""
-    docs = Catalog(spark, sf_dir).documents.select("doc_id")
+    docs = catalog(spark, sf_dir).documents.select("doc_id")
     dec = decode_audio(synth_wav_payloads(docs))
     n = F.size("samples")
     sq = F.aggregate(
@@ -736,7 +736,7 @@ def d32_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (numpy per Arrow batch, bytes never shuffle); only (doc_id, 8-byte
     hash) reaches the one blocking exchange. Hamming-radius widening
     reuses d30_hamming_topk's bit-count machinery on these longs."""
-    docs = Catalog(spark, sf_dir).documents.select("doc_id")
+    docs = catalog(spark, sf_dir).documents.select("doc_id")
     payloads = synth_ppm_payloads(docs)
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -850,7 +850,7 @@ def d32_image_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas task per input split (no shuffle before the presentation
     sort); the patch fan-out multiplies rows, not bytes — each patch row
     carries 28 bytes, not the raster."""
-    docs = Catalog(spark, sf_dir).documents.select("doc_id")
+    docs = catalog(spark, sf_dir).documents.select("doc_id")
     patches = patchify_image(synth_ppm_payloads(docs))
     return patches.select(
         "doc_id",
@@ -950,7 +950,7 @@ def d32_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: decode + framing are map-only inside one task; output rows
     are fixed-width frame features (the raster never crosses the wire)."""
-    docs = Catalog(spark, sf_dir).documents.select("doc_id")
+    docs = catalog(spark, sf_dir).documents.select("doc_id")
     frames = frame_energy(synth_wav_payloads(docs))
     return frames.select(
         "doc_id",

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.operators.sampling import _bucket_sql, hash_bucket
 from conceptnetwork_spark.operators.text import (
@@ -86,7 +86,7 @@ def d34_llm_dataprep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (normalized content hash, min-id canonical) → token-count → leakage-safe
     split, as one fused declarative plan. DuckDB re-derives the identical
     surviving row set, split membership, language labels and token counts."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     base = d.select(
         "doc_id",
         "text",
@@ -202,7 +202,7 @@ def d35_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg over the CDC stream); the merge is ONE equi-join shuffle on the key
     — exactly the shape Delta/Iceberg MERGE compiles to when the change set
     is not broadcast-able. No row-by-row driver logic anywhere."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     key = F.when(F.col("user_id") % 7 == 0, F.col("user_id") + 1000000).otherwise(
         F.col("user_id")
     )
@@ -252,7 +252,7 @@ def d35_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — the standard dimension-history build at any scale."""
     from pyspark.sql import Window
 
-    ev = Catalog(spark, sf_dir).events.where(F.col("event_type") == "purchase")
+    ev = catalog(spark, sf_dir).events.where(F.col("event_type") == "purchase")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = F.lead("ts").over(w)
     # event_id in the output + sort keys makes the ordering TOTAL: two
@@ -301,7 +301,7 @@ def d35_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     each side once on the join key and never builds an all-pairs product."""
     from pyspark.sql import Window
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     hist = (
         ev.where(F.col("event_type") == "purchase")
         .select(
@@ -376,7 +376,7 @@ def d34_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the (split, shard) key; everything else is map-side."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     base = d.select(
         "doc_id",
         F.when(hash_bucket(F.col("doc_id")) < 80, "train")
@@ -437,7 +437,7 @@ def d34_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort, no single-task ordering bottleneck."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     keyed = d.select(
         "doc_id",
         hash_bucket(F.col("doc_id"), SHUF_SHARDS).alias("shard"),
@@ -489,7 +489,7 @@ def d35_snapshot_at(spark: SparkSession, sf_dir: str) -> DataFrame:
     d35_scd2_history (full interval table) with the cheaper point read."""
     from pyspark.sql import Window
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -539,7 +539,7 @@ def d35_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (map-side combined) and one merge join/agg on the MV key.
     Non-decomposable aggs (exact distinct, median) need sketch states
     instead — documented boundary, not hidden."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     cut = F.lit(MV_CUTOVER).cast("timestamp")
 
     def agg(df: DataFrame) -> DataFrame:
@@ -617,7 +617,7 @@ def d35_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, no sort: max_by aggregates hash-based (ObjectHashAggregate), the
     shuffle carries two small structs per key — strictly less than either
     snapshot table — and map-side combine reduces history before it moves."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     base = ev.where(
         (F.col("event_type") == "purchase")
         & (F.col("ts") <= F.lit(DIFF_T2).cast("timestamp"))
@@ -685,7 +685,7 @@ def d35_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(tmp: str) -> None:
         frag = os.path.join(tmp, "frag")
-        Catalog(spark, sf_dir).events.repartition(32).write.mode(
+        catalog(spark, sf_dir).events.repartition(32).write.mode(
             "overwrite"
         ).parquet(frag)
         compact_dir(spark, frag, os.path.join(tmp, "packed"), COMPACT_TARGET_FILES)
@@ -752,7 +752,7 @@ def d35_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleave is pure integer codegen (no UDF, no shuffle); the write-side
     usage is ``repartitionByRange(N, zorder).sortWithinPartitions(zorder)``
     exactly like d35_compact_files' range clustering."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     # clamp BOTH quantized dims: an out-of-domain ts would go negative,
     # where DuckDB's floor-division //-semantics and Spark's shiftright
     # diverge — the clamp keeps the interleave identical on both engines
@@ -894,7 +894,7 @@ def d34_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan, one more key column (the d34_sequence_pack sharding trick)."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = d.select(
         "doc_id",
         "source",
@@ -946,7 +946,7 @@ def d35_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the feed."""
     from pyspark.sql import Window
 
-    feed = Catalog(spark, sf_dir).events.where(
+    feed = catalog(spark, sf_dir).events.where(
         F.col("event_type").isin("purchase", "error")
     )
     w = Window.partitionBy("user_id").orderBy(
@@ -976,7 +976,7 @@ def _wap_publish(spark: SparkSession, sf_dir: str) -> str:
 
     def build(tmp: str) -> None:
         src = (
-            Catalog(spark, sf_dir)
+            catalog(spark, sf_dir)
             .orders.where(F.col("o_orderpriority") == "1-URGENT")
             .select(
                 "o_orderkey", "o_custkey", F.round("o_totalprice", 4).alias("price")
@@ -1046,7 +1046,7 @@ def _dynamic_overwrite(spark: SparkSession, sf_dir: str) -> str:
     other four."""
 
     def build(tmp: str) -> None:
-        o = Catalog(spark, sf_dir).orders
+        o = catalog(spark, sf_dir).orders
         agg = lambda df: (  # noqa: E731
             df.groupBy("o_orderpriority", (F.col("o_custkey") % 10).alias("bucket"))
             .agg(
@@ -1140,7 +1140,7 @@ def d34_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     3×SHUF_SHARDS-row result regardless of corpus size; the manifest of
     a 100 TB run is a handful of rows and is THE thing to diff between
     pipeline versions before any byte-level comparison."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = d.select(
         "doc_id",
         F.when(hash_bucket(F.col("doc_id")) < 80, "train")
@@ -1189,7 +1189,7 @@ def d35_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between a key lookup touching one file and touching all of
     them — min/max on the clustered key (see d35_zorder_key) gives the
     planner non-overlapping key ranges to binary-search."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("part"))
         .agg(
@@ -1243,7 +1243,7 @@ def d34_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB swap percentile() for approx_percentile on the same plan if
     the per-slice char lists outgrow executor memory (D11 documents the
     tolerance contract)."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = d.select(
         "lang",
         "source",
@@ -1307,7 +1307,7 @@ def d34_repro_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to 3 rows. The same trick verifies a migration (old vs new
     cluster), a compaction (d35_compact_files must preserve it), and a
     format change — any content-preserving transform must fix-point it."""
-    return repro_fingerprint(Catalog(spark, sf_dir).documents)
+    return repro_fingerprint(catalog(spark, sf_dir).documents)
 
 
 def repro_fingerprint(d: DataFrame) -> DataFrame:
@@ -1399,7 +1399,7 @@ def d35_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil as _shutil
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     work = scratch_dir(spark, "vacuum")
     ev.repartition(VACUUM_LIVE_FILES).write.mode("overwrite").parquet(work)
     live = sorted(f for f in _os.listdir(work) if f.endswith(".parquet"))
@@ -1537,7 +1537,7 @@ def _curriculum_numbered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no second exchange). Split out so tests/test_plans.py can pin this
     shape even though the declared query truncates it behind a lazy
     localCheckpoint."""
-    d = Catalog(spark, sf_dir).documents.select("doc_id", "n_chars")
+    d = catalog(spark, sf_dir).documents.select("doc_id", "n_chars")
     s = d.agg(F.min("n_chars").alias("mn"), F.max("n_chars").alias("mx"))
     b = d.crossJoin(F.broadcast(s)).select(
         "doc_id",
@@ -1837,7 +1837,7 @@ def d34_chat_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenation and token counting are map-side string expressions on
     the ~#users result. Text renders once; nothing but (user, turns)
     shuffles."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     role = F.when(
         F.col("event_type").isin("view", "click"), F.lit("user")
     ).otherwise(F.lit("assistant"))
@@ -2039,7 +2039,7 @@ def bpe_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard BPE working representation. One text scan, one shuffle
     to distinct words (the vocabulary is orders of magnitude smaller
     than the corpus, which is what makes distributed BPE cheap)."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     words = (
         d.select(
             F.explode(
@@ -2247,7 +2247,7 @@ def d34_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a trillion-token corpus is exactly this shape in production). The
     merge table is a compile-time constant here; at scale it would be a
     driver-broadcast list folded into the same expression chain."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     words = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
     base = d.select(
         "doc_id",
@@ -2337,7 +2337,7 @@ def d34_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the keep decision is the sign of the logit, which is exact. Feature
     terms are summed in a fixed written order so Spark and the oracle
     associate identically."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     n = F.length("text")
     alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
     digits = F.length(F.regexp_replace("text", "[^0-9]", ""))
@@ -2406,7 +2406,7 @@ def d34_pref_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry only (key, doc_id) through the map-side combine, so 100 TB of
     candidate text reduces to a few bytes per group in the shuffle; no
     window, no self-join, no full-row exchange."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     kmax = F.concat(
         F.lpad(F.col("n_chars").cast("string"), 10, "0"),
         F.lpad((F.lit(9999999999) - F.col("doc_id")).cast("string"), 10, "0"),
@@ -2493,7 +2493,7 @@ def d34_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure higher-order array expressions (transform with
     index, filter, array_join, md5) — one codegen'd map-only projection,
     no UDF, no shuffle; the 100 TB form is this exact plan."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
 
     def corrupt(x, i):
@@ -2608,7 +2608,7 @@ def d34_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM-over-rows window per user computes offsets on the turn-count-
     sized exploded frame (<= CHAT_MAX_TURNS rows per user). Rendering
     happens once; masks are arithmetic, not re-rendering."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     role = F.when(
         F.col("event_type").isin("view", "click"), F.lit("user")
     ).otherwise(F.lit("assistant"))
@@ -2780,7 +2780,7 @@ def _zorder_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     m = 1 << ZORDER_BITS
     keyed = o.select(
         "o_orderkey",
@@ -3016,7 +3016,7 @@ def d33_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan; binning is ONE partial+final agg to <= 10 rows; the ECE row
     aggregates that 10-row frame. Nothing shuffles but (bin, partials) —
     calibration of a petabyte corpus costs one pass."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     n = F.length("text")
     alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
     digits = F.length(F.regexp_replace("text", "[^0-9]", ""))
@@ -3134,7 +3134,7 @@ def d34_pack_attention_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d34_sequence_pack for the running start; the window-span explode is
     map-side with fanout = ceil(doc_tokens / PACK_CTX) (bounded by doc
     length, not corpus size). No joins; output is ordered segments."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     base = d.select(
         "doc_id",
         F.when(hash_bucket(F.col("doc_id")) < 80, "train")
@@ -3253,7 +3253,7 @@ def d35_stats_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized state (64 longs + 4 scalars per partition). This is the
     exact shape of partition-stats maintenance in d35_partition_stats,
     here with the merge path proven against the recompute path."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     key = F.conv(
         F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -3378,7 +3378,7 @@ def d35_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's files (per-partition sorted, no global sort), and the
     final grouping is map-side combinable. At 100 TB the same plan runs
     on the table format's manifest instead of a scan."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     files = o.groupBy(
         F.col("o_orderpriority").alias("part"),
         F.date_format("o_orderdate", "yyyy-MM").alias("mon"),
@@ -3453,7 +3453,7 @@ def d34_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, no Python, whole-stage codegen end to end; the only
     exchange in the plan is the presentation sort."""
     d = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .documents.where(F.length("text") >= 3)
         .select(
             "doc_id",
@@ -3540,7 +3540,7 @@ def d34_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to documents for lang would broadcast billions of (doc_id,
     lang) rows at scale; pinned join-free in tests/test_plans.py).
     Token-count ratios are bigint sums — no float-order sensitivity."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     words = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
     base = d.select(
         "lang",
@@ -3624,7 +3624,7 @@ def d34_seq_len_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ ~40 bucket rows; the cumulative windows run on that bucket relation
     (single tiny partition by construction — |buckets| rows regardless of
     corpus size, so the unpartitioned window is NOT a scale hazard)."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     n = F.regexp_count("text", F.lit(TOKEN_PATTERN)).cast("long")
     bucket = F.pow(
         F.lit(2.0), F.ceil(F.log2(F.greatest(n, F.lit(1))))
@@ -3717,7 +3717,7 @@ def d34_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-admits blockless short docs at weight 1.0. Same exchange skeleton
     as d31_block_dedup — the weights pass is literally the dedup pass
     with the drop decision softened."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )
@@ -3816,7 +3816,7 @@ def d34_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-sized key; the totals relation is one row cross-joined
     (broadcast) back onto the domain table. The corpus is read once and
     never shuffled — only (source, counts) rows move."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = (
         d.select(
             "source",
@@ -3914,7 +3914,7 @@ def d34_bucketed_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) — an NTILE window would funnel the corpus through ONE
     partition, the exact funnel this plan exists to avoid — then one
     hash agg on the {BATCH_BUCKETS}-sized bucket key."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = d.select(
         "doc_id",
         F.regexp_count("text", F.lit(TOKEN_PATTERN))
@@ -4077,7 +4077,7 @@ def d35_bloom_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer accumulates it at commit time. Probes join the tiny position
     relation (broadcast); the truth join is probe-key-selective. Nothing
     rescans the fact table per probe."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     keys = (
         o.select(
             F.expr(f"o_orderkey div {BFS_FILE_ROWS}").alias("file_id"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
 
@@ -35,7 +35,7 @@ from conceptnetwork_spark.registry import register
 def d01_scan_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan with predicate + projection pushdown: `.explain` must show
     PushedFilters [GreaterThan(l_quantity,45)] and a 4-column ReadSchema."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.where(F.col("l_quantity") > 45)
         .select(
@@ -61,7 +61,7 @@ def d01_scan_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d02_case_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical normalization with default branch — the engine form of the
     reference's GENDER_MAP defaultdict (minimal_concept.py:18-28)."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return c.select(
         "c_custkey",
         F.when(F.lower(F.substring("c_name", 1, 1)) == "c", 0).otherwise(1).alias("g"),
@@ -81,7 +81,7 @@ def d02_case_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d03_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders⋈customer. customer is SF-scaled: no manual broadcast — AQE picks
     broadcast at small SF and shuffle-hash/SMJ at scale."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.orders.join(t.customer, t.orders.o_custkey == t.customer.c_custkey, "inner")
         .select("o_orderkey", "c_name")
@@ -109,7 +109,7 @@ def d04_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-schema revenue roll-up. nation/region are bounded dims ->
     explicit broadcast (no shuffle for the dim sides at any SF); the
     orders⋈customer edge shuffles on custkey."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -146,7 +146,7 @@ def d04_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, then TakeOrderedAndProject top-10 — the canonical composite plan.
     Filters cut each side BEFORE the shuffle, which is what keeps the
     orders⋈lineitem exchange tractable at 100 TB."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     cutoff = F.lit("1998-06-01").cast("timestamp")
     c = t.customer.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     o = t.orders.where(F.col("o_orderdate") < cutoff).select(
@@ -191,7 +191,7 @@ def d04_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive join condition (supplier in the customer's nation), region
     filter, per-nation revenue. nation/region broadcast; supplier is
     SF-scaled so AQE picks its strategy; the two fact edges shuffle."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"))
         .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -233,7 +233,7 @@ def d04_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so the join input is the filtered aggregate, never the raw fact
     table. The pattern that matters at 100 TB: pre-aggregation as a join
     reducer."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     big = (
         t.lineitem.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -265,7 +265,7 @@ def d04_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d05_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer: preserves customers without orders (null o_orderkey)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .select("c_custkey", "o_orderkey")
@@ -283,7 +283,7 @@ def d05_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d05_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join (nation⋈supplier keeps nations with no supplier)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.nation.join(t.supplier, F.col("n_nationkey") == F.col("s_nationkey"), "full")
         .select("n_nationkey", "s_suppkey")
@@ -307,7 +307,7 @@ def d05_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d06_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi: customers having at least one order (no duplication)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select("c_custkey")
@@ -325,7 +325,7 @@ def d06_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d06_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti: customers with no orders."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.customer.join(t.orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey")
@@ -347,7 +347,7 @@ def d06_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d07_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi key + range residual: hash/SMJ on partkey with the range predicate
     evaluated as a post-join filter — never a cartesian product."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     cond = (F.col("l_partkey") == F.col("p_partkey")) & (
         F.col("l_quantity") > F.col("p_size")
     )
@@ -380,7 +380,7 @@ def d08_asof_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of (latest state) join: window top-1 per key, then equi-join.
     Portable formulation a DuckDB ASOF JOIN also satisfies; at scale the
     window shuffles once on user_id and the join reuses that partitioning."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     latest = (
         t.events.withColumn("rn", F.row_number().over(w))
@@ -426,7 +426,7 @@ def d08_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition regardless of how many views precede a purchase, which is why
     this (not the join+filter+rank form) is the 100 TB path. The build side
     is pre-deduped per (user, ts) so tie-breaks are engine-independent."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id", "ts")
@@ -487,7 +487,7 @@ def d08_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d09_hash_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: partial (map-side) + final hash aggregation — the
     group-key cardinality is tiny so the shuffle moves only partial states."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -523,7 +523,7 @@ def d09_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     combines; explicit salting is the pattern for when the FINAL combine of
     one hot key — e.g. a window or collect_list — is itself the bottleneck.)
     """
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     salted = li.withColumn("salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(32)))
     partial = salted.groupBy("l_returnflag", "salt").agg(
         F.count(F.lit(1)).alias("c"),
@@ -560,7 +560,7 @@ def d09_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the subquery into an aggregate + join — one extra pass over lineitem
     instead of one subquery execution per outer row, the difference between
     O(n) and O(n^2) at 100 TB."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.lineitem.createOrReplaceTempView("cns_q17_lineitem")
     t.part.createOrReplaceTempView("cns_q17_part")
     return spark.sql(
@@ -586,7 +586,7 @@ def d09_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d10_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact count-distinct (expand->partial-distinct->final)."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return o.agg(F.countDistinct("o_custkey").alias("n"))
 
 
@@ -597,7 +597,7 @@ def d10_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d11_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ approx distinct; pytest asserts <=5% relative error vs
     exact (SURVEY D11). Non-oracle: DuckDB's sketch differs by design."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return o.agg(F.approx_count_distinct("o_custkey", 0.02).alias("n_approx"))
 
 
@@ -623,7 +623,7 @@ def d12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (nation, priority) with grouping-id disambiguation;
     COALESCE folds the rollup NULLs into a printable sentinel so the oracle
     hash is null-representation-independent."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     joined = t.orders.join(
         t.customer, F.col("o_custkey") == F.col("c_custkey")
     ).join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -661,7 +661,7 @@ def d12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d12_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full cube over (returnflag, linestatus): all four grouping combinations
     in one Expand+partial-agg pass (no re-scan per grouping set)."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -697,7 +697,7 @@ def d12_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (two independent 1-d summaries + grand total) —
     one scan, one Expand, instead of three scans unioned. Expressed in Spark
     SQL (the DataFrame API has rollup/cube but not arbitrary sets)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.orders.createOrReplaceTempView("cns_d12_orders")
     return spark.sql(
         """
@@ -733,7 +733,7 @@ def d12_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d13_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer: row_number with a full-key deterministic
     tiebreak (price desc, orderkey asc). One shuffle on o_custkey."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -767,7 +767,7 @@ def d13_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d14_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running revenue per customer + lag, explicit ROWS frame, deterministic
     intra-partition order via (o_orderdate, o_orderkey)."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey",
@@ -797,7 +797,7 @@ def d15_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 with full-key tiebreak. orderBy+limit compiles to
     TakeOrderedAndProject: per-partition heap + driver merge of k rows, never
     a full global sort — the scale-critical property."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.orderBy(F.desc("l_extendedprice"), "l_orderkey", "l_linenumber")
         .limit(10)
@@ -825,7 +825,7 @@ def d15_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d16_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct semantics) of ordering customers vs an even-key
     customer sample."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     a = t.orders.select(F.col("o_custkey").alias("custkey"))
     b = t.customer.where(F.col("c_custkey") % 2 == 0).select(
         F.col("c_custkey").alias("custkey")
@@ -845,7 +845,7 @@ def d16_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d16_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct): customers that never ordered (= D6 anti join)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     a = t.customer.select(F.col("c_custkey").alias("custkey"))
     b = t.orders.select(F.col("o_custkey").alias("custkey"))
     return a.exceptAll(b).distinct().orderBy("custkey")
@@ -865,7 +865,7 @@ def d16_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def d16_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two tagged aggregates (bag semantics preserved)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     a = t.customer.groupBy(F.col("c_custkey").alias("key")).agg(
         F.count(F.lit(1)).alias("cnt")
     ).select(F.lit("cust").alias("src"), "key", "cnt")
@@ -900,7 +900,7 @@ def d12_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaring them keeps this a single partial+final aggregate. Pivoted
     column names are re-aliased to identifier-safe names shared with the
     oracle's FILTER form."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
     wide = (
         t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
@@ -938,7 +938,7 @@ def d10_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     form). Distinct is a partial+final hash aggregate on the projected
     columns, so only (segment, nationkey) pairs ever shuffle — the scan
     prunes the rest of the table."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return (
         c.select("c_mktsegment", "c_nationkey")
         .distinct()
@@ -962,7 +962,7 @@ def d05_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the 'right' join-type code path (Spark plans it as the mirrored
     left-outer; preserved side is the customer build side). Null o_orderkey
     rows are the order-less customers."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"), "right")
         .select("c_custkey", "o_orderkey")
@@ -990,7 +990,7 @@ def d13_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     though intra-tie row order is not; row identity comes from the output
     key (l_orderkey, l_linenumber), so the result is total-order stable.
     One shuffle on l_returnflag + intra-partition sort."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     w = Window.partitionBy("l_returnflag").orderBy("l_quantity")
     return li.select(
         "l_orderkey",
@@ -1019,7 +1019,7 @@ def d09_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines hash the same scalar. Per-group state is bounded by the
     segment domain (5 values), so the agg stays partial+final safe at any
     row count."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return (
         c.groupBy("c_nationkey")
         .agg(
@@ -1054,7 +1054,7 @@ def d09_arg_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     not. One partial+final agg; compare with d08's window formulation, which
     needs a full shuffle+sort — arg-max-by-struct ships one row per group
     per partition instead."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     key = F.struct("o_totalprice", "o_orderkey")
     return (
         o.groupBy("o_custkey")
@@ -1083,7 +1083,7 @@ def d16_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional ``union`` would silently mis-align (key into src); by-name
     resolution is the safe spelling when branches come from different
     pipelines. Both branch filters stay pushed to their scans."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     a = t.customer.where(F.col("c_acctbal") < 0).select(
         F.col("c_custkey").alias("key"), F.lit("cust").alias("src")
     )
@@ -1123,7 +1123,7 @@ def d03_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-decimal round needs 14 exact digits — caught by the cross-sf gate
     at sf0.1 (green at sf0.01 was luck). Money aggregates at scale are
     decimal-exact, the d19_decimal_exact convention."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     S = 8
     li = t.lineitem.select("l_orderkey", "l_extendedprice").withColumn(
         "salt",
@@ -1157,7 +1157,7 @@ def d11_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles (d09_percentiles' full sort) are unaffordable. Non-oracle:
     sketches are engine-specific; pytest bounds it against the exact
     percentile within 1% relative error."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -1195,7 +1195,7 @@ def d14_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNBOUNDED gives the per-customer chronology endpoints. Total intra-
     partition order via (o_orderdate, o_orderkey) keeps all three values
     deterministic."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -1242,7 +1242,7 @@ def d18_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts. The facts aggregate FIRST (partial+final on ~60 groups), so the
     spine join touches group-level rows only — the resample pattern that
     scales to any fact count. Both join inputs are broadcast-sized."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     spine = spark.range(1).select(
         F.explode(
             F.expr(
@@ -1306,7 +1306,7 @@ def d10_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the three profiled columns) and unpivoted to one row per column. At
     100 TB swap COUNT(DISTINCT) for approx_count_distinct — declared here
     exact because exact is oracle-comparable."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     cols = ["l_discount", "l_extendedprice", "l_quantity"]
     aggs = []
     for c in cols:
@@ -1365,7 +1365,7 @@ def d10_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg (map-side combine collapses each key per partition), a 2-scalar
     broadcast total, and a TakeOrderedAndProject top-k — the full corpus is
     never sorted and only (key, count) pairs ever shuffle."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     counts = li.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
@@ -1410,7 +1410,7 @@ def d13_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sort distributed (one shuffle on c_mktsegment, per-partition sort);
     a global unpartitioned ntile would serialize on one task at scale —
     deliberately avoided."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select(
         "c_custkey",
@@ -1453,7 +1453,7 @@ def d14_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (alpha=0.5), normalized by the weight mass present so early rows are
     unbiased. Bounded-lookback form keeps it a pure window expression —
     one shuffle on user_id, no recursion, no state."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     num = sum(
         F.lit(_EWMA_ALPHA**k)
@@ -1493,7 +1493,7 @@ def d13_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ranking model trains on. Full-key ORDER BY makes both functions
     deterministic under ties; one shuffle on the partition key, the filter
     is pushed to the scan."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = Window.partitionBy("o_orderpriority").orderBy(
         "o_totalprice", "o_orderkey"
     )
@@ -1530,7 +1530,7 @@ def d14_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation definition, so the frames hash-match. A 7-row frame is
     O(1) state per row; one shuffle on user_id, per-partition sort — the
     robust-smoothing feature at any scale."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1563,7 +1563,7 @@ def d16_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-per-key aggregate + generate, not an anti join: one shuffle on
     the value, multiplicities subtracted per key — the multiset semantics
     DISTINCT-based EXCEPT throws away."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     a = o.where(F.col("o_orderkey") < 4000).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -1594,7 +1594,7 @@ def d17_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     values hash-match. Per-row JVM scalar work on a pruned, pushed-down
     scan; O(len^2) per pair is the cost model to remember before putting
     it in an all-pairs join at scale (block first, then score)."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     return (
         p.where(F.col("p_partkey") < 400)
         .select(
@@ -1641,7 +1641,7 @@ def d14_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for unbounded keys the broadcast degrades to a shuffled join, which is
     what the optimizer picks automatically when the agg exceeds the
     broadcast threshold."""
-    ev = Catalog(spark, sf_dir).events.where(F.col("event_type") == "purchase")
+    ev = catalog(spark, sf_dir).events.where(F.col("event_type") == "purchase")
     stats = ev.groupBy("user_id").agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
     )
@@ -1688,7 +1688,7 @@ def d09_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, value) pairs — orders of magnitude smaller than the events — and
     no window/sort is needed (min_by is a single-pass arg-min). Same plan at
     100 TB for any bounded value domain."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     counts = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1728,7 +1728,7 @@ def d10_observed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Observation
 
     obs = Observation("d10_scan_metrics")
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     df = (
         o.where(F.col("o_totalprice") > 150000)
         .observe(
@@ -1763,7 +1763,7 @@ def d11_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     agrees with the single-pass whole-table sketch to <0.5% (the union
     re-targets register formats, so it is near- but not bit-identical) and
     (b) both are within 2% of the exact distinct count."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     per_group = o.groupBy("o_orderpriority").agg(
         F.hll_sketch_agg("o_custkey").alias("sk")
     )
@@ -1831,7 +1831,7 @@ def d14_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering -> Catalyst evaluates all four in one pass); per-row state is
     two (value, ts) pairs regardless of gap-run length. No join against the
     non-null subset, no self-join — the naive spelling at 100 TB."""
-    ev = Catalog(spark, sf_dir).events.where(F.col("event_type") == "click")
+    ev = catalog(spark, sf_dir).events.where(F.col("event_type") == "click")
     t = ev.select(
         "event_id",
         "user_id",
@@ -1915,7 +1915,7 @@ def d10_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries one row of state per partition regardless of data
     size. The unpivot runs on the single result row. The naive per-pair
     loop would scan the fact table 6 times; this scans once."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     pairs = [
         (x, y)
         for i, x in enumerate(_CORR_COLS)
@@ -1953,7 +1953,7 @@ def d16_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two sides' counts). Spark plans the same shape as exceptAll: one
     count-per-key aggregate on each side + generate — one shuffle per
     side on the value, no join of the raw rows."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     a = o.where(F.col("o_orderkey") < 4000).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -2001,7 +2001,7 @@ def d05_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt or pre-split nulls when they dominate (same playbook as any
     hot key)."""
     o = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .orders.where(F.col("o_orderkey") < 8000)
         .select(
             "o_orderkey",
@@ -2009,7 +2009,7 @@ def d05_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .customer.select(
             F.nullif((F.col("c_custkey") % 50).cast("long"), F.lit(0)).alias("k")
         )
@@ -2052,7 +2052,7 @@ def d07_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket width near the median interval length so fan-out stays
     O(1-2) per interval. Here the filtered interval side is tiny and
     broadcast, so the fact side never shuffles at all."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     iv = (
         t.orders.where(F.col("o_orderkey") < 100)
         .select(
@@ -2128,7 +2128,7 @@ def d14_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     event volume). Exact cumulative uniques at 100 TB without holding a
     distinct-set anywhere; if per-second granularity made the day series
     itself big, swap the final window for the mergeable HLL path (D11)."""
-    e = Catalog(spark, sf_dir).events.select(
+    e = catalog(spark, sf_dir).events.select(
         "event_type", "user_id", F.col("ts").cast("date").alias("d"), "ts", "event_id"
     )
     wf = Window.partitionBy("event_type", "user_id").orderBy("ts", "event_id")
@@ -2180,7 +2180,7 @@ def d12_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_measures rows, no shuffle, no window); Spark's ``unpivot`` is a
     Catalyst Expand node inside WholeStageCodegen — output volume is
     n_measures x input, so project away unneeded measures FIRST."""
-    p = Catalog(spark, sf_dir).part.select(
+    p = catalog(spark, sf_dir).part.select(
         "p_partkey",
         F.col("p_size").cast("double").alias("size"),
         F.col("p_retailprice").cast("double").alias("retailprice"),
@@ -2243,7 +2243,7 @@ def d10_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-join one in) the missing-bin mass is added in closed form:
     psi = sum(present-bin terms) + (10 - bins_present) * both-missing
     term. All post-shuffle arithmetic runs on ~type x 10 rows."""
-    e = Catalog(spark, sf_dir).events.select(
+    e = catalog(spark, sf_dir).events.select(
         "event_type",
         (F.dayofmonth("ts") <= 15).alias("is_ref"),
         F.least(
@@ -2323,7 +2323,7 @@ def d14_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joins back to the fact — the fact never shuffles. At
     100 TB swap percentile for approx_percentile on the same plan shape
     (D11 tolerance contract) if per-type value lists outgrow memory."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     med = (
         e.groupBy("event_type")
         .agg(F.expr("percentile(value, 0.5)").alias("med"))
@@ -2381,7 +2381,7 @@ def d14_time_range_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition with a sliding two-pointer frame — O(n) per key, state
     is one running sum. The canonical trailing-window feature
     (rate limiting, rolling spend, burst detection) at any scale."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
@@ -2420,7 +2420,7 @@ def d27_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-20 — no window, no second full shuffle;
     the sort/slice/join of each user's events happens inside codegen
     array expressions on grouped rows."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     paths = (
         e.groupBy("user_id")
         .agg(
@@ -2470,7 +2470,7 @@ def d03_join_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: SMJ = shuffle both sides on the key + linear merge —
     the right default when BOTH sides are large; spills gracefully
     (sort runs) where hash join would OOM."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     o = t.orders.where(F.col("o_orderkey") < 5000)
     return (
         o.hint("merge")
@@ -2499,7 +2499,7 @@ def d15_paginate(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyset continuation instead — ``WHERE (c_acctbal, c_custkey) <
     last_seen ORDER BY ... LIMIT k`` — which this operator's total
     ordering makes deterministic and resumable."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return (
         c.select(
             "c_custkey", "c_name", F.round("c_acctbal", 4).alias("acctbal")
@@ -2534,7 +2534,7 @@ def d19_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical partial+final hash agg as the double path;
     Spark widens the accumulator (sum of DECIMAL(18,4) ->
     DECIMAL(28,4)) exactly as the oracle's explicit cast does."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return (
         o.select(
             "o_orderpriority",
@@ -2564,7 +2564,7 @@ def d11_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one pass, fixed 1/support counters per partition merged
     associatively — the streaming-safe way to find hot keys (skew-join
     salting candidates, cache keys) at 100 TB without a full groupBy."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     rows = o.stat.freqItems(["o_orderpriority"], support=0.25).collect()[0]
     items = sorted(rows[0])
     return spark.createDataFrame(
@@ -2599,7 +2599,7 @@ def d10_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partial+final aggregate; output is
     types x 20 rows regardless of volume, and the bucket expression is
     pure codegen arithmetic on the scan."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     bucket = F.least(
         F.greatest(F.width_bucket("value", F.lit(0.0), F.lit(500.0), F.lit(20)), F.lit(1)),
         F.lit(20),
@@ -2648,7 +2648,7 @@ def d14_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     single scalar of state per key — O(n) per partition, no join against
     a 'last known values' table (which is how this is mis-built when the
     window form isn't known)."""
-    e = Catalog(spark, sf_dir).events.where(F.col("user_id") < 50).select(
+    e = catalog(spark, sf_dir).events.where(F.col("user_id") < 50).select(
         "event_id",
         "user_id",
         "ts",
@@ -2699,7 +2699,7 @@ def d12_grouping_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same Expand + partial/final aggregate as d12_rollup —
     grouping flags are free metadata bits of the Expand projection, not
     extra computation."""
-    src = Catalog(spark, sf_dir).orders.select(
+    src = catalog(spark, sf_dir).orders.select(
         F.col("o_orderpriority").alias("prio"),
         F.nullif("o_orderstatus", F.lit("O")).alias("status"),
         "o_totalprice",
@@ -2760,7 +2760,7 @@ def d19_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure map-side codegen expressions, no shuffle; NULLs
     flow through later aggregates for free (count vs count(col) gives
     the salvage rate with no extra pass)."""
-    src = Catalog(spark, sf_dir).part.select(
+    src = catalog(spark, sf_dir).part.select(
         "p_partkey",
         F.when(
             F.col("p_partkey") % 3 == 0,
@@ -2840,7 +2840,7 @@ def d10_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a left-anti join on the join key — at 100 TB each rule family costs
     what its weakest primitive costs, never a per-rule rescan, and the
     audit output is O(#rules) rows."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     o, li = t.orders, t.lineitem
 
     def row(rule, n_checked, n_failed):
@@ -2958,7 +2958,7 @@ def d27_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of event volume, the same shape as d27_attribution."""
     from pyspark.sql import Window
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type", F.lead("event_type").over(w).alias("next_type")
@@ -3009,7 +3009,7 @@ def d14_date_bin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no join; distinct-user counting expands to the standard
     two-level agg. At 100 TB this is the query you'd run per ingest
     partition and MERGE into the rollup MV (d35_mv_merge)."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     return (
         ev.groupBy(
             F.window("ts", "6 hours").start.alias("bucket_start"), "event_type"
@@ -3078,7 +3078,7 @@ def d15_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange every distinct price to one task before pruning."""
     sch = "p_partkey long, p_size int, price double"
     cand = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .part.select("p_partkey", "p_size", F.col("p_retailprice").alias("price"))
         .mapInPandas(lambda it: (_skyline_pdf(pdf) for pdf in it), schema=sch)
     )
@@ -3116,7 +3116,7 @@ def d16_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixpoint runs in O(log10(max key)) steps; the only shuffle is the
     final per-customer aggregate. This is the declarative replacement for
     collect()-driven driver iteration (the anti-pattern the engine bans)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.customer.createOrReplaceTempView("cns_rc_customer")
     return spark.sql(
         """
@@ -3161,7 +3161,7 @@ def d10_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one partial+final hash agg to <= 9 digit rows;
     the share computation is a window over those 9 rows (single-task by
     construction, bytes of state). The scan reads one column."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     c = (
         o.where(F.col("o_totalprice") >= 0.01)
         .select(
@@ -3233,7 +3233,7 @@ def d27_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     8dp and summed as DECIMAL(18,8) — exact integer arithmetic — because a
     many-addend DOUBLE sum diverges from the oracle in the 4th decimal
     purely on summation order (the d03 lesson, BASELINE.md)."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     fp = (
         ev.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -3308,7 +3308,7 @@ def d14_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg (map-side combine on the scan); the windowed cumsum runs over the
     ~#days rows that survive — a single-task window over KBs by
     construction, not a data-sized exchange. Top-10 is TakeOrdered."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     daily = (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"))
         .agg(F.sum(F.col("o_totalprice").cast("decimal(12,2)")).alias("rev"))
@@ -3357,7 +3357,7 @@ def d13_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals receive identical cd in both engines by definition (count of
     rows <= current over partition size), so no tiebreak column is needed
     in the rank itself; the key filter bounds the output."""
-    o = Catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 2000)
+    o = catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 2000)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return o.select(
         "o_orderkey",
@@ -3391,7 +3391,7 @@ def d09_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): ONE partial+final hash agg on a 5-value key;
     every predicate is codegen'd on the scan. Adding a 10th conditional
     metric costs zero additional data movement."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     dec = F.col("o_totalprice").cast("decimal(12,2)")
     return (
         o.groupBy("o_orderpriority")
@@ -3446,7 +3446,7 @@ def d18_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max aggregate and BROADCAST to the daily-counts join; the fact
     table is touched once for the bounds and once for the per-day partial
     agg. The dimension never materializes on disk."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     bounds = o.agg(
         F.min(F.col("o_orderdate").cast("date")).alias("lo"),
         F.max(F.col("o_orderdate").cast("date")).alias("hi"),
@@ -3516,7 +3516,7 @@ def d10_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the scan out first: exact percentile's partial state is a
     # per-partition value buffer, so a single local file partition would
     # serialize the whole sort (no-op at scale; measured 3.3 s -> 0.9 s)
-    o = ensure_parallelism(Catalog(spark, sf_dir).orders)
+    o = ensure_parallelism(catalog(spark, sf_dir).orders)
     # ONE percentile aggregate evaluating all three fractions over a single
     # sort of the group — three scalar percentile() calls would sort thrice
     qarr = F.percentile(
@@ -3611,7 +3611,7 @@ def d27_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 12-value cut row broadcast back; scoring is codegen'd CASE
     arithmetic. Recency uses integer microsecond arithmetic (no tz/float
     hazard)."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     p = (
         ev.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -3708,7 +3708,7 @@ def d14_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one partial+final agg to #days rows; the 7-row
     weekday profile broadcasts back onto the daily table. The fact scan is
     touched once."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     daily = o.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("day"),
         (F.weekday("o_orderdate") + 1).cast("int").alias("isodow"),
@@ -3781,7 +3781,7 @@ def d10_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     value) — the same cardinality a sort-based percentile would shuffle —
     then a per-type sort window over distinct values only. No all-pairs,
     no second scan; the final agg collapses to #types rows."""
-    e = Catalog(spark, sf_dir).events.select(
+    e = catalog(spark, sf_dir).events.select(
         "event_type", "value", (F.dayofmonth("ts") <= 15).alias("is_ref")
     )
     pv = e.groupBy("event_type", "value").agg(
@@ -3853,7 +3853,7 @@ def d09_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): partial+final agg to (flag, distinct quantity) —
     tiny — then a 3-partition window and a #flags-row readout. The fact
     is scanned once; nothing but (flag, qty, decimal) ever shuffles."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     g = li.groupBy("l_returnflag", "l_quantity").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("w")
     )
@@ -3930,7 +3930,7 @@ def d14_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily table (a single-partition window over #days rows is deliberate
     and safe — the series is small by construction, ~365 rows/year). One
     fact scan, one shuffle, no join at all."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     daily = o.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
     ).agg(
@@ -4031,7 +4031,7 @@ def d11_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the per-key exact aggregate. In production the exact side
     drops away and the sketch alone answers in O(d) per query; it rides
     here so the error is part of the certified result."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     u = F.col("user_id")
 
     def bucket(i: int):
@@ -4115,7 +4115,7 @@ def d14_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same collapse-then-quadratic discipline as d15_skyline's
     per-partition frontier). One fact scan, one shuffle to the daily
     grid; the pair join and median run on a few thousand rows."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     daily = e.groupBy(
         "event_type", F.dayofmonth("ts").cast("long").alias("day")
     ).agg(
@@ -4220,7 +4220,7 @@ def d16_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same script (D11's tolerance contract). No driver round-trips:
     the loop, its state, and the final VALUES readout live in ONE
     spark.sql call."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.orders.createOrReplaceTempView("cns_clip_orders")
     m = SIGMA_CLIP_MULT
     return spark.sql(f"""
@@ -4292,7 +4292,7 @@ def d01_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): identical plan to the literal query —
     PushedFilters on the scan, map-side projection, no shuffle."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.orders.createOrReplaceTempView("cns_param_orders")
     return spark.sql(
         """
@@ -4364,7 +4364,7 @@ def d27_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     is #distinct-durations rows (bounded by the observation span in
     days), so the ordered single-partition window is deliberate and
     safe. The fact is scanned once."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     span = e.agg(F.max("ts").alias("w_end"))
     u = e.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"),
@@ -4474,7 +4474,7 @@ def d18_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): pure map-side integer arithmetic fused into the
     scan project; the key filter pushes down. No shuffle, no join."""
-    o = Catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 500)
+    o = catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 500)
     d = F.col("o_orderdate").cast("date")
     total = F.datediff(F.lit(BDAY_HORIZON).cast("date"), d)
     dow = (F.weekday(d) + 1).cast("int")
@@ -4537,7 +4537,7 @@ def d09_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     #parts rows — inherent to exact ABC (a total preorder over parts),
     bounded by catalog size, not fact size. One fact scan, one shuffle,
     a #parts-row sort."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     rev = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("r")
     )
@@ -4620,7 +4620,7 @@ def d10_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one partial+final aggregate to the (x, y)
     contingency grid; marginals are windows OVER THE GRID (≤ |X|·|Y|
     rows), not the data. One scan, one shuffle, single-row result."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     g = e.groupBy(
         F.col("event_type").alias("x"),
         F.least(
@@ -4698,7 +4698,7 @@ def d14_group_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): one scan, one tiny shuffle (partial+final
     agg), #groups result rows."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     p = e.select(
         "event_type",
         F.dayofmonth("ts").cast("double").alias("x"),
@@ -4773,7 +4773,7 @@ def d19_npv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one shuffle on o_custkey serving BOTH the
     min-window and the final aggregate (same partitioning, no second
     exchange); output is #repeat-customers rows."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     d = F.col("o_orderdate").cast("date")
     f = o.select(
         "o_custkey",
@@ -4831,7 +4831,7 @@ def d14_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry (value, key-pair) state through map-side combine exactly like
     min/max, so the candle table needs no window and no second pass;
     output is #types x #days rows."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     # zero-padded string key: lexicographic == numeric, and (unlike a
     # struct key) both engines' min_by/arg_min accept it
     okey = F.concat(
@@ -4887,7 +4887,7 @@ def d27_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): two aggregates over one scan — per-day
     distinct (shuffles (day, user) pairs with partial dedup) and the
     global distinct riding as a broadcast scalar."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     dau = e.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
         F.countDistinct("user_id").alias("dau")
     )
@@ -4934,7 +4934,7 @@ def d09_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. Unbounded-group listagg at corpus scale wants the
     d27_top_paths slice-first form instead — the filter here IS that
     bound."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.orders.createOrReplaceTempView("cns_listagg_orders")
     return spark.sql(
         """
@@ -5020,7 +5020,7 @@ def d11_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a global sort). KMV is also mergeable (union of sketches = K
     smallest of the concatenation), which is how per-shard sketches roll up
     on a cluster — d11_theta_setops exercises exactly that property."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     h = e.select(_kmv_key().alias("h")).distinct()
     topk = h.orderBy("h").limit(KMV_K)
     sk = topk.agg(
@@ -5130,7 +5130,7 @@ def d11_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     law (its WindowGroupLimit partial bound makes even the recompute
     forward only K rows per map task); production keeps only the merged
     path."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     h = F.conv(
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
@@ -5251,7 +5251,7 @@ def d11_theta_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     booleans (map-side BOOL_OR combine), TakeOrdered K, then three one-row
     aggregates joined by broadcast — no full-data exchange beyond the
     dedup shuffle, identical to d11_kmv_sketch."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     u = (
         e.where(F.col("event_type").isin("purchase", "click"))
         .groupBy(_kmv_key().alias("h"))
@@ -5355,8 +5355,8 @@ def d10_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-segment sort is the cost — if a single segment outgrew a
     partition, the rank formula decomposes over range-partitioned chunks
     with broadcast per-chunk offsets (the d34_curriculum_order trick)."""
-    c = Catalog(spark, sf_dir).customer
-    o = Catalog(spark, sf_dir).orders
+    c = catalog(spark, sf_dir).customer
+    o = catalog(spark, sf_dir).orders
     rev = (
         c.join(o, o.o_custkey == c.c_custkey)
         .groupBy(
@@ -5488,7 +5488,7 @@ def d14_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     daily = (
         e.groupBy("user_id", F.to_date("ts").alias("day"))
         .agg(F.min("value").alias("y"))
@@ -5594,7 +5594,7 @@ def d27_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the test SFs Catalyst broadcasts the cohort side), one agg to the
     tiny (cohort, age) grid, and the running-sum window runs on that grid,
     not on raw events."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     first = e.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     cohorts = first.select(
         "user_id",
@@ -5721,7 +5721,7 @@ def d11_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions (an aggregate, broadcastable by construction); the probe is
     a broadcast semi-join of each probe key's {BLOOM_K} positions against
     that tiny relation — no shuffle of the probe stream at any scale."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     key = F.concat(
         F.col("user_id").cast("string"),
         F.lit(":"),
@@ -5841,7 +5841,7 @@ def d08_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gap arithmetic runs on integer microseconds (``F.unix_micros``) on both
     engines — the d27_attribution lesson."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id", "ts")
@@ -5944,7 +5944,7 @@ def d15_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on the group key with group-limit pushdown
     map-side; the global limit merges 20 rows per partition on the
     driver — the same two-phase shape at any scale."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), "o_orderkey"
     )
@@ -6005,7 +6005,7 @@ def d07_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion on the smaller side only), map-side exact filter — no
     BroadcastNestedLoopJoin, no per-key quadratic blowup beyond true
     band matches."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     # integer `div`: long-exact bucket ids by construction (a double
     # division would still be correct here — quotients are < 2^53 with
     # fractional parts >= 1/BAND_US — but div doesn't need the proof)
@@ -6075,7 +6075,7 @@ def d16_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Money stays DECIMAL through the aggregate; the broadcast customer
     join and partial+final agg are inherited unchanged from the
     underlying plan."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.orders.createOrReplaceTempView("cns_pipe_orders")
     t.customer.createOrReplaceTempView("cns_pipe_customer")
     return spark.sql("""
@@ -6142,7 +6142,7 @@ def d14_rolling_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one agg to (type, day), one shuffle on event_type, one
     WindowExec computing all five frame sums together; the raw stream is
     reduced ~per-day before any window sees it."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     daily = (
         e.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
@@ -6221,7 +6221,7 @@ def d19_logsumexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|-row table). No window, no sort until the final |types|-row
     ORDER BY. The shift join broadcasts; nothing but partial sums
     shuffle."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.avg("value").alias("x"))
@@ -6288,7 +6288,7 @@ def d10_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JS arithmetic run on that tiny frame. Conditional aggregation
     (SUM(CASE)) reads the table once for both cohorts — never two scans,
     never a self-join."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     c = ev.groupBy("event_type").agg(
         F.sum(F.when(F.col("event_id") % 2 == 0, 1).otherwise(0)).alias("na"),
         F.sum(F.when(F.col("event_id") % 2 == 1, 1).otherwise(0)).alias("nb"),
@@ -6361,7 +6361,7 @@ def d27_path_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id shuffle for the LEAD window, partial+final agg to the
     |types|^2 pair table, then entropy as a second tiny agg over it.
     Event volume only ever crosses the wire once."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select("event_type", F.lead("event_type").over(w).alias("next_type"))
@@ -6428,7 +6428,7 @@ def d14_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROWS-bounded so the state per partition is 7 rows; no self-join,
     no second shuffle. Day count is bounded (time), so partitions stay
     small regardless of event volume."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum("value").alias("v"))
@@ -6498,7 +6498,7 @@ def d09_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, supplier) revenue — the only full-data shuffle; the share
     window and HHI agg run on the supplier-count-sized result. The
     supplier dim joins broadcast; nation likewise."""
-    c = Catalog(spark, sf_dir)
+    c = catalog(spark, sf_dir)
     rev = (
         c.lineitem.join(
             F.broadcast(c.supplier.select("s_suppkey", "s_nationkey")),
@@ -6519,7 +6519,7 @@ def d09_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sh.join(
             F.broadcast(
-                Catalog(spark, sf_dir).nation.select("n_nationkey", "n_name")
+                catalog(spark, sf_dir).nation.select("n_nationkey", "n_name")
             ),
             F.col("nationkey") == F.col("n_nationkey"),
         )
@@ -6603,7 +6603,7 @@ def d10_modal_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overlapping per-column branches locally optimal, and the melt
     pushes 4x rows through one shuffle instead. Same cluster-scale
     caveat applies (scan-dominated storage flips the trade)."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     branches = []
     for col in _PROFILE_COLS:
         v = F.expr(_profile_val(col, "STRING"))
@@ -6670,7 +6670,7 @@ def d14_period_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only full-data pass; LAG runs on the grid (bounded by the
     calendar, not the corpus). Same agg-before-window discipline as
     d14_cusum."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     weekly = ev.groupBy(
         "event_type",
         F.date_trunc("week", F.col("ts").cast("date")).cast("date").alias(
@@ -6733,7 +6733,7 @@ def d02_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-split stats and the overlap audit are single partial+final
     aggs (the overlap = a user-grouped two-level agg). At production the
     cutoff comes from the feature-store watermark, not a literal."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     lab = ev.withColumn(
         "split",
         F.when(F.col("ts") < F.lit(TEMPORAL_CUTOFF).cast("timestamp"), "train")
@@ -6806,7 +6806,7 @@ def d33_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): partial+final agg to the daily grid, a
     broadcast of the |types|-row fit table back onto it, one residual
     agg. Two passes over the GRID, one over the data."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum("value").alias("y")).select(
@@ -6919,7 +6919,7 @@ def d10_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB width the fused Expand form trades 6 extra full scans for a
     7x wider partial-agg input and would win on scan-dominated storage —
     revisit only with cluster-scale evidence."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     total = o.count()
     branches = []
     for c in _KEY_SINGLE:
@@ -7000,7 +7000,7 @@ def d27_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a broadcast build branch (a join on a derived base table would
     re-evaluate the whole pipeline a second time). Event volume crosses
     the wire exactly once — pinned in tests/test_plans.py."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id")
     act = (
         ev.select(
@@ -7094,7 +7094,7 @@ def d10_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integral term is fixed to 8 decimals and summed as DECIMAL so the
     result is summation-order-free (events.value carries exactly 2
     decimals, so the value gaps are exact in double)."""
-    e = Catalog(spark, sf_dir).events.select(
+    e = catalog(spark, sf_dir).events.select(
         "event_type", "value", (F.dayofmonth("ts") <= 15).alias("is_ref")
     )
     pv = e.groupBy("event_type", "value").agg(
@@ -7190,7 +7190,7 @@ def d10_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     else grows with data size. Each cell term is fixed to 8 decimals and
     summed as DECIMAL so chi² is summation-order-free (the
     d10_wasserstein_drift determinism trick)."""
-    cat = Catalog(spark, sf_dir)
+    cat = catalog(spark, sf_dir)
     outs = []
     for tbl, a, b in _CRAMER_PAIRS:
         t = getattr(cat, tbl)
@@ -7289,7 +7289,7 @@ def d10_stable_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (3 groups); pass-2 shuffle carries |groups| rows of centered
     power sums. Two fact scans, zero data-sized shuffles, no skew exposure
     (the group key rides the broadcast, not an exchange)."""
-    li = Catalog(spark, sf_dir).lineitem.select("l_returnflag", "l_extendedprice")
+    li = catalog(spark, sf_dir).lineitem.select("l_returnflag", "l_extendedprice")
     g = li.groupBy("l_returnflag").agg(
         F.avg("l_extendedprice").alias("mu"), F.count(F.lit(1)).alias("n")
     )
@@ -7368,7 +7368,7 @@ def d27_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id, island) clustering — Catalyst recognizes the subset), so
     the whole gaps-and-islands cascade is a single-shuffle plan; per-user
     sort is the only n·log(n) term, bounded by the heaviest user."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     iv = ev.select(
         "user_id",
         "event_id",
@@ -7465,7 +7465,7 @@ def d14_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only n·log(n) term. A skewed type saturates one reducer — at
     real scale pre-bucket by (type, day) and stitch boundaries, the
     d14_window_running note."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     o = ev.select(
         "event_type", "value", "ts", F.lead("ts").over(w).alias("nxt")
@@ -7535,7 +7535,7 @@ def d14_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative); its |types|-row result BROADCASTS back onto the fact
     scan, so pass 2 is map-side clamp + one partial+final aggregate.
     Nothing data-sized shuffles on the 5-value type key."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     f = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.05)).alias("lo"),
         F.percentile("value", F.lit(0.95)).alias("hi"),
@@ -7580,7 +7580,7 @@ def _audience_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNCUT distinct (type, user) relation — factored out so the
     plan-pin test can check the two-column pruned scan that
     d27_audience_overlap hides behind its lineage cut."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     return ev.select(F.col("event_type").alias("t"), "user_id").distinct()
 
 
@@ -7722,7 +7722,7 @@ def _gini_rank_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     before its KB-sized readout."""
     import pandas as pd
 
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     cr = o.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 2).alias("rev")
     )
@@ -7806,7 +7806,7 @@ def d14_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans a single Window chain); corr over a frame is an O(1)-per-slide
     running aggregate JVM-side. Key cardinality = suppliers, uniform in
     TPC-H — no hot key; the suppkey<=50 predicate is pushed to the scan."""
-    li = Catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
+    li = catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
     w_pos = Window.partitionBy("l_suppkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )
@@ -7902,7 +7902,7 @@ def d27_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max-cardinality key, no skew: a user has at most #weeks rows); the
     weekly ledger is a #weeks-sized agg pair + full outer join. Events
     shuffle exactly once."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     uw = e.select(
         "user_id", F.date_trunc("week", "ts").cast("date").alias("wk")
     ).distinct()
@@ -7999,7 +7999,7 @@ def d14_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type window is the honest sequential dependency: a running max
     cannot split one key, but the key's row count is bounded by the
     calendar, not the corpus."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     daily = (
         e.groupBy(
             "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
@@ -8083,7 +8083,7 @@ def d09_topk_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the rank window partitions on nationkey over the AGGREGATED
     customer relation; the nation dim broadcasts. Revenue is rounded to
     cents before ranking so the cut is engine-independent."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     cr = (
         t.orders.join(
             F.broadcast(
@@ -8193,7 +8193,7 @@ def d14_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     daily = (
         e.groupBy("user_id", F.to_date("ts").alias("day"))
         .agg(F.min("value").alias("y"))
@@ -8315,7 +8315,7 @@ def d14_rolling_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain); four raw-moment frame averages are O(1)-per-slide running
     aggregates JVM-side. Key cardinality = suppliers (uniform in TPC-H),
     the suppkey<=50 predicate is pushed to the scan."""
-    li = Catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
+    li = catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
     w_pos = Window.partitionBy("l_suppkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )
@@ -8426,7 +8426,7 @@ def d27_circadian_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and engine-exact — then ONE hash agg on the
     |event_type|-sized key; atan2/sqrt run once per output row. No
     window, no join, no skew exposure beyond the agg's partial combine."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     sec = (
         F.hour("ts") * F.lit(3600)
         + F.minute("ts") * F.lit(60)
@@ -8534,7 +8534,7 @@ def d14_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series state is two scalars plus {SEGS} segment means, and the
     word assembly collects exactly {SEGS} rows per key. Alphabet lookup
     is a codegen'd CASE — no UDF, no collect."""
-    li = Catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
+    li = catalog(spark, sf_dir).lineitem.where(F.col("l_suppkey") <= 50)
     w_pos = Window.partitionBy("l_suppkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 
@@ -88,7 +88,7 @@ def d02_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle re-derives the identical row set, which no seeded
     ``df.sample`` could ever satisfy. Pure projection+filter: no shuffle,
     and the filter is a scan-level predicate at any scale."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return (
         hash_sample(d, "doc_id", 10)
         .select("doc_id", F.length("text").alias("n_chars"))
@@ -118,7 +118,7 @@ def d02_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     per split. Both engines derive the same permanent assignment; the
     per-split char means also agreeing proves the row membership matches,
     not just the counts."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return (
         assign_split(d, "doc_id")
         .groupBy("split")
@@ -166,7 +166,7 @@ def d02_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject top-k (per-partition heaps + driver merge of K
     rows), NOT a global sort — the same plan shape as d15_topk, so a 100 TB
     corpus never shuffles more than num_partitions * K score rows."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("double")
@@ -225,7 +225,7 @@ def d02_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared here in window form because it is oracle-comparable."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     ok = F.md5(F.concat(F.lit("cap"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("source").orderBy(ok, F.col("doc_id"))
     return (
@@ -258,7 +258,7 @@ def d31_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold; at scale the percentile is one partial+final agg pass, never
     a sort. (``approx_percentile`` is the drop-in at 100 TB; the exact form
     is declared because it is oracle-comparable.)"""
-    d = Catalog(spark, sf_dir).documents.select(
+    d = catalog(spark, sf_dir).documents.select(
         "doc_id", F.length("text").alias("n_chars")
     )
     thr = d.agg(
@@ -292,7 +292,7 @@ def d02_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so membership is permanent and oracle-reproducible (unlike seeded
     ``df.sampleBy``). Still a pure scan-level filter: no shuffle, no state,
     identical row set on any cluster size."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     rate = F.when(F.col("c_mktsegment") == "BUILDING", 10).otherwise(50)
     return (
         c.where(hash_bucket(F.col("c_custkey")) < rate)
@@ -328,7 +328,7 @@ def d02_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure projection + 3-element explode; the resolve step shuffles only
     (order, neg_id) pairs against the part table — at 100 TB this is the
     standard 'generate ids, hydrate via join' shape."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     max_part = t.part.agg(F.max("p_partkey").alias("m"))
     pos = t.orders.where(F.col("o_orderkey") < 500).select(
         "o_orderkey", "o_custkey"
@@ -385,7 +385,7 @@ def d02_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation (up-weight curated sources, down-weight crawl tail) as a pure
     scan-level filter — no shuffle for the sampling itself; the per-source
     summary is one partial+final agg over ~|sources| keys."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     rate = (
         F.when(F.col("source").isin(*MIX_FULL), 100)
         .when(F.col("source").isin(*MIX_MID), 40)
@@ -448,7 +448,7 @@ def d02_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-plans only the broadcast side at 100 TB."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     c = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     r = c.withColumn(
         "bp",
@@ -514,7 +514,7 @@ def d02_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar; output is #classes rows. For billion-row classes
     swap the full per-class sort for the two-pass quantile cut on the
     hash value (d10_equidepth's shape) at the same contract."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     rk = F.row_number().over(
         Window.partitionBy("event_type").orderBy(
             F.md5(F.col("event_id").cast("string")), "event_id"
@@ -586,7 +586,7 @@ def d02_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregate of 16 cells — no extra shuffle volume, the
     combiner collapses everything locally); at 100 TB this is ONE scan
     producing all replicates, versus 16 scans for naive resampling."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     rep = o.select(
         F.explode(F.sequence(F.lit(0), F.lit(BOOT_R - 1))).alias("r"),
         F.col("o_orderkey"),
@@ -662,7 +662,7 @@ def d02_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     count broadcasts. Fold i's TRAIN view is the complement filter
     ``fold != i`` over the same expression — no data movement to
     materialize any of the k splits."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     f = d.select(
         "doc_id", (hash_bucket(F.col("doc_id")) % KFOLD).alias("fold")
     )
@@ -741,7 +741,7 @@ def d02_negative_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a partial+final agg. Weights are derived from exact counts, not
     the sampling rate, so rounding in the keep count never biases the
     estimator."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     lab = ev.select(
         "event_id",
         "event_type",
@@ -836,7 +836,7 @@ def d02_ab_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a broadcast total. Note the chi-square here is symmetric, so
     both arm rows carry the same srm_chi2 — by construction, not by
     accident."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     u = (
         e.groupBy(
             "user_id",

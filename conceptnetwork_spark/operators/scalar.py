@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
 
@@ -46,7 +46,7 @@ from conceptnetwork_spark.registry import register
 )
 def d17_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String family: concat/substr/case/trim/pad/split/regex/like/length."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("up"),
@@ -87,7 +87,7 @@ def d18_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date family probed through a monthly roll-up: date_format/year/
     datediff/to_date/month/unix_timestamp/date_add/date_trunc (truncated
     times surfaced as formatted strings so types stay scalar)."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return (
         o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
         .agg(
@@ -138,7 +138,7 @@ def d19_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family: round/floor/ceil/abs/pow/sqrt/exp/ln/mod/sign.
     mod on a non-negative key == pmod; exp over the small discount column
     keeps magnitudes hashable at 4 decimals."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.where(F.col("l_orderkey") <= 1000)
         .select(
@@ -190,7 +190,7 @@ def d20_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array family over embeddings: size/element_at/sort_array/slice/
     array_contains/array_distinct/higher-order transform+filter+aggregate/
     array_min/array_max — all JVM-side, no UDFs."""
-    e = Catalog(spark, sf_dir).embeddings
+    e = catalog(spark, sf_dir).embeddings
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     head3 = F.transform(F.slice("embedding", 1, 3), lambda x: x.cast("double"))
     # + 0.0 on every possibly-negative rounded double mirrors the
@@ -243,7 +243,7 @@ def d21_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON + map families: get_json_object / from_json / json_tuple /
     to_json / create_map / map_keys over the events.props payload; scalar
     outputs only (map values extracted, keys joined to a string)."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     parsed = F.from_json("props", "k BIGINT")
     m = F.create_map(
         F.lit("et"), F.col("event_type"), F.lit("id"), F.col("event_id").cast("string")
@@ -278,7 +278,7 @@ def d20_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, pos): at 100 TB this shuffles only (label, pos, partial-sum)
     triples, never whole vectors, and needs no collect_list re-assembly.
     1-based pos matches SQL ordinality."""
-    e = Catalog(spark, sf_dir).embeddings
+    e = catalog(spark, sf_dir).embeddings
     return (
         e.select("label", F.posexplode("embedding").alias("pos0", "val"))
         .select("label", (F.col("pos0") + 1).alias("pos"), "val")
@@ -309,7 +309,7 @@ def d20_zip_with_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole computation stays in whole-stage codegen, zero Python crossings,
     zero shuffles before the presentation sort. Floats are widened to double
     inside the lambda so both engines run identical arithmetic."""
-    e = Catalog(spark, sf_dir).embeddings
+    e = catalog(spark, sf_dir).embeddings
     pairwise = F.zip_with(
         "embedding",
         F.reverse(F.col("embedding")),
@@ -338,7 +338,7 @@ def d21_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     open-schema contract). Variant is the engine's semi-structured scale
     path — binary-encoded, parsed once, shredded on access — vs re-parsing
     the JSON string per extraction in d21_json_funcs."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     v = F.parse_json("props")
     return ev.select(
         "event_id",
@@ -382,7 +382,7 @@ def d21_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression on an in-row structure — maps are how per-entity sparse
     feature bundles travel through a 100 TB pipeline without exploding
     row counts between stages."""
-    e = Catalog(spark, sf_dir).events.where(F.col("user_id") < 40)
+    e = catalog(spark, sf_dir).events.where(F.col("user_id") < 40)
     cnt = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     maps = cnt.groupBy("user_id").agg(
         F.map_from_entries(
@@ -435,7 +435,7 @@ def d17_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one partial+final hash aggregate; collation only changes
     the grouping key's equality/hash semantics, not the plan."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     w = F.split(F.col("p_name"), " ").getItem(0)
     mixed = F.when(F.col("p_partkey") % 2 == 1, F.upper(w)).otherwise(w)
     g = p.select(mixed.alias("word"))
@@ -481,7 +481,7 @@ def d21_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only (one row in, one row out), the same per-row
     codec cost profile as the TFRecord Example round-trip in
     sources/tfrecord.py; the bounded key filter is pushed to the scan."""
-    o = Catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 2000)
+    o = catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 2000)
     xml = o.select(
         F.to_xml(
             F.struct("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -534,7 +534,7 @@ def d20_sparse_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage-adjacent expression eval on the scan; the only exchange is
     the presentation sort. nnz certifies the sparsification mask itself,
     so a threshold drift can't hide inside a near-zero dot."""
-    e = Catalog(spark, sf_dir).embeddings
+    e = catalog(spark, sf_dir).embeddings
     seq = F.sequence(F.lit(1), F.lit(64))
 
     def sparse_map(vec):
@@ -609,7 +609,7 @@ def d17_soundex(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): distinct over a bounded word universe then
     map-only codegen string ops; as a blocking key this feeds an equi-join
     on sdx, never an all-pairs comparison."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     w = p.select(
         F.upper(F.split(F.col("p_name"), " ").getItem(0)).alias("word")
     ).distinct()
@@ -643,7 +643,7 @@ def d18_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule (Spark DATE -> pandas date vs DuckDB DATE -> Timestamp would
     hash-mismatch). Everything is map-only codegen on the scan; the key
     filter is pushed down."""
-    o = Catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 1200)
+    o = catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 1200)
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -687,7 +687,7 @@ def d19_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative-associative integer reductions — perfect partial
     aggregation, #types result rows, one scan, one tiny shuffle. All
     arithmetic is exact; no rounding anywhere."""
-    e = Catalog(spark, sf_dir).events
+    e = catalog(spark, sf_dir).events
     return (
         e.groupBy("event_type")
         .agg(
@@ -737,7 +737,7 @@ def d17_regexp_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): all four regexps are map-side scalar
     expressions fused into the scan project; the only shuffle is the
     final (lang, source) partial+final aggregate to ~tens of rows."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     # Spark's idx defaults to group 1; DuckDB's to 0 (whole match) — pin 0
     words = F.size(F.regexp_extract_all("text", F.lit("[A-Za-z]+"), 0))
     caps = F.size(F.regexp_extract_all("text", F.lit(r"\b[A-Z][a-z]+"), 0))
@@ -791,7 +791,7 @@ def d18_timezone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): pure map-side codegen'd expressions fused into
     the scan project; the o_orderkey filter pushes down to the scan."""
-    o = Catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 400)
+    o = catalog(spark, sf_dir).orders.where(F.col("o_orderkey") < 400)
     utc = F.lit("UTC")
 
     def local(zone: str):
@@ -855,7 +855,7 @@ def d20_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole vectors; norms, the #labels² pair join (bounded by the label
     alphabet, both sides ~64*#labels rows), and the cosine arithmetic
     run on centroid-sized relations."""
-    e = Catalog(spark, sf_dir).embeddings
+    e = catalog(spark, sf_dir).embeddings
     cent = (
         e.select("label", F.posexplode("embedding").alias("pos0", "v"))
         .select("label", (F.col("pos0") + 1).alias("pos"), "v")
@@ -940,7 +940,7 @@ def d10_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): one partial+final aggregate to (source, lang)
     counts; the entropy sum runs over that tiny grid under a per-source
     window. One scan, one shuffle."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     c = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("source")
     t = c.select(
@@ -1053,7 +1053,7 @@ def d17_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
             [_jaro_winkler_py(x, y) for x, y in zip(a, b)], dtype="float64"
         )
 
-    w = Catalog(spark, sf_dir).part.select(F.col("p_name").alias("word")).distinct()
+    w = catalog(spark, sf_dir).part.select(F.col("p_name").alias("word")).distinct()
     a = w.select(F.col("word").alias("word_a"))
     b = w.select(F.col("word").alias("word_b"))
     return (

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 
@@ -47,7 +47,7 @@ def d09_q4_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides are facts, so this is a shuffle semi-join on l_orderkey; the semi
     form means lineitem rows are never duplicated into the output — the
     shuffle carries at most one match bit per order."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     o, li = t.orders, t.lineitem
     return (
         o.join(
@@ -85,7 +85,7 @@ def d04_q10_returned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to the lineitem scan; nation broadcasts; orders⋈lineitem shuffles
     on orderkey; the final top-20 is TakeOrderedAndProject (no global sort
     materialization). Tie-break on c_custkey keeps the LIMIT deterministic."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.lineitem.where(F.col("l_returnflag") == "R")
         .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -125,7 +125,7 @@ def d05_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the join's hash partitioning on custkey (no second shuffle for
     the groupBy(c_custkey)); the second agg's key space is tiny, so the
     final shuffle moves only (c_count, partial) pairs."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     per_cust = (
         t.customer.join(
             t.orders, F.col("c_custkey") == F.col("o_custkey"), "left"
@@ -160,7 +160,7 @@ def d09_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (suppliers in bad standing) is bounded, so it broadcasts as the
     build side of a left-anti join over the fact; then a count-distinct per
     brand. s_suppkey is non-null by schema so anti-join and NOT IN agree."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     bad = t.supplier.where(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         t.lineitem.join(
@@ -193,7 +193,7 @@ def d07_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a residual filter, not a nested-loop condition. Catalyst also
     derives the implied single-side filters (brand IN (...), quantity
     BETWEEN 1 AND 30) and pushes them to the scans."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("l_quantity").between(1, 11))
         | ((F.col("p_brand") == "Brand#23") & F.col("l_quantity").between(10, 20))
@@ -233,7 +233,7 @@ def d06_q22_idle_custs(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS is a left-anti join on custkey against the orders key
     projection (one column shuffled, duplicate keys collapse map-side in
     the anti-join build)."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     avg_bal = (
         t.customer.where(F.col("c_acctbal") > 0)
         .agg(F.avg("c_acctbal").alias("avg_bal"))
@@ -278,7 +278,7 @@ def d13_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra-partition sort). Partitioned by o_orderpriority so no single
     reducer sees the whole table; (o_totalprice, o_orderkey) makes the
     intra-partition order total, so ntile boundaries are deterministic."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return o.select(
         "o_orderkey",
@@ -312,7 +312,7 @@ def d09_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile is a sort-based aggregate — fine at bounded group width; the
     documented scale path for heavy-tailed groups is approx_percentile
     (t-digest sketch, mergeable partials), probed non-oracle in pytest."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -359,7 +359,7 @@ def d06_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     window form produces, which is exactly the rewrite you want at 100 TB:
     orders shuffles once on o_custkey, customers prune to the segment
     first. Identical semantics pinned against DuckDB's native LATERAL."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.customer.createOrReplaceTempView("_lat_customer")
     t.orders.createOrReplaceTempView("_lat_orders")
     return spark.sql(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.lineage import lineage_cut
 from conceptnetwork_spark.registry import register
 
@@ -107,7 +107,7 @@ def _lang_id_sql(text_expr: str = "text") -> str:
 def d31_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character / word / regex-token counts per document — the token-count
     layer of the LLM dataprep pipeline, fully JVM-side."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return d.select(
         "doc_id",
         F.length("text").cast("long").alias("chars"),
@@ -149,7 +149,7 @@ def d31_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality signals (stopword ratio, punctuation density, token
     length, min-length gate) — the filter features of a pretraining-data
     quality classifier."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = _toks(F.col("text"))
     return d.select(
         "doc_id",
@@ -187,7 +187,7 @@ def d31_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword/han-script language-ID heuristic; profiles shared with the
     oracle SQL generator so both engines are identical by construction.
     Accuracy on real multilingual snippets is pytest-checked separately."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return d.select("doc_id", lang_id(F.col("text")).alias("lang_pred")).orderBy(
         "doc_id"
     )
@@ -214,7 +214,7 @@ def d31_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation definition, so medians hash-match). At 100 TB exact
     percentiles are a sort-based aggregate per group; the approx_percentile
     sketch is the cheaper alternative when 1% error is acceptable."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return (
         d.groupBy("lang")
         .agg(
@@ -262,7 +262,7 @@ def d31_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint). Filters are all map-side; the only shuffle is the dedup
     window on the 128-bit fingerprint — the same plan a 100 TB corpus
     filter runs, just wider."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     scored = d.select(
         "doc_id",
@@ -332,7 +332,7 @@ def d31_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable across runs."""
     from pyspark.ml.functions import vector_to_array
 
-    d = Catalog(spark, sf_dir).documents.select("doc_id", "text")
+    d = catalog(spark, sf_dir).documents.select("doc_id", "text")
     model = build_text_features_pipeline().fit(d)
     out = model.transform(d)
     arr = vector_to_array(F.col("tfidf"))
@@ -361,7 +361,7 @@ def d31_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d31_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized content fingerprint (lower, whitespace-collapse, md5) plus
     a 16-bit bucket prefix — the partition key for distributed dedup."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     fp = F.md5(norm.cast("binary"))
     return d.select(
@@ -403,7 +403,7 @@ def d31_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries unique pairs, not token instances), and the per-doc rollup
     reuses the same hash partitioning on the doc_id prefix. No all-pairs,
     no driver state, spillable at any corpus size."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     tf = (
         d.select("doc_id", F.explode(_toks(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
@@ -457,7 +457,7 @@ def d31_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emails first, so their digits are never double-counted as digit runs)
     and is identical in the oracle. Pure map-side regexp expressions —
     WholeStageCodegen, zero shuffle, embarrassingly parallel at 100 TB."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t1 = F.regexp_replace("text", EMAIL_PATTERN, "<EMAIL>")
     return d.select(
         "doc_id",
@@ -563,7 +563,7 @@ def bm25_scores(docs: DataFrame) -> DataFrame:
 def d31_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 score of every document against a fixed query-term set (see
     bm25_scores for the plan shape)."""
-    return bm25_scores(Catalog(spark, sf_dir).documents).orderBy("doc_id")
+    return bm25_scores(catalog(spark, sf_dir).documents).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -610,7 +610,7 @@ def d31_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     term key (skewed head words are exactly what AQE skew-join splits);
     the corpus total rides along as a broadcast scalar. Final rollup
     reuses the doc_id grouping. No collect, no all-pairs."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     tf = (
         d.select("doc_id", F.explode(_toks(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
@@ -683,7 +683,7 @@ def d31_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     combines; the top-k is a window over the per-language count table —
     already reduced to unique bigrams — with a full-key tiebreak so rank
     is total. Same plan at 100 TB with lang replaced by any profile key."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = _toks(F.col("text"))
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -744,7 +744,7 @@ def d31_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced unique-term table, never the token stream. At 100 TB the only
     shuffle carries unique (term, partial-count) pairs — the Zipf head
     compresses heavily under partial aggregation."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     tok = d.select("doc_id", F.explode(_toks(F.col("text"))).alias("term"))
     counts = tok.groupBy("term").agg(
         F.count(F.lit(1)).alias("term_freq"),
@@ -808,7 +808,7 @@ def d31_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     fans out rows with no shuffle. At 100 TB this is embarrassingly
     parallel and the output is written straight back out partitioned by
     whatever the sink needs."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = _toks(F.col("text"))
     n_chunks = F.ceil(
         F.greatest(F.size(toks) - CHUNK_SIZE, F.lit(0)) / float(CHUNK_STRIDE)
@@ -870,7 +870,7 @@ def d31_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-scale default."""
     from conceptnetwork_spark.operators.sampling import hash_bucket
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     tok = d.select("doc_id", F.explode(_toks(F.col("text"))).alias("term"))
     return (
         tok.groupBy(
@@ -937,7 +937,7 @@ def d31_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64(block) so the exchange carries 8-byte keys (the
     d29_decontaminate trick); collision risk 2^-64 per pair is below
     corpus noise."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )
@@ -1031,7 +1031,7 @@ def d31_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     more agg over the tf table's keys (not the raw tokens), then joins
     back BY WORD — at 100 TB the df side is vocabulary-sized, broadcast
     material. Top-k is a per-doc window over tf rows, not tokens."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = F.split(
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
     )
@@ -1115,7 +1115,7 @@ def d31_unicode_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import StringType
 
     clean = F.pandas_udf(_nfc_clean_series, StringType())
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     return (
         d.select("doc_id", clean(F.col("text")).alias("t"))
         .select(
@@ -1190,7 +1190,7 @@ def d31_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp counts), no shuffle, no Python. The signals this shares with
     d31_quality_score/d31_repetition compute once per scan at 100 TB by
     fusing the selects — Catalyst collapses adjacent projections."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     # NOT F.expr with an embedded '...' literal: Spark's SQL string parser
     # drops the backslash of unrecognized escapes ('\f' -> 'f', '\v' ->
     # 'v'), silently turning the whitespace class into one that excludes
@@ -1267,7 +1267,7 @@ def d31_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial+final agg to (n_classes x n_classes) rows and the recall
     window runs over that tiny table — evaluation cost is one scan
     regardless of corpus size."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     p = d.select(F.col("lang").alias("gold"), lang_id(F.col("text")).alias("pred"))
     cm = p.groupBy("gold", "pred").agg(F.count(F.lit(1)).alias("n"))
     wg = Window.partitionBy("gold")
@@ -1328,7 +1328,7 @@ def d31_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, embarrassingly parallel; the natural first stage of the
     one-fused-scan ingest plan (compose with d31_unicode_clean and the
     quality gates in a single select)."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     markup = F.concat(
         F.lit("<html><body><h1>doc</h1><p>"),
         F.replace(
@@ -1417,7 +1417,7 @@ def d31_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes a regex where DuckDB's string_split is literal."""
     from pyspark.sql import Window
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     segs = d.select(
         "doc_id", F.posexplode(F.split("text", r"\. ")).alias("pos0", "seg")
     )
@@ -1485,7 +1485,7 @@ def d31_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only codegen'd string work — the normalize step that
     precedes host-level dedup (d29) and per-domain token budgets (d34) in
     a crawl pipeline."""
-    d = Catalog(spark, sf_dir).documents.where(F.col("doc_id") < 2000)
+    d = catalog(spark, sf_dir).documents.where(F.col("doc_id") < 2000)
     url = F.concat(
         F.lit("https://"),
         F.col("source"),
@@ -1577,7 +1577,7 @@ def d31_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the doc scan out first: interpreted-HOF shingling on the single
     # local file partition would otherwise serialize the whole pipeline
     # (no-op at scale where the scan already has thousands of splits)
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
+    d = ensure_parallelism(catalog(spark, sf_dir).documents)
     grams = (
         d.select(
             "doc_id", F.explode(shingles(F.col("text"), CONT_N)).alias("g")
@@ -1700,7 +1700,7 @@ def d31_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     persistence policy as d29_minhash_near_dup)."""
     from pyspark import StorageLevel
 
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     t = d.select("doc_id", _toks(F.col("text")).alias("t"))
     n = F.size("t")
     bg = t.select(
@@ -1802,7 +1802,7 @@ def d31_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection — the same shape the Gopher/C4 rule stack runs at corpus
     scale; no UDF, no shuffle. TTR uses array_distinct on the in-row token
     array: per-document distinctness never leaves the task."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     words = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
     n_words = F.size(words).cast("long")
     n_types = F.size(F.array_distinct(words)).cast("long")
@@ -1899,7 +1899,7 @@ def d31_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one tokenize+count aggregate (map-side combined), a
     top-100 TakeOrdered, and a 100-row fit — the vocabulary table is the
     only shuffle at any corpus size."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     words = d.select(
         F.explode(
             F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
@@ -1993,7 +1993,7 @@ def d31_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     templating, counting, and the three chained replaces are all
     codegen'd map-side string expressions — one pass, no Python, no
     shuffle beyond the broadcast join probe."""
-    c = Catalog(spark, sf_dir)
+    c = catalog(spark, sf_dir)
     t = (
         c.orders.where(F.col("o_orderkey") < 2000)
         .join(
@@ -2085,7 +2085,7 @@ def d34_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort) and joins BROADCAST back onto the token stream; per-source
     stats are one more partial+final agg. Two passes over tokens, zero
     over text."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     tok = d.select(
         "source",
         F.explode(
@@ -2197,7 +2197,7 @@ def d31_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DECIMAL tercile sums so the aggregate is summation-order-free.
     Single-token docs have no bigrams and drop out in both engines."""
     lp = d31_bigram_logprob(spark, sf_dir)
-    d = Catalog(spark, sf_dir).documents.select("doc_id", "lang")
+    d = catalog(spark, sf_dir).documents.select("doc_id", "lang")
     scored = lp.select("doc_id", (-F.col("avg_logprob")).alias("ce")).join(
         d, "doc_id"
     )
@@ -2297,7 +2297,7 @@ def d31_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     attaches two unigram counts to the AGGREGATED bigram relation —
     vocabulary-sized, not corpus-sized — and the top-k is a TakeOrdered
     over scored vocabulary pairs. Corpus text shuffles zero times."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = _toks(F.col("text"))
     base = d.select("doc_id", toks.alias("toks"))
     tok = base.select(F.explode("toks").alias("word"))
@@ -2441,7 +2441,7 @@ def d31_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass is a per-bucket count, so the cumulative windows and the OLS
     see <= HEAPS_CKPTS rows per source. Two corpus-sized hash
     aggregates, zero corpus-sized windows."""
-    d = Catalog(spark, sf_dir).documents
+    d = catalog(spark, sf_dir).documents
     toks = _toks(F.col("text"))
     base = d.select("doc_id", "source", toks.alias("toks"))
     mxd = base.agg(F.max("doc_id").alias("mxd"))

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 
@@ -48,7 +48,7 @@ def d22_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same semantics as d02_case_parse but through an Arrow-batched pandas
     UDF — pins the UDF data path (types, nulls, batching) to the relational
     answer."""
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return c.select(
         "c_custkey", _first_char_class(F.col("c_name")).alias("g")
     ).orderBy("c_custkey")
@@ -82,7 +82,7 @@ def d23_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     *scalable* form of this computation is the broadcast-mean join
     (`mean_center_scalable`), which keeps the row stream fully parallel.
     """
-    li = Catalog(spark, sf_dir).lineitem.select(
+    li = catalog(spark, sf_dir).lineitem.select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
     )
     out = li.groupBy("l_returnflag").applyInPandas(
@@ -123,7 +123,7 @@ def d23_mean_center(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream stays fully parallel (no 3-task concentration, no Python
     workers); ``d23_grouped_map`` remains the applyInPandas API-surface
     check."""
-    li = Catalog(spark, sf_dir).lineitem.select(
+    li = catalog(spark, sf_dir).lineitem.select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
     )
     out = mean_center_scalable(li, "l_returnflag", "l_quantity")
@@ -149,7 +149,7 @@ def d23_mean_center(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d24_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One->many via explode(split(...)) — JVM-native generator, the fast
     path for the reference's FlatMap parse shape (P1)."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     return (
         p.select("p_partkey", F.explode(F.split("p_name", " ")).alias("word"))
         .orderBy("p_partkey", "word")
@@ -191,7 +191,7 @@ def d22_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     def first_char_class(name):
         return 0 if (name or "")[:1].lower() == "c" else 1
 
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return c.select(
         "c_custkey", first_char_class(F.col("c_name")).alias("g")
     ).orderBy("c_custkey")
@@ -220,7 +220,7 @@ def d23_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow ships each group's column once; the group count here is tiny (~4)
     so the whole-group-in-memory contract holds at any SF. Rounding is
     JVM-side after the UDF (HALF_UP, matching the oracle)."""
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(F.round(_mean_agg("l_quantity"), 4).alias("avg_qty"))
@@ -290,7 +290,7 @@ def d23_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB."""
     from conceptnetwork_spark.operators.sampling import hash_bucket
 
-    ev = Catalog(spark, sf_dir).events.where(
+    ev = catalog(spark, sf_dir).events.where(
         hash_bucket(F.col("user_id")) < 20
     )
     views = (
@@ -357,7 +357,7 @@ def d24_mapinpandas_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         out["word"] = out["p_name"].str.split(" ")
         yield out.explode("word")[["p_partkey", "word"]]
 
-    p = Catalog(spark, sf_dir).part.select("p_partkey", "p_name")
+    p = catalog(spark, sf_dir).part.select("p_partkey", "p_name")
     return flatmap_parse(p, "p_partkey long, word string", parse_iter).orderBy(
         "p_partkey", "word"
     )
@@ -382,7 +382,7 @@ def d24_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer-generate semantics a plain explode (inner-join-like) loses. The
     array filter is a JVM higher-order function, so the generate input never
     leaves codegen."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     words = F.filter(F.split("p_name", " "), lambda w: F.length(w) > 5)
     return (
         p.select("p_partkey", F.explode_outer(words).alias("word"))
@@ -435,7 +435,7 @@ def d24_mapinarrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["l_orderkey", "l_linenumber", "charge"],
             )
 
-    li = Catalog(spark, sf_dir).lineitem
+    li = catalog(spark, sf_dir).lineitem
     src = li.where(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_tax"
     )
@@ -495,7 +495,7 @@ def d24_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to the scan BEFORE the UDTF (asserted in the plan test)."""
     WordPos = _make_word_pos_udtf()
     p = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .part.where(F.col("p_partkey") < 400)
         .select("p_partkey", "p_name")
     )
@@ -543,7 +543,7 @@ def d22_iter_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, JVM-side filter pushed below the crossing); the iterator
     only changes WHERE init cost lands — once per worker (×32 here,
     ×executors at scale), not once per batch (×thousands)."""
-    o = Catalog(spark, sf_dir).orders
+    o = catalog(spark, sf_dir).orders
     return (
         o.where(F.col("o_orderkey") < 20000)
         .select(
@@ -593,7 +593,7 @@ def d23_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    li = Catalog(spark, sf_dir).lineitem.select(
+    li = catalog(spark, sf_dir).lineitem.select(
         "l_returnflag", "l_extendedprice"
     )
     return (
@@ -632,7 +632,7 @@ def d24_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-side Generate, no shuffle except the output sort;
     the position column is computed during generation, not joined back."""
-    p = Catalog(spark, sf_dir).part.where(F.col("p_partkey") <= 200)
+    p = catalog(spark, sf_dir).part.where(F.col("p_partkey") <= 200)
     return (
         p.select(
             "p_partkey",
@@ -668,7 +668,7 @@ def d22_arrow_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     def first_char_class(name):
         return 0 if (name or "")[:1].lower() == "c" else 1
 
-    c = Catalog(spark, sf_dir).customer
+    c = catalog(spark, sf_dir).customer
     return c.select(
         "c_custkey", first_char_class(F.col("c_name")).alias("g")
     ).orderBy("c_custkey")
@@ -699,7 +699,7 @@ def d24_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-side Generate node inside codegen, no shuffle —
     same Expand-style cost model as d12_unpivot (output = n_structs x
     input rows; build the array AFTER filtering/projection)."""
-    p = Catalog(spark, sf_dir).part
+    p = catalog(spark, sf_dir).part
     arr = F.array(
         F.struct(
             F.lit("size").alias("metric"),
@@ -776,7 +776,7 @@ def d24_arrow_native_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossing."""
     PartStats = _make_part_stats_arrow_udtf()
     p = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .part.where(F.col("p_partkey") < 600)
         .select("p_partkey", "p_name", "p_retailprice")
     )
@@ -842,7 +842,7 @@ def d24_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the UDTF (same contract as the other ladder rungs)."""
     SplitFields = _make_split_fields_udtf()
     p = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .part.where(F.col("p_partkey") < 400)
         .select("p_partkey", "p_type")
     )
@@ -922,7 +922,7 @@ def d24_udtf_table_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     second shuffle. Rows stream through eval() without buffering the
     group (contrast applyInPandas, which materializes each group as one
     pandas frame), so a single hot user cannot OOM an executor."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     ev.where(F.col("user_id") < 40).select(
         "user_id", F.unix_micros("ts").alias("tsu"), "event_id"
     ).createOrReplaceTempView("cns_gap_events")
@@ -978,7 +978,7 @@ def d22_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): map-side expression + per-row bounded generate
     (<=3 chunk rows per lineitem); the key filter pushes to the scan; no
     shuffle before the final order."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     t.lineitem.createOrReplaceTempView("cns_sqludf_lineitem")
     spark.sql(
         """

@@ -83,7 +83,7 @@ _LOADED = False
 # the 22 r4-era greens — exactly the queue the r12 rotation comment
 # planned, d27_retention first — then r5-era greens in name order to
 # fill 50. All 50 slots carry oracles; rehearsed in driver order by
-# tools/window_rehearsal.py AFTER the final code edit of the round
+# `tools/parity.py --window` AFTER the final code edit of the round
 # (the r8 lesson: any post-rehearsal edit to a registered query re-runs
 # that query's oracle + plan tests before commit).
 CERT_FIRST: tuple[str, ...] = (

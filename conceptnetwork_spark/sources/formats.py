@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.sources.staging import oracle_sf_dir, stage_path, staged
 
@@ -229,7 +230,7 @@ def stage_orders_partitioned(spark: SparkSession, sf_dir: str) -> str:
 
     def build(tmp: str) -> None:
         (
-            spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+            catalog(spark, sf_dir).orders
             .repartition("o_orderpriority")
             .write.mode("overwrite")
             .partitionBy("o_orderpriority")
@@ -502,8 +503,8 @@ def stage_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")
     for name, src, key in (
-        (t_orders, "orders.parquet", "o_custkey"),
-        (t_cust, "customer.parquet", "c_custkey"),
+        (t_orders, "orders", "o_custkey"),
+        (t_cust, "customer", "c_custkey"),
     ):
         if spark.catalog.tableExists(name):
             continue
@@ -514,7 +515,7 @@ def stage_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         if os.path.exists(loc):
             shutil.rmtree(loc)
         (
-            spark.read.parquet(os.path.join(sf_dir, src))
+            catalog(spark, sf_dir).table(src)
             .write.bucketBy(8, key)
             .sortBy(key)
             .mode("overwrite")
@@ -591,7 +592,7 @@ def d01_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = stage_orders_partitioned(spark, sf_dir)
     fact = spark.read.parquet(path)
     dim = (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        catalog(spark, sf_dir).orders
         .select("o_orderpriority")
         .distinct()
         .where(F.substring("o_orderpriority", 1, 1).isin("1", "2"))

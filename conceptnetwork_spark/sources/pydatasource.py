@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 
 SYNTH_N = 20_000
@@ -313,7 +314,7 @@ def d01_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — no driver-side collect of the result
     outdir = scratch_dir(spark, "jsonlsink")
     o = (
-        spark.read.parquet(_os.path.join(sf_dir, "orders.parquet"))
+        catalog(spark, sf_dir).orders
         .where(F.col("o_orderkey") < 3000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .repartition(4)

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from conceptnetwork_spark.catalog import Catalog, fix_nanos
+from conceptnetwork_spark.catalog import catalog, fix_nanos
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.sources.staging import (
     is_stage,
@@ -149,18 +149,6 @@ def file_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _events_stream(spark: SparkSession, sf_dir: str):
-    """readStream over the events parquet, nanos-ts converted in-plan
-    (same fix_nanos as the batch catalog so both sides agree)."""
-    ev_path = Catalog(spark, sf_dir).path("events")
-    schema = spark.read.parquet(ev_path).schema
-    # glob suffix: the streaming file source requires a directory/glob, and
-    # the testdata lays each table out as a single parquet file
-    return fix_nanos(
-        spark.readStream.schema(schema).parquet(ev_path + "*"), "events"
-    )
-
-
 # --------------------------------------------------------------------------
 # D26 — tumbling window aggregation (batch form of the streaming agg)
 # --------------------------------------------------------------------------
@@ -180,7 +168,7 @@ def d26_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling window per event_type via F.window — the exact
     expression the streaming job uses; epoch-aligned so it equals
     date_trunc('hour')."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -219,7 +207,7 @@ def d26_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d26_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h/30m window: every event lands in exactly two windows. The
     oracle materializes the two epoch-aligned window starts per event."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
@@ -270,7 +258,7 @@ def d27_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window expression (identical semantics in streaming); oracle is
     the classic gaps-and-islands SQL. Session boundary: a gap >= 30 min
     starts a new session (Spark merges events strictly inside start+gap)."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
@@ -306,7 +294,7 @@ def d27_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d28_keyed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-arrival dedup per event_id (min ts tiebreak) — the batch
     semantics of streaming dropDuplicates within a watermark."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_id").orderBy("ts", "user_id")
@@ -340,7 +328,7 @@ def d25_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch-invariant, so the result hash-matches the batch oracle —
     this entry proves readStream/writeStream, not just the window exprs."""
     stream = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -360,7 +348,7 @@ def run_windowed_stream(
     by the batch-equivalence tests: with AvailableNow over a static file the
     watermark never drops rows, so the result equals d26_tumbling_window."""
     agg = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -418,7 +406,7 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — this pins that the session_window expression is genuinely
     streaming-capable (merging session state across micro-batches)."""
     agg = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
@@ -439,7 +427,7 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming stateful dedup on event_id within a watermark (D28
     streaming form): dropDuplicatesWithinWatermark + append to memory."""
     dedup = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id")
@@ -467,7 +455,7 @@ def d25_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit path (temp-file + rename) that the memory sink bypasses."""
     out_dir = scratch_dir(spark, "sink")
     agg = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -510,7 +498,7 @@ def d25_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state bounded, so the batch and streaming forms agree exactly
     on static input. At scale the join shuffles both streams on user_id
     once; state per key is capped by the 1-hour event-time bound."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     views = ev.where(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         F.col("user_id"),
@@ -545,7 +533,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result equals ``d25_stream_stream_join``'s batch form. The
     interval bound is MANDATORY in streaming (unbounded-state joins are
     rejected for append output) — this pins that contract."""
-    src = _events_stream(spark, sf_dir)
+    src = catalog(spark, sf_dir).stream("events")
     views = (
         src.where(F.col("event_type") == "view")
         .select(
@@ -556,7 +544,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("v_ts", "2 hours")
     )
     purchases = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -598,7 +586,7 @@ def d25_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension, rolled up per nation × type. In streaming, the static side
     is broadcast to every micro-batch (no state, re-resolved per batch);
     semantics equal the batch join, which is what the oracle checks."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     return (
         t.events.join(t.customer, F.col("user_id") == F.col("c_custkey"))
         .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -615,9 +603,9 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real streaming form of d25_stream_static_join: readStream events
     joined to the STATIC customer/nation DataFrames (broadcast into each
     micro-batch), complete-mode aggregate to a memory sink."""
-    t = Catalog(spark, sf_dir)
+    t = catalog(spark, sf_dir)
     enriched = (
-        _events_stream(spark, sf_dir)
+        catalog(spark, sf_dir).stream("events")
         .join(t.customer, F.col("user_id") == F.col("c_custkey"))
         .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", "event_type")
@@ -662,7 +650,7 @@ def d27_batch_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate form costs."""
     from pyspark.sql import Window
 
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     new_session = (
@@ -724,7 +712,7 @@ def d27_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges reuse one co-partitioning, the per-user state is 3
     timestamps, and conditional MIN aggregates do partial map-side
     combine — no window over the full log, no per-user event collection."""
-    ev = Catalog(spark, sf_dir).events.select("user_id", "event_type", "ts")
+    ev = catalog(spark, sf_dir).events.select("user_id", "event_type", "ts")
     s1 = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("v_ts")
     )
@@ -805,7 +793,7 @@ def d25_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced by table snapshots."""
 
     def build(tmp: str) -> None:
-        ev = Catalog(spark, sf_dir).events
+        ev = catalog(spark, sf_dir).events
         ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(tmp)
 
     src = file_stream(spark, staged("evstage", build, sf_dir))
@@ -881,7 +869,7 @@ def d27_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix rollup. The distinct collapses before the rollup so the final
     agg sees one row per (user, day) — the standard dedup-then-count
     retention plan."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     firsts = ev.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("cohort_day")
     )
@@ -1395,7 +1383,7 @@ def d27_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = (
-        Catalog(spark, sf_dir)
+        catalog(spark, sf_dir)
         .events.where(F.col("event_type").isin("view", "purchase"))
         .select("event_id", "user_id", "ts", "event_type")
     )
@@ -1710,7 +1698,7 @@ def d27_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pass per key (SessionWindowStateStore in streaming, sort +
     merge in batch). Same cost as fixed-gap sessionization — the gap
     expression is map-side."""
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     gap = F.when(F.col("event_type") == "purchase", F.lit("2 hours")).otherwise(
         F.lit("30 minutes")
     )
@@ -1967,7 +1955,7 @@ def _stage_time_chunks(spark: SparkSession, sf_dir: str, n: int) -> str:
     from pyspark.sql import Window
 
     def build(tmp: str) -> None:
-        ev = Catalog(spark, sf_dir).events
+        ev = catalog(spark, sf_dir).events
         total = ev.count()
         # FIXTURE-ONLY: this unpartitioned global-sort window funnels all rows
         # through one task. Acceptable for staging sf-sized replay fixtures on
@@ -2157,7 +2145,7 @@ def d26_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = spark.table(q.name).select(
         F.to_date(F.col("w.start")).alias("day"), "event_type", "cd"
     )
-    ev = Catalog(spark, sf_dir).events
+    ev = catalog(spark, sf_dir).events
     base = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("cb")
     )

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from conceptnetwork_spark.catalog import Catalog
+from conceptnetwork_spark.catalog import catalog
 from conceptnetwork_spark.registry import register
 from conceptnetwork_spark.sources.staging import scratch_dir, staged
 from conceptnetwork_spark.streaming.ops import (
@@ -47,7 +47,7 @@ def stage_event_files(
     """n-file copy of events for maxFilesPerTrigger replay."""
 
     def build(tmp: str) -> None:
-        Catalog(spark, sf_dir).events.repartition(n_files).write.mode(
+        catalog(spark, sf_dir).events.repartition(n_files).write.mode(
             "overwrite"
         ).parquet(tmp)
 

@@ -54,8 +54,11 @@ def _norm_cell(v):
 
 
 def assert_oracle_match(spark_df, ddb, sql: str, name: str = "?"):
-    sdf = spark_df.toPandas()
-    odf = ddb.execute(sql).fetchdf()
+    assert_frames_match(spark_df.toPandas(), ddb.execute(sql).fetchdf(), name)
+
+
+def assert_frames_match(sdf, odf, name: str = "?"):
+    """The comparison of ``assert_oracle_match`` on collected frames."""
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} != oracle {len(odf)}"
     assert len(sdf.columns) == len(odf.columns), (
         f"{name}: width {list(sdf.columns)} != {list(odf.columns)}"

@@ -108,8 +108,8 @@ def test_signed_rounded_outputs_keep_negzero_normalization():
     """Regression guard for the r12 review sweep: every oracle whose
     rounded double output can be tiny-negative (the cosine/inner-product/
     corr family) must keep the '+ 0.0' normalization in its SQL — the
-    empirical negzero_sweep only flags values the fixture data happens to
-    produce, so the class guard lives here."""
+    empirical -0.0 check of tools/parity.py only flags values the fixture
+    data happens to produce, so the class guard lives here."""
     from conceptnetwork_spark import registry
 
     oracles = registry.oracles()

@@ -37,6 +37,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from conceptnetwork_spark import registry
+    from conceptnetwork_spark.catalog import catalog
     from conceptnetwork_spark.operators import dedup
     from conceptnetwork_spark.session import get_spark
 
@@ -65,7 +66,7 @@ def main() -> None:
     # MinHash-LSH pair recall vs exact shingle-Jaccard >= 0.5 (the same
     # inverted-index ground-truth construction as tests/test_dedup.py —
     # candidate-confined, never all-pairs)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = catalog(spark, sf_dir).documents
     sets_df = docs.select(
         "doc_id", F.array_distinct(dedup.shingles(F.col("text"))).alias("sh")
     ).where(F.size("sh") > 0)

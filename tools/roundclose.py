@@ -19,7 +19,7 @@ this tool writes); any CODE edit after it means roundclose must re-run.
 
 Artifact shape:
     {"round": 6, "window": {"green": 50, "total": 50, "ok": true},
-     "parity": {"sf0.001": {...}, "sf0.1": {...}},
+     "parity": {"sf0.001": {...}, "sf0.01": {...}, "sf0.1": {...}},
      "plan_drift": {"changed": 0, "added": 0, "removed": 0, "ok": true},
      "suite": {"exit": 0, "ok": true}, "ok": true}
 """
@@ -107,7 +107,7 @@ def main() -> None:
 
     # 1. driver-window rehearsal: the exact first-50 registry slice, driver
     # order, one process (catches cross-query interference)
-    code, out = _run([py, "tools/window_rehearsal.py"])
+    code, out = _run([py, "tools/parity.py", "--window"])
     m = re.search(r"(\d+)/(\d+) green", out)
     report["window"] = {
         "green": int(m.group(1)) if m else None,
@@ -170,16 +170,18 @@ def main() -> None:
     else:
         print("stale certs: none outside the current window")
 
-    # 2. cross-SF parity at the scale factors pytest does NOT use
+    # 2. oracle parity and the -0.0 check at every scale factor
     report["parity"] = {}
     if not skip_parity:
         for sf_dir in PARITY_SFS:
-            code, out = _run([py, "tools/crosssf_parity.py", sf_dir])
+            code, out = _run([py, "tools/parity.py", sf_dir])
             m = re.search(r"(\d+)/(\d+) oracle queries match", out)
+            z = re.search(r"negzero sweep: (\d+) flagged", out)
             key = os.path.basename(sf_dir)
             report["parity"][key] = {
                 "match": int(m.group(1)) if m else None,
                 "total": int(m.group(2)) if m else None,
+                "negzero_flagged": int(z.group(1)) if z else None,
                 "ok": code == 0,
             }
             ok &= code == 0

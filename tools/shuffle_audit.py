@@ -64,6 +64,7 @@ def main() -> None:
     from stages import LostStageError, StageReader, timed_run
 
     from conceptnetwork_spark import registry
+    from conceptnetwork_spark.catalog import catalog
     from conceptnetwork_spark.session import get_spark
 
     spark = get_spark(app_name="shuffle-audit")
@@ -75,7 +76,7 @@ def main() -> None:
     # current certification window — and cross-round diffs misattribute it
     # as a regression of the rotated-in queries
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
+        catalog(spark, sf_dir).table(t).count()
 
     reader = StageReader(spark)
     timings: dict[str, float] = {}

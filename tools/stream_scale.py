@@ -78,14 +78,12 @@ def stage_ranged_events(
     never lands anywhere else first."""
     from pyspark.sql import functions as F
 
-    from conceptnetwork_spark.catalog import Catalog, fix_nanos
+    from conceptnetwork_spark.catalog import catalog
     from conceptnetwork_spark.sources.staging import order_by_mtime, staged
     from scale_stress import KEY_OFF
 
     def build(tmp: str) -> None:
-        ev = fix_nanos(
-            spark.read.parquet(Catalog(spark, src_sf).path("events")), "events"
-        )
+        ev = catalog(spark, src_sf).events
         blown = (
             ev.select("ts", "user_id", "value")
             .withColumn(
